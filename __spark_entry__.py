@@ -471,7 +471,7 @@ def _q_dtr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9 mention confidence (AnnotationConfidencer analog) — pure
     arithmetic over component-token lengths, floor-scaled for compare."""
-    m = _annotations(spark, sf_dir)["mentions_f"]  # ids unused: skip W1 window
+    m = _annotations(spark, sf_dir)["mentions_f"]
     return m.select(
         "conv_id", "turn_idx",
         F.col("begin").cast("int").alias("begin"),
@@ -510,7 +510,7 @@ def _q_anafora(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_cross_turn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-turn event-event temporal edges: per-conversation lead() window
     over turn-level entity sets, before/after/overlap by anchor comparison."""
-    mentions = _annotations(spark, sf_dir)["mentions_f"]  # ids unused
+    mentions = _annotations(spark, sf_dir)["mentions_f"]
     return cross_turn_event_edges(mentions, _CFG).select(
         "src", "dst", "pred", "conv_id", "turn_idx",
         F.col("weight").cast("double").alias("weight"),
@@ -679,13 +679,13 @@ def _q_conmod(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ACTUAL filter itself is exercised inside kg_anafora and pytest)."""
     import dataclasses
 
-    from kgpipe.extract import filter_mentions
+    from kgpipe.extract import annotate_union, filter_union, kind_view
 
     t = derive_transcripts(spark, sf_dir)
     cfg = dataclasses.replace(_CFG, use_conmod=True)
-    ann = build_annotations(t, _GAZ, _BLACKLIST, cfg)
+    raw = annotate_union(t, _GAZ, _BLACKLIST, cfg, timexes=False)
     # F1+F2 only (default cfg): keep every label visible for the oracle
-    m = filter_mentions(ann["mentions_raw"], _BLACKLIST, _CFG)
+    m = kind_view(filter_union(raw, _BLACKLIST, _CFG), 0)
     return m.select(
         "conv_id", "turn_idx",
         F.col("begin").cast("int").alias("begin"),
@@ -696,7 +696,7 @@ def _q_conmod(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_timeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 per-conversation timeline rollup + A4 distinct+string-agg: one row
     per (conv_id, cui) with counts, first/last anchor, sorted terms."""
-    m = _annotations(spark, sf_dir)["mentions_f"]  # ids unused
+    m = _annotations(spark, sf_dir)["mentions_f"]
     return entity_timeline_summary(m)
 
 
@@ -707,7 +707,7 @@ def _q_canon_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a recursive CTE, so this iterative op still gets an exact check."""
     from kgpipe.canon import canonical_nodes
 
-    mentions = _annotations(spark, sf_dir)["mentions_f"]  # ids unused
+    mentions = _annotations(spark, sf_dir)["mentions_f"]
     return canonical_nodes(mentions).select(
         "node_id", "kind", "canonical_cui",
         F.array_join("surfaces", "|").alias("surfaces"),
@@ -717,7 +717,7 @@ def _q_canon_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_node_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics over the materialized edge list: per-node in/out/total
     degree + distinct neighbors (map-side-combined single aggregate)."""
-    mentions = _annotations(spark, sf_dir)["mentions_f"]  # ids unused
+    mentions = _annotations(spark, sf_dir)["mentions_f"]
     return node_degree(cross_turn_event_edges(mentions, _CFG))
 
 
@@ -733,7 +733,7 @@ def _q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_top_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k entities by mention count (agg shuffles on cui; rank
     window runs on vocabulary-bounded aggregated rows only)."""
-    mentions = _annotations(spark, sf_dir)["mentions_f"]  # ids unused
+    mentions = _annotations(spark, sf_dir)["mentions_f"]
     return top_entities(mentions, k=10)
 
 

@@ -2,9 +2,10 @@
 stage (structured path), the fused zero-shuffle path, and ``kgpipe.run``.
 
 ``annotate_turn`` is a pure function of (text, anchor, gazetteer, blacklist,
-config) -> {tokens, mentions, timexes} dict rows matching
-``schemas.ANNOTATED_SCHEMA``'s array elements. It reproduces, per turn
-(turn ≙ reference note / CAS):
+config) -> (anchor, tokens, mentions, timexes); the mention and timex dicts
+carry the payload columns of ``schemas.ANNOTATION_UNION_SCHEMA``
+(``extract.annotate_union`` emits them as flat union rows). It reproduces,
+per turn (turn ≙ reference note / CAS):
 
 * tokenization + last-wins begin dedup (timeline_delegator.py:82-119)
 * gazetteer all-spans lookup (DictionarySubPipe / DefaultTermConsumer)
@@ -115,15 +116,16 @@ def annotate_turn(
     with_timexes: bool = True,
     with_token_rows: bool = True,
 ):
-    """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes)
-    where the three lists hold dicts shaped like schemas.TOKEN_STRUCT /
-    MENTION_STRUCT / TIMEX_STRUCT.
+    """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes):
+    token dicts (tok_idx, begin, end, text, is_newline), mention dicts
+    (mention_idx + the union schema's mention columns) and timex dicts
+    (timex_idx + begin, end, tok_begin, tok_end, surface, kind, normed).
 
     ``with_timexes=False`` skips timex detection+normalization entirely
     (returns an empty timex list) — the fast path for consumers that only
     read mentions (cross-turn edges, rollups, canonicalization; detection
     is ~35% of per-turn CPU). Mention rows are identical either way — only
-    the separate W1 id-assignment stage mixes timexes into mention ids.
+    the downstream W1 id window mixes timexes into mention ids.
 
     Mentions are RAW (pre TUI/blacklist/conmod filtering): the structured
     Spark path applies F1/F2/F4 as visible DataFrame operators; the fused

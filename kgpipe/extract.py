@@ -1,22 +1,24 @@
 """Spark extraction stages (structured path).
 
-``annotate_transcripts`` is the single heavy scan: one ``mapInPandas`` pass
-over the transcripts table producing per-turn annotation arrays — a NARROW
-transformation (zero shuffle), so it scales linearly with input splits; the
-gazetteer/blacklist ride along as a broadcast variable (S2/S3).
+``annotate_union`` is the single heavy scan: one ``mapInPandas`` pass over
+the transcripts table — a NARROW transformation (zero shuffle), so it
+scales linearly with input splits; the gazetteer/blacklist ride along as a
+broadcast variable (S2/S3). It emits one flat frame in the merged W1 union
+shape (ANNOTATION_UNION_SCHEMA): mention rows (kind_rank 0), timex rows
+(kind_rank 1) and one token-stream row per turn (kind_rank 2).
 
-Everything after it is visible DataFrame algebra, all keyed on
+Everything after it is visible DataFrame algebra over that frame, keyed on
 (conv_id, turn_idx) so Catalyst plans a single exchange that the W1 window,
-the J1 band join and the instance-build join all reuse:
+the J1 band join and the token join all reuse:
 
-* ``mentions_table`` / ``timexes_table`` / ``tokens_table`` — explode views
-* ``filter_mentions`` — F1 TUI predicate, F2 blacklist broadcast LEFT ANTI
+* ``filter_union`` — F1 TUI predicate, F2 blacklist broadcast LEFT ANTI
   join (EventFilter.java exact-equality semantics), optional F4 conmod gate
-* ``filter_timexes`` — F5 ``normed IS NOT NULL``
-* ``assign_annotation_ids`` — W1: unionByName + row_number() over
-  (conv_id, turn_idx) ordered by (begin, kind, in-kind index), formatted
+  on mention rows; F5 ``normed IS NOT NULL`` on timex rows
+* ``assign_union_ids`` — W1: row_number() over (conv_id, turn_idx) ordered
+  by (begin, kind_rank, in-kind index), formatted
   ``{i}@e@{conv}_{turn}@system`` (timeline_delegator.py:469-477; ties follow
   the reference's stable chain(mentions, timexes) order)
+* ``kind_view`` — the mention or timex rows as their per-kind relation
 """
 
 from __future__ import annotations
@@ -29,112 +31,15 @@ from pyspark.sql import functions as F
 
 from .annotate import annotate_turn
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import (
-    ANNOTATED_SCHEMA,
-    ANNOTATION_UNION_SCHEMA,
-    MENTION_ROWS_SCHEMA,
-)
+from .schemas import ANNOTATION_UNION_SCHEMA
 from .score import tokens_for_mode
 
 __all__ = [
-    "annotate_transcripts",
-    "annotate_mention_rows",
     "annotate_union",
-    "tokens_table",
-    "mentions_table",
-    "timexes_table",
-    "filter_mentions",
-    "filter_timexes",
     "filter_union",
-    "assign_annotation_ids",
     "assign_union_ids",
+    "kind_view",
 ]
-
-
-def annotate_transcripts(
-    transcripts: DataFrame,
-    gazetteer,
-    blacklist,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    with_timexes: bool = True,
-) -> DataFrame:
-    """transcripts -> annotated turns (ANNOTATED_SCHEMA). Narrow map, Arrow
-    batches; dictionary artifacts broadcast once per executor.
-    ``with_timexes=False`` is the mentions-only fast path (see
-    annotate_turn)."""
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz, _bl, c = bc.value
-        for pdf in batches:
-            out = {
-                "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-                "ts": [], "anchor_date": [], "text": [],
-                "tokens": [], "mentions": [], "timexes": [],
-            }
-            for row in pdf.itertuples(index=False):
-                ts = None if pd.isna(row.ts) else row.ts
-                anchor, toks, ments, tmx = annotate_turn(
-                    row.conv_id, row.turn_idx, row.text, ts, gaz, _bl, c,
-                    with_timexes=with_timexes,
-                )
-                out["conv_id"].append(row.conv_id)
-                out["turn_idx"].append(row.turn_idx)
-                out["role"].append(row.role)
-                out["tool"].append(row.tool)
-                out["ts"].append(ts)
-                out["anchor_date"].append(anchor)
-                out["text"].append(row.text)
-                out["tokens"].append(toks)
-                out["mentions"].append(ments)
-                out["timexes"].append(tmx)
-            yield pd.DataFrame(out)
-
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    return transcripts.select(*cols).mapInPandas(gen, schema=ANNOTATED_SCHEMA)
-
-
-_MENTION_ROW_COLS = MENTION_ROWS_SCHEMA.fieldNames()
-
-
-def annotate_mention_rows(
-    transcripts: DataFrame,
-    gazetteer,
-    blacklist,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Mentions-only annotate emitting FLAT mention rows
-    (MENTION_ROWS_SCHEMA) — value-identical to
-    ``mentions_table(annotate_transcripts(..., with_timexes=False))`` but
-    the Arrow boundary carries only the mention columns: no token-struct
-    array, no turn text, no role/tool/ts passthroughs, and no downstream
-    explode. The narrow pass for consumers that read nothing but mentions
-    (cross-turn edges, rollups, canonicalization)."""
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz, _bl, c = bc.value
-        for pdf in batches:
-            out = {k: [] for k in _MENTION_ROW_COLS}
-            for row in pdf.itertuples(index=False):
-                ts = None if pd.isna(row.ts) else row.ts
-                anchor, _toks, ments, _tmx = annotate_turn(
-                    row.conv_id, row.turn_idx, row.text, ts, gaz, _bl, c,
-                    with_timexes=False, with_token_rows=False,
-                )
-                for m in ments:
-                    out["conv_id"].append(row.conv_id)
-                    out["turn_idx"].append(row.turn_idx)
-                    out["anchor_date"].append(anchor)
-                    out["mention_idx"].append(m["mention_idx"])
-                    for k in _MENTION_FIELDS:
-                        out[k].append(m[k])
-            yield pd.DataFrame(out)
-
-    cols = ["conv_id", "turn_idx", "text", "ts"]
-    return transcripts.select(*cols).mapInPandas(gen, schema=MENTION_ROWS_SCHEMA)
 
 
 _UNION_COLS = ANNOTATION_UNION_SCHEMA.fieldNames()
@@ -151,17 +56,21 @@ def annotate_union(
     gazetteer,
     blacklist,
     cfg: PipelineConfig = DEFAULT_CONFIG,
+    timexes: bool = True,
 ) -> DataFrame:
     """One-pass structured annotate: emits mention rows (kind_rank 0), timex
     rows (kind_rank 1) and one token-stream row per turn (kind_rank 2)
     directly in the merged W1 union shape (ANNOTATION_UNION_SCHEMA).
 
-    Same narrow Arrow pass as ``annotate_transcripts``; the flat output lets
-    the whole structured triples path run with ONE exchange (the W1 window)
-    and ONE persist instead of materializing the nested annotated frame and
-    the id frame separately (measured ~1.5x wall on the structured plan at
-    sf0.1). Mentions are RAW — F1/F2/F4/F5 stay visible DataFrame operators
-    downstream (``filter_union``)."""
+    The flat output lets the whole structured triples path run with ONE
+    exchange (the W1 window) and ONE persist. Mentions are RAW — F1/F2/F4/F5
+    stay visible DataFrame operators downstream (``filter_union``).
+
+    ``timexes=False`` is the mentions-only mode for consumers that read
+    nothing but mentions (cross-turn edges, rollups, canonicalization):
+    timex detection is skipped (~35% of per-turn CPU) and only kind_rank 0
+    rows are emitted, so the Arrow boundary carries no timex or token
+    rows."""
     spark = transcripts.sparkSession
     bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
 
@@ -181,15 +90,18 @@ def annotate_union(
 
             for row in pdf.itertuples(index=False):
                 ts = None if pd.isna(row.ts) else row.ts
-                anchor, (toks_raw, nl_raw), ments, tmx = annotate_turn(
+                anchor, tok_rows, ments, tmx = annotate_turn(
                     row.conv_id, row.turn_idx, row.text, ts, gaz, _bl, c,
-                    with_token_rows="raw",
+                    with_timexes=timexes,
+                    with_token_rows="raw" if timexes else False,
                 )
                 for m in ments:
                     emit(
                         row.conv_id, row.turn_idx, anchor, 0, m["mention_idx"],
                         **{k: m[k] for k in _MENTION_FIELDS},
                     )
+                if not timexes:
+                    continue
                 for t in tmx:
                     emit(
                         row.conv_id, row.turn_idx, anchor, 1, t["timex_idx"],
@@ -197,13 +109,11 @@ def annotate_union(
                     )
                 emit(
                     row.conv_id, row.turn_idx, anchor, 2, 0,
-                    tok_stream="\x1f".join(
-                        tokens_for_mode(toks_raw, nl_raw, "dtr")
-                    ),
+                    tok_stream="\x1f".join(tokens_for_mode(*tok_rows, "dtr")),
                 )
             yield pd.DataFrame(out)
 
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    cols = ["conv_id", "turn_idx", "text", "ts"]
     return transcripts.select(*cols).mapInPandas(gen, schema=ANNOTATION_UNION_SCHEMA)
 
 
@@ -213,9 +123,17 @@ def filter_union(
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """F1/F2/F4 on mention rows + F5 on timex rows of the union frame; token
-    rows pass through untouched. Same predicates as ``filter_mentions`` /
-    ``filter_timexes``, guarded by kind_rank so each operator only bites its
-    own relation."""
+    rows pass through untouched. Each operator is guarded by kind_rank so it
+    only bites its own relation.
+
+    F1: TUI predicate (timeline_delegator.py:369-375).
+    F2: blacklist exact-equality anti-join on trimmed lowercase surface
+        (EventFilter.java:100-110) — broadcast LEFT ANTI join.
+    F4: keep conmod == ACTUAL when the gate is enabled
+        (timeline_delegator.py:415-419).
+    F5: only normalized timexes survive (timexes_with_normalization,
+        timeline_delegator.py:171-177; silent-drop semantics O3).
+    """
     spark = union.sparkSession
     is_mention = F.col("kind_rank") == 0
     is_timex = F.col("kind_rank") == 1
@@ -239,8 +157,8 @@ def assign_union_ids(union_f: DataFrame) -> DataFrame:
     """W1 over the union frame: row_number per (conv_id, turn_idx) ordered by
     (begin, kind_rank, in_kind_idx) across mention+timex rows — token rows
     sort strictly last so they never shift a rank — formatted
-    ``{i}@e@{conv}_{turn}@system`` (NULL for token rows). Identical ids to
-    ``assign_annotation_ids``; this is the path's single exchange."""
+    ``{i}@e@{conv}_{turn}@system`` (NULL for token rows). This is the
+    structured path's single exchange."""
     w = Window.partitionBy("conv_id", "turn_idx").orderBy(
         (F.col("kind_rank") == 2).cast("int"), "begin", "kind_rank", "in_kind_idx"
     )
@@ -258,106 +176,16 @@ def assign_union_ids(union_f: DataFrame) -> DataFrame:
     )
 
 
-def _explode(annotated: DataFrame, col: str, alias: str) -> DataFrame:
-    return annotated.select(
-        "conv_id", "turn_idx", "anchor_date", F.explode(col).alias(alias)
-    ).select("conv_id", "turn_idx", "anchor_date", f"{alias}.*")
-
-
-def tokens_table(annotated: DataFrame) -> DataFrame:
-    return _explode(annotated, "tokens", "tok")
-
-
-def mentions_table(annotated: DataFrame) -> DataFrame:
-    """Raw (pre-filter) mentions relation."""
-    return _explode(annotated, "mentions", "m")
-
-
-def timexes_table(annotated: DataFrame) -> DataFrame:
-    """All detected timexes; ``normed`` null marks normalization failure."""
-    return _explode(annotated, "timexes", "t")
-
-
-def filter_mentions(
-    mentions: DataFrame,
-    blacklist,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """F1 + F2 + (optional) F4.
-
-    F1: TUI predicate (timeline_delegator.py:369-375).
-    F2: blacklist exact-equality anti-join on trimmed lowercase surface
-        (EventFilter.java:100-110) — broadcast LEFT ANTI join.
-    F4: keep conmod == ACTUAL when the gate is enabled
-        (timeline_delegator.py:415-419).
-    """
-    spark = mentions.sparkSession
-    out = mentions.where(F.col("tui") == F.lit(cfg.keep_tui))
-    if blacklist:
-        bl_df = spark.createDataFrame(
-            [(t,) for t in sorted(blacklist)], "bl_term string"
-        )
-        out = out.join(
-            F.broadcast(bl_df),
-            F.lower(F.trim(out["surface"])) == bl_df["bl_term"],
-            "left_anti",
-        )
-    if cfg.use_conmod:
-        out = out.where(F.col("conmod") == F.lit("ACTUAL"))
-    return out
-
-
-def filter_timexes(timexes: DataFrame) -> DataFrame:
-    """F5: only normalized timexes survive (timexes_with_normalization,
-    timeline_delegator.py:171-177; silent-drop semantics O3)."""
-    return timexes.where(F.col("normed").isNotNull())
-
-
-def assign_annotation_ids(
-    mentions_f: DataFrame, timexes_f: DataFrame, cache: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """W1: enumerate (filtered mentions ∪ normalized timexes) per turn by
-    begin offset and format ``{i}@e@{note}@system`` with
-    note ≙ ``{conv_id}_{turn_idx}``. Returns (mentions+annotation_id,
-    timexes+annotation_id).
-
-    Shape: one WIDE union (each side null-padded to the merged schema)
-    -> one row_number window -> split by kind. Carrying full payload rows
-    through the window avoids joining ids back to each side — the join-back
-    variant costs an extra exchange plus a mention-cardinality broadcast and
-    measured ~2x the wall of the whole id stage at sf0.1.
-    """
-    m = mentions_f.withColumn("kind_rank", F.lit(0)).withColumn(
-        "in_kind_idx", F.col("mention_idx")
+def kind_view(union: DataFrame, kind_rank: int, ids: bool = False) -> DataFrame:
+    """The mention (kind_rank 0) or timex (kind_rank 1) rows of a union frame
+    as their per-kind relation: (conv_id, turn_idx, anchor_date,
+    mention_idx | timex_idx, <payload>), plus ``annotation_id`` when
+    ``ids`` (the frame must then be ``assign_union_ids`` output)."""
+    idx, fields = (
+        ("mention_idx", _MENTION_FIELDS), ("timex_idx", _TIMEX_FIELDS)
+    )[kind_rank]
+    return union.where(F.col("kind_rank") == kind_rank).select(
+        "conv_id", "turn_idx", "anchor_date",
+        F.col("in_kind_idx").alias(idx), *fields,
+        *(["annotation_id"] if ids else []),
     )
-    t = timexes_f.withColumn("kind_rank", F.lit(1)).withColumn(
-        "in_kind_idx", F.col("timex_idx")
-    )
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        "begin", "kind_rank", "in_kind_idx"
-    )
-    ids = (
-        m.unionByName(t, allowMissingColumns=True)
-        .withColumn("ann_rank", F.row_number().over(w) - F.lit(1))
-        .withColumn(
-            "annotation_id",
-            F.format_string(
-                "%d@e@%s_%d@system",
-                F.col("ann_rank"), F.col("conv_id"), F.col("turn_idx"),
-            ),
-        )
-    )
-    if cache:
-        # both splits and every downstream consumer (entity triples, both
-        # pairing sides) read this frame: one window execution, N cheap
-        # cache-filter scans
-        from pyspark import StorageLevel
-
-        ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
-    mentions_out = ids.where(F.col("kind_rank") == 0).select(
-        *mentions_f.columns, "annotation_id"
-    )
-    timexes_out = ids.where(F.col("kind_rank") == 1).select(
-        *timexes_f.columns, "annotation_id"
-    )
-    return mentions_out, timexes_out

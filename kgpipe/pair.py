@@ -9,9 +9,9 @@ cross product is clamped by the band predicate exactly as the reference's
 token-window clamp (O4).
 
 Instance strings need the turn's token stream, so pairs are joined back to
-the annotated turns (same key again) and assembled in one ``mapInPandas``
-over Arrow batches together with the deterministic TLINK scorer + the
-inversion rule (X8, timeline_delegator.py:449-455).
+the union frame's token rows (same key again) and assembled by column
+expressions together with the deterministic TLINK scorer + the inversion
+rule (X8, timeline_delegator.py:449-455).
 
 ``turn_triples`` is the fused per-turn equivalent (zero-shuffle path): one
 call produces ALL triples for a turn — tlink, entity-mention, doc-time-rel

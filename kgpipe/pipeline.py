@@ -3,20 +3,25 @@
 Two equivalent execution plans (equality-tested):
 
 * ``build_triples(..., fused=False)`` — structured: every SURVEY.md §2
-  operator is a visible DataFrame op, in the one-pass union shape (the
-  annotate stage emits mention/timex/token rows directly in the merged W1
-  schema). Plan shape — ONE hash exchange total (plan-asserted in PLANS.md):
+  operator is a visible DataFrame op over the one annotation product, the
+  W1-ranked union frame (the annotate stage emits mention/timex/token rows
+  directly in the merged W1 schema). Plan shape — ONE hash exchange total
+  (plan-asserted in PLANS.md):
 
       scan -> mapInPandas(annotate -> union rows)         [narrow]
         -> F1 predicate, F2 broadcast anti-join, F5       [narrow]
         -> W1 row_number window   ── one exchange on (conv_id, turn_idx)
-        -> persist; kind splits are co-partitioned views of the cache
+        -> persist; kind views are co-partitioned views of the cache
         -> J1 band join + pair groupBy + token join       [zero exchanges]
-        -> instance/score mapInPandas
+        -> tlink label / instance column expressions
         -> union with attribution/entity/dtr projections
 
 * ``build_triples(..., fused=True)`` — one narrow mapInPandas, zero
   shuffles; the 10^12-turn scale path (scan-bound, embarrassingly parallel).
+
+``build_annotations`` returns ``kind_rank`` views of the same frame, and
+``build_graph`` feeds triples, edges and nodes from one persisted copy of
+it, so the annotate pass and the W1 window run once per graph build.
 
 The O1 semi-join gate (normalize timexes only for turns that have a
 surviving entity mention — TimeMentionNormalizer.java:104-117,
@@ -27,18 +32,12 @@ timex-only turns never reach pairing/scoring.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .extract import (
-    annotate_transcripts,
-    assign_annotation_ids,
-    filter_mentions,
-    filter_timexes,
-    mentions_table,
-    timexes_table,
-)
+from .extract import annotate_union, assign_union_ids, filter_union, kind_view
 from .graph import (
     attribution_triples,
     cross_turn_event_edges,
@@ -56,6 +55,27 @@ __all__ = [
 ]
 
 
+def _annotate(transcripts, gazetteer, blacklist, cfg, persist=True):
+    """build_annotations' tables (timexes=True) plus the post-W1 union
+    frame they are views of."""
+    raw = annotate_union(transcripts, gazetteer, blacklist, cfg)
+    filtered = filter_union(raw, blacklist, cfg)
+    union = assign_union_ids(filtered)
+    if persist:
+        # the W1 window (exchange -> sort -> window) and the annotate pass
+        # under it would otherwise re-execute once per consumer — entity
+        # triples, both pairing sides, the token join (measured 3x subtree
+        # wall at sf0.1); the id-free keys read the same cache
+        union = filtered = union.persist(StorageLevel.MEMORY_AND_DISK)
+    return {
+        "mentions_raw": kind_view(raw, 0),
+        "mentions_f": kind_view(filtered, 0),
+        "timexes_f": kind_view(filtered, 1),
+        "mentions": kind_view(union, 0, ids=True),
+        "timexes": kind_view(union, 1, ids=True),
+    }, union
+
+
 def build_annotations(
     transcripts: DataFrame,
     gazetteer,
@@ -64,73 +84,75 @@ def build_annotations(
     persist: bool = True,
     timexes: bool = True,
 ):
-    """Structured intermediate tables. Returns dict with annotated /
-    mentions_raw / mentions / timexes (filtered+id'd).
+    """Structured intermediate tables, every one a ``kind_rank`` view of the
+    union frame ``annotate_union`` emits:
 
-    ``annotated`` is the expensive Arrow-UDF stage and the DAG diamonds off
-    it (mentions, timexes, and the pair->token join all consume it), so it is
-    persisted MEMORY_AND_DISK by default — otherwise Spark re-runs the
-    annotation pass once per branch (measured 5x wall on the structured
-    plan at sf0.1).
+    * ``mentions_raw`` — mentions before F1/F2/F4;
+    * ``mentions_f`` / ``timexes_f`` — after F1/F2/F4 and F5, no ids;
+    * ``mentions`` / ``timexes`` — the same rows plus the W1
+      ``annotation_id``.
+
+    ``persist=True`` persists the post-W1 frame MEMORY_AND_DISK and serves
+    every filtered key from it, so the annotate pass and the W1 exchange
+    run once however many consumers read the tables. ``mentions_raw`` holds
+    rows the filters have already dropped, so it stays a lazy view of the
+    annotate pass (reading it re-runs that pass).
+
+    ``persist=False`` keeps every key lazy and the id-free keys pre-W1: a
+    single-consumer plan such as mentions_f -> cross-turn edges pays no
+    window exchange.
 
     ``timexes=False`` is the mentions-only fast path: timex detection is
     skipped inside the Arrow UDF and the returned dict carries ONLY
-    annotated / mentions_raw / mentions_f — no timex tables and no
-    annotation ids (the W1 id window ranks mentions and timexes together,
-    so ids from a timex-free pass would disagree with the full pipeline's;
-    omitting the keys makes that misuse impossible)."""
-    if not timexes:
-        # flat mentions-only annotate (MENTION_ROWS_SCHEMA): value-identical
-        # rows to mentions_table(annotated) with ~5x less Arrow payload (no
-        # token structs / text / passthroughs cross the Python boundary).
-        # ``annotated`` stays available as a lazy plan for callers that
-        # genuinely want the nested frame in this mode.
-        from .extract import annotate_mention_rows
-
-        annotated = annotate_transcripts(
-            transcripts, gazetteer, blacklist, cfg, with_timexes=False
-        )
-        mentions_raw = annotate_mention_rows(
-            transcripts, gazetteer, blacklist, cfg
-        )
-        if persist:
-            from pyspark import StorageLevel
-
-            mentions_raw = mentions_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        return {
-            "annotated": annotated,
-            "mentions_raw": mentions_raw,
-            "mentions_f": filter_mentions(mentions_raw, blacklist, cfg),
-        }
-    annotated = annotate_transcripts(
-        transcripts, gazetteer, blacklist, cfg, with_timexes=timexes
-    )
+    mentions_raw / mentions_f — no timex tables and no annotation ids (the
+    W1 id window ranks mentions and timexes together, so ids from a
+    timex-free pass would disagree with the full pipeline's; omitting the
+    keys makes that misuse impossible). With ``persist`` the raw mention
+    frame is the persisted one."""
+    if timexes:
+        return _annotate(transcripts, gazetteer, blacklist, cfg, persist)[0]
+    raw = annotate_union(transcripts, gazetteer, blacklist, cfg, timexes=False)
     if persist:
-        from pyspark import StorageLevel
-
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
-    mentions_raw = mentions_table(annotated)
-    timexes_raw = timexes_table(annotated)
-    mentions_f = filter_mentions(mentions_raw, blacklist, cfg)
-    timexes_f = filter_timexes(timexes_raw)
-    # cache=persist: the W1 id window (union -> exchange -> sort -> window)
-    # otherwise re-executes once per consumer — entity triples, both pairing
-    # sides (measured 3x subtree wall at sf0.1)
-    mentions_id, timexes_id = assign_annotation_ids(
-        mentions_f, timexes_f, cache=persist
-    )
+        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     return {
-        "annotated": annotated,
-        "mentions_raw": mentions_raw,
-        "timexes_raw": timexes_raw,
-        # pre-id filtered mentions: consumers that never read annotation_id
-        # (rollups, cross-turn edges, canonicalization) take this and skip
-        # the W1 window exchange entirely
-        "mentions_f": mentions_f,
-        "timexes_f": timexes_f,
-        "mentions": mentions_id,
-        "timexes": timexes_id,
+        "mentions_raw": kind_view(raw, 0),
+        "mentions_f": kind_view(filter_union(raw, blacklist, cfg), 0),
     }
+
+
+def _spread(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    if cfg.salt_partitions > 0:
+        # salted repartition on hash(conv_id, turn_idx): a hot conversation's
+        # turns scatter across all executors before the (embarrassingly
+        # parallel) annotation stage instead of staying in one input split
+        from .skew import spread_by_turn
+
+        return spread_by_turn(transcripts, cfg.salt_partitions)
+    return transcripts
+
+
+def _structured_triples(
+    transcripts: DataFrame, tables: dict, union: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """Triples from build_annotations' tables and the persisted union frame
+    they view. All joins key on (conv_id, turn_idx) and read co-partitioned
+    views of that one cached frame, so the band join, the pair groupBy and
+    the token join add zero exchanges."""
+    mentions_id, timexes_id = tables["mentions"], tables["timexes"]
+    # F3 (empty-doc skip) + O1 (entity gate on timex work) fall out of the
+    # inner equi-join in pair_window: timexes of mention-less turns never
+    # reach instance assembly or scoring.
+    pairs = pair_window(mentions_id, timexes_id)
+    tlink = tlink_triples_from_pairs(
+        pairs, union.where(F.col("kind_rank") == 2), cfg
+    )
+
+    out = attribution_triples(transcripts).unionByName(
+        entity_mention_triples(mentions_id)
+    )
+    if cfg.use_dtr:
+        out = out.unionByName(dtr_triples(mentions_id))
+    return out.unionByName(tlink)
 
 
 def build_triples(
@@ -142,46 +164,12 @@ def build_triples(
 ) -> DataFrame:
     """transcripts -> all triples (tlink + entity-mention + doc-time-rel
     (opt-in) + speaker-attribution + tool-invocation)."""
-    if cfg.salt_partitions > 0:
-        # salted repartition on hash(conv_id, turn_idx): a hot conversation's
-        # turns scatter across all executors before the (embarrassingly
-        # parallel) annotation stage instead of staying in one input split
-        from .skew import spread_by_turn
-
-        transcripts = spread_by_turn(transcripts, cfg.salt_partitions)
+    transcripts = _spread(transcripts, cfg)
     if fused:
         return fused_triples(transcripts, gazetteer, blacklist, cfg)
-
-    # One-pass structured shape: annotate emits mention/timex/token rows in
-    # the merged union schema, filters (F1/F2/F4/F5) and the W1 window stay
-    # visible operators, and the path pays exactly ONE exchange (the window)
-    # and ONE persist. All downstream joins key on (conv_id, turn_idx) and
-    # read co-partitioned splits of the same cached frame, so the band join,
-    # the pair groupBy and the token join add zero exchanges.
-    from pyspark import StorageLevel
-
-    from .extract import annotate_union, assign_union_ids, filter_union
-
-    union = assign_union_ids(
-        filter_union(annotate_union(transcripts, gazetteer, blacklist, cfg),
-                     blacklist, cfg)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    mentions_id = union.where(F.col("kind_rank") == 0)
-    timexes_id = union.where(F.col("kind_rank") == 1)
-    toks = union.where(F.col("kind_rank") == 2)
-
-    # F3 (empty-doc skip) + O1 (entity gate on timex work) fall out of the
-    # inner equi-join in pair_window: timexes of mention-less turns never
-    # reach instance assembly or scoring.
-    pairs = pair_window(mentions_id, timexes_id)
-    tlink = tlink_triples_from_pairs(pairs, toks, cfg)
-
-    out = attribution_triples(transcripts).unionByName(
-        entity_mention_triples(mentions_id)
+    return _structured_triples(
+        transcripts, *_annotate(transcripts, gazetteer, blacklist, cfg), cfg
     )
-    if cfg.use_dtr:
-        out = out.unionByName(dtr_triples(mentions_id))
-    return out.unionByName(tlink)
 
 
 def build_graph(
@@ -191,14 +179,18 @@ def build_graph(
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ):
     """Full graph materialization inputs: triples + cross-turn edges +
-    canonical nodes. Returns dict of DataFrames."""
+    canonical nodes, plus build_annotations' tables. All of them read one
+    persisted union frame. Returns dict of DataFrames."""
     from .canon import canonical_nodes  # local import: optional stage
 
-    tables = build_annotations(transcripts, gazetteer, blacklist, cfg)
-    triples = build_triples(transcripts, gazetteer, blacklist, cfg)
-    edges = cross_turn_event_edges(tables["mentions"], cfg)
-    nodes = canonical_nodes(tables["mentions"])
-    return {"triples": triples, "edges": edges, "nodes": nodes, **tables}
+    transcripts = _spread(transcripts, cfg)
+    tables, union = _annotate(transcripts, gazetteer, blacklist, cfg)
+    return {
+        "triples": _structured_triples(transcripts, tables, union, cfg),
+        "edges": cross_turn_event_edges(tables["mentions"], cfg),
+        "nodes": canonical_nodes(tables["mentions"]),
+        **tables,
+    }
 
 
 _NT_LITERAL_PREDS = ("speaker-attribution", "tool-invocation")

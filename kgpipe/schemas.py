@@ -1,9 +1,10 @@
 """StructType schemas for every stage boundary (SURVEY.md §1.3 Spark mapping).
 
 All primitive columns; spans are two ints, concepts plain strings — never
-UDTs. The annotated-turn schema carries per-turn annotation arrays so the
-extraction stage stays a narrow (zero-shuffle) map; the exploded views give
-the relational mentions/timexes/tokens tables.
+UDTs. The annotation stage emits flat rows in one union schema (mentions,
+timexes and per-turn token streams tagged by ``kind_rank``), so it stays a
+narrow (zero-shuffle) map with no nested arrays to explode; the relational
+mentions/timexes tables are projections of it.
 """
 
 from __future__ import annotations
@@ -21,25 +22,26 @@ TRANSCRIPTS_SCHEMA = T.StructType(
     ]
 )
 
-TOKEN_STRUCT = T.StructType(
+# The one annotation product: the annotate stage emits mention rows
+# (kind_rank 0), timex rows (kind_rank 1) and ONE token-stream row per turn
+# (kind_rank 2) directly in the merged W1 union shape, so the structured
+# path needs a single exchange and a single persist — filters
+# (F1/F2/F4/F5) and the W1 window stay visible DataFrame operators over
+# this frame, and extract.kind_view projects the per-kind relations.
+ANNOTATION_UNION_SCHEMA = T.StructType(
     [
-        T.StructField("tok_idx", T.IntegerType()),
-        T.StructField("begin", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("is_newline", T.BooleanType()),
-    ]
-)
-
-MENTION_STRUCT = T.StructType(
-    [
-        T.StructField("mention_idx", T.IntegerType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("anchor_date", T.DateType()),
+        T.StructField("kind_rank", T.IntegerType()),    # 0 mention / 1 timex / 2 tokens
+        T.StructField("in_kind_idx", T.IntegerType()),  # mention_idx / timex_idx
         T.StructField("begin", T.IntegerType()),
         T.StructField("end", T.IntegerType()),
         T.StructField("tok_begin", T.IntegerType()),
-        T.StructField("tok_end", T.IntegerType()),  # inclusive token index
-        T.StructField("surface", T.StringType()),   # newline-stripped covered text
-        T.StructField("term", T.StringType()),      # normalized matched term
+        T.StructField("tok_end", T.IntegerType()),      # inclusive token index
+        # mentions: newline-stripped covered text; timexes: covered text
+        T.StructField("surface", T.StringType()),
+        T.StructField("term", T.StringType()),          # normalized matched term
         T.StructField("cui", T.StringType()),
         T.StructField("tui", T.StringType()),
         T.StructField("confidence", T.DoubleType()),
@@ -50,84 +52,8 @@ MENTION_STRUCT = T.StructType(
         # precomputed ±60-token pairing window as char offsets (J1/O4)
         T.StructField("win_char_begin", T.IntegerType()),
         T.StructField("win_char_end", T.IntegerType()),
-    ]
-)
-
-TIMEX_STRUCT = T.StructType(
-    [
-        T.StructField("timex_idx", T.IntegerType()),
-        T.StructField("begin", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("tok_begin", T.IntegerType()),
-        T.StructField("tok_end", T.IntegerType()),  # inclusive token index
-        T.StructField("surface", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("normed", T.StringType()),    # null => dropped by F5
-    ]
-)
-
-ANNOTATED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("anchor_date", T.DateType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tokens", T.ArrayType(TOKEN_STRUCT)),
-        T.StructField("mentions", T.ArrayType(MENTION_STRUCT)),
-        T.StructField("timexes", T.ArrayType(TIMEX_STRUCT)),
-    ]
-)
-
-# Mentions-only fast path (build_annotations timexes=False): flat mention
-# rows straight out of the annotate pass. Field set matches
-# mentions_table(annotated) exactly — (conv_id, turn_idx, anchor_date) +
-# MENTION_STRUCT — but the Arrow transfer carries ONLY these columns: no
-# token array, no text, no per-turn passthroughs (those were ~80% of the
-# no-timex annotate stage's serialized bytes and none of its consumers
-# read them).
-MENTION_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("anchor_date", T.DateType()),
-    ]
-    + list(MENTION_STRUCT.fields)
-)
-
-# One-pass structured path (build_triples fused=False): the annotate stage
-# emits mention rows (kind_rank 0), timex rows (kind_rank 1) and ONE
-# token-stream row per turn (kind_rank 2) directly in the merged W1 union
-# shape, so the whole path needs a single exchange and a single persist —
-# filters (F1/F2/F4/F5) and the W1 window stay visible DataFrame operators
-# over this frame. Column names match MENTION_STRUCT/TIMEX_STRUCT so the
-# splits are drop-in for the per-kind relations.
-ANNOTATION_UNION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("anchor_date", T.DateType()),
-        T.StructField("kind_rank", T.IntegerType()),    # 0 mention / 1 timex / 2 tokens
-        T.StructField("in_kind_idx", T.IntegerType()),
-        T.StructField("begin", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("tok_begin", T.IntegerType()),
-        T.StructField("tok_end", T.IntegerType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("cui", T.StringType()),
-        T.StructField("tui", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("conmod", T.StringType()),
-        T.StructField("conmod_inst", T.StringType()),
-        T.StructField("dtr", T.StringType()),
-        T.StructField("dtr_inst", T.StringType()),
-        T.StructField("win_char_begin", T.IntegerType()),
-        T.StructField("win_char_end", T.IntegerType()),
         T.StructField("kind", T.StringType()),          # timex kind
-        T.StructField("normed", T.StringType()),
+        T.StructField("normed", T.StringType()),        # null => dropped by F5
         # the turn's token stream, already <newline>-substituted
         # (tokens_for_mode mode="dtr" — the only mode pair scoring uses),
         # joined with \x1f: ONE Arrow string per turn instead of ~180

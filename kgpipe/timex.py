@@ -1343,9 +1343,10 @@ def _word_quick_keys(word: str) -> frozenset:
 
 
 # Patterns whose every match contains at least one digit AND extends at most
-# 2 whitespace-words left of its first digit ("september 5, 2021": one month
-# word) and 0 chars right of its last digit (all five end on \d\b). Their
-# finditer can scan just the digit region instead of the whole text.
+# _DIGIT_LEFT_WORDS whitespace-words left of its first digit ("september 5,
+# 2021": one month word) and 0 chars right of its last digit (all five end
+# on \d\b). Their finditer can scan just the digit region instead of the
+# whole text.
 _DIGIT_BOUNDED = {
     "iso_date", "slash_date", "month_day_year", "month_year", "bare_year",
     # "summer of 2019": 2 words left of first digit; "the 1990s"/"the '90s":
@@ -1354,27 +1355,30 @@ _DIGIT_BOUNDED = {
     "season_year", "decade", "month_day",
     # "friday(,) march 5(th)(, 2021)" / "friday 3/5/2021" / "friday
     # 2021-03-05": every alternative requires a digit; max reach left of
-    # the first digit is month word + weekday word = 2 whitespace-words
-    # (the optional comma rides the weekday token), and every match ends
-    # on \d or an ordinal suffix inside the +4-char right margin
+    # the first digit is weekday word + detached comma + month word = 3
+    # whitespace-words ("friday , march 5": the \s*,? lets the comma stand
+    # alone), and every match ends on \d or an ordinal suffix inside the
+    # +4-char right margin
     "weekday_date",
 }
+# the widest left reach of any _DIGIT_BOUNDED pattern (weekday_date above)
+_DIGIT_LEFT_WORDS = 3
 
 
 def _digit_region(text: str, first: int, last_end: int) -> Tuple[int, int]:
     """Word-aligned window around [first digit, last digit): step left over
-    two whitespace gaps (so the region never starts mid-word — slicing at a
-    word boundary preserves \\b semantics), keep >=4 chars of right context
-    (\\b after the final digit only inspects the next char)."""
+    _DIGIT_LEFT_WORDS whitespace gaps (so the region never starts mid-word —
+    slicing at a word boundary preserves \\b semantics), keep >=4 chars of
+    right context (\\b after the final digit only inspects the next char)."""
     start = first
     gaps = 0
     in_space = False
-    while start > 0 and gaps < 3:
+    while start > 0 and gaps <= _DIGIT_LEFT_WORDS:
         start -= 1
         if text[start].isspace():
             if not in_space:  # count word gaps, not whitespace chars
                 gaps += 1
-                if gaps == 3:
+                if gaps > _DIGIT_LEFT_WORDS:
                     start += 1
                     break
             in_space = True

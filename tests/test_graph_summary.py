@@ -392,7 +392,14 @@ def test_cross_turn_edges_mentions_only_path_equal(spark):
     light = build_annotations(
         t, gaz, bl, DEFAULT_CONFIG, persist=False, timexes=False
     )
-    assert set(light) == {"annotated", "mentions_raw", "mentions_f"}
+    assert set(light) == {"mentions_raw", "mentions_f"}
+    # the timex-free union carries mention rows only
+    from kgpipe.extract import annotate_union
+
+    kinds = annotate_union(t, gaz, bl, DEFAULT_CONFIG, timexes=False).select(
+        "kind_rank"
+    ).distinct().collect()
+    assert [r.kind_rank for r in kinds] == [0]
     a = sorted(
         map(tuple, cross_turn_event_edges(full["mentions_f"]).collect())
     )

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgpipe.config import PipelineConfig
+from kgpipe.extract import annotate_union
 from kgpipe.fixtures import synthetic_transcripts, synthetic_transcripts_df
 from kgpipe.pipeline import build_annotations, build_triples
 
@@ -80,21 +81,35 @@ def test_structured_equals_fused(corpus_df, gazetteer, blacklist):
 
 
 def test_per_turn_text_equality_invariant(spark, corpus_pdf, corpus_df, gazetteer, blacklist):
-    """Per-row invariant: the annotated table preserves every turn's text
-    byte-for-byte under stable (conv_id, turn_idx) ordering."""
+    """Per-row invariant on the union frame: every input turn gets exactly
+    one token row under stable (conv_id, turn_idx) ordering, and every
+    mention/timex surface is the turn text it spans (mention surfaces with
+    newlines stripped)."""
     cfg = PipelineConfig()
-    tables = build_annotations(corpus_df, gazetteer, blacklist, cfg)
-    out = (
-        tables["annotated"]
-        .select("conv_id", "turn_idx", "text")
+    u = annotate_union(corpus_df, gazetteer, blacklist, cfg)
+    toks = (
+        u.where(F.col("kind_rank") == 2)
+        .select("conv_id", "turn_idx")
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )
     inp = corpus_pdf[["conv_id", "turn_idx", "text"]].sort_values(
         ["conv_id", "turn_idx"]
     ).reset_index(drop=True)
-    assert out["text"].tolist() == inp["text"].tolist()
-    assert list(zip(out.conv_id, out.turn_idx)) == list(zip(inp.conv_id, inp.turn_idx))
+    assert list(zip(toks.conv_id, toks.turn_idx)) == list(zip(inp.conv_id, inp.turn_idx))
+
+    spans = (
+        u.where(F.col("kind_rank") < 2)
+        .select("conv_id", "turn_idx", "kind_rank", "begin", "end", "surface")
+        .toPandas()
+        .merge(inp, on=["conv_id", "turn_idx"], how="left", validate="m:1")
+    )
+    assert (spans.kind_rank == 0).any() and (spans.kind_rank == 1).any()
+    for r in spans.itertuples(index=False):
+        covered = r.text[r.begin:r.end]
+        if r.kind_rank == 0:
+            covered = covered.replace("\n", "")
+        assert r.surface == covered, (r.conv_id, r.turn_idx, r.kind_rank, r.begin)
 
 
 def test_annotation_id_stability(corpus_df, gazetteer, blacklist):

@@ -1261,6 +1261,21 @@ def test_weekday_date_composition_and_abbrs():
     assert detect_timexes("see you fri") == []
 
 
+def test_weekday_date_detached_comma():
+    # a standalone comma is its own whitespace word: "friday , march 5"
+    # puts 3 words left of the first digit, and the digit-region scan must
+    # reach that far to find the composed span the full-text regex finds
+    for text in ("friday , march 5 , 2021", "friday, march 5, 2021"):
+        det = detect_timexes(text)
+        assert [(d["kind"], d["surface"]) for d in det] == [
+            ("weekday_date", text)
+        ], text
+        assert _norm(text) == "2021-03-05"
+    assert [d["kind"] for d in detect_timexes("friday , march 5")] == [
+        "weekday_date"
+    ]
+
+
 def test_region_bounded_scan_matches_full_scan():
     # the region-bounded patterns (scanned only near their indicator
     # tokens) must find EXACTLY the spans a full-text scan finds — the
@@ -1292,6 +1307,8 @@ def test_region_bounded_scan_matches_full_scan():
         "at 10:30 am today", "3pm sharp", "7 p.m. tonight",
         "earlier in the year", "later in 2020", "part of the quarter",
         "an example of programming", "the stream of data",
+        # standalone punctuation and a detached-comma weekday date
+        ",", "friday , march 5",
     ]
     for t in cases:
         for kind, pat in pats.items():

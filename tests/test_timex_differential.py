@@ -81,6 +81,7 @@ def test_region_scan_handpicked_boundaries():
         "now 2021-03-04",  # ref word + iso date
         "5",  # single digit token
         "word 19 99",  # split digits — bare_year must not fire
+        "friday , march 5 , 2021",  # detached commas: 3 words left of the digit
     ]
     for text in cases:
         assert detect_timexes(text) == _detect_full_scan(text), repr(text)

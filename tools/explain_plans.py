@@ -17,6 +17,10 @@ Checks (each is a hard assertion, so this doubles as a regression gate):
 5. IVF index probe — the partitioned-by-list_id scan carries a
    dynamicpruning PartitionFilter (DPP): probes read n_probe partitions,
    never the full corpus.
+6-20. the per-operator sections below, each with its own assertion.
+21. one annotation product — build_graph's triples and edges read one
+   shared cached union frame, whose plan holds the only annotate
+   MapInPandas; no plan runs a MapInPandas outside it.
 
 Usage: python tools/explain_plans.py [--write]  (--write refreshes PLANS.md)
 """
@@ -59,6 +63,35 @@ def keyed_exchange_args(plan: str) -> list[str]:
     ):
         out.append(m.group(1))
     return out
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def plan_nodes(plan) -> list:
+    """Every node of a JVM logical plan. Cached relations are leaves: the
+    plan they cache is not walked."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        if _name(node) != "InMemoryRelation":
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def cached_reads(df) -> tuple[dict, int]:
+    """({identity: CachedRDDBuilder} of every cached relation ``df`` reads,
+    number of MapInPandas nodes outside those caches)."""
+    identity = df.sparkSession._jvm.java.lang.System.identityHashCode
+    nodes = plan_nodes(df._jdf.queryExecution().withCachedData())
+    caches = {
+        identity(n.cacheBuilder()): n.cacheBuilder()
+        for n in nodes if _name(n) == "InMemoryRelation"
+    }
+    return caches, sum(_name(n) == "MapInPandas" for n in nodes)
 
 
 def main() -> int:
@@ -552,6 +585,35 @@ def main() -> int:
         ))
     finally:
         shutil.rmtree(_tmp, ignore_errors=True)
+
+    # 21. build_graph: one annotation product ------------------------------
+    from kgpipe.pipeline import build_graph
+
+    graph = build_graph(t, E._GAZ, E._BLACKLIST, DEFAULT_CONFIG)
+    reads = {k: cached_reads(graph[k]) for k in ("triples", "edges", "nodes")}
+    shared = reads["triples"][0]
+    assert len(shared) == 1, f"triples read {len(shared)} cached relations"
+    assert reads["edges"][0].keys() == shared.keys(), (
+        "edges do not read the triples' cached union frame"
+    )
+    # canonical_nodes eagerly checkpoints its vocabulary frames, so its
+    # final plan reads those checkpoints, not the cache itself
+    assert reads["nodes"][0].keys() <= shared.keys(), "nodes read another cache"
+    for k, (_, n_map) in reads.items():
+        assert n_map == 0, f"{k} runs {n_map} MapInPandas outside the cache"
+    (builder,) = shared.values()
+    n_annotate = sum(
+        _name(n) == "MapInPandas" for n in plan_nodes(builder.logicalPlan())
+    )
+    assert n_annotate == 1, f"cached union frame runs {n_annotate} annotate passes"
+    sections.append((
+        "one annotation product (build_graph triples / edges / nodes)",
+        plan_of(graph["edges"]),
+        ["triples and edges read ONE cached relation (the W1-ranked union "
+         "frame); its plan holds the only annotate MapInPandas, and no "
+         "output plan runs a MapInPandas outside it; nodes read eager "
+         "checkpoints of that frame's mentions"],
+    ))
 
     print("ALL PLAN ASSERTIONS PASS")
     if write:
