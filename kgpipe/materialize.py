@@ -15,16 +15,31 @@ and writes a single TSV at collection end (timeline_delegator.py:328,
   the identical layout and lineage logic (SURVEY.md §7.3 risk 8). Resume
   behaves identically on both branches (pytest exercises the parquet
   branch always and the Iceberg branch when the runtime jar is present).
-* after each bucket's data is committed, one lineage row records
+* every bucketed write goes through ``bucket_clustered``: one rebalance
+  exchange keyed on ``bucket`` in front of the write. AQE coalesces small
+  buckets into shared tasks without splitting any, so at small scale a
+  commit writes one file per bucket; a bucket larger than
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is split across
+  tasks, so at large scale files come out near the advisory size and the
+  commit's parallelism is not capped at ``n_buckets``.
+* after the data is committed, one lineage row per bucket records
   (run_id, source_snapshot_id, partition_hash=bucket, triple_count,
-  stage_timings, completed_at). NOTE: the ``stage_timings`` map (wall
-  seconds + observed n_triples/n_tlink/... metrics) is INVOCATION-scoped —
-  every lineage row written by one run_with_resume call carries the same
-  totals for the whole invocation, not per-bucket values; per-bucket
-  cardinality lives in ``triple_count``.
+  stage_timings, completed_at). ``triple_count`` is the rows the commit
+  wrote to that bucket, observed during the write itself (one
+  ``count_if`` per bucket on an ``Observation`` in the write's result
+  stage), so no job reads the store back. NOTE: the ``stage_timings`` map
+  (wall seconds + observed n_triples/n_tlink/... metrics) is
+  INVOCATION-scoped — every lineage row written by one run_with_resume
+  call carries the same totals for the whole invocation, not per-bucket
+  values; per-bucket cardinality lives in ``triple_count``.
 * resume = anti-join the bucket domain against completed lineage rows:
   only unfinished buckets are recomputed, finished output is untouched —
   checkpoint-resume at partition granularity (north_star).
+
+Crash window: the triples append and the lineage append are two commits.
+A crash between them leaves the buckets' rows on disk with no lineage
+row, so a rerun appends those buckets a second time; lineage then records
+the rows that rerun wrote, not the rows on disk.
 """
 
 from __future__ import annotations
@@ -43,7 +58,7 @@ from .schemas import LINEAGE_SCHEMA
 
 __all__ = [
     "with_bucket",
-    "write_bucketed",
+    "bucket_clustered",
     "append_lineage",
     "completed_buckets",
     "run_with_resume",
@@ -97,6 +112,34 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     )
+
+
+def bucket_clustered(
+    df: DataFrame,
+    n_buckets: int,
+    obs=None,
+    metrics=(),
+    count_buckets=(),
+) -> tuple[DataFrame, list[str]]:
+    """The frame a bucketed write commits: ``df`` with its ``bucket``
+    column behind one rebalance exchange keyed on ``bucket``, so each
+    bucket's rows land in one write task (one file per bucket) unless the
+    bucket exceeds the advisory partition size. Not ``repartition(n_buckets,
+    "bucket")``: that would cap the write at ``n_buckets`` tasks.
+
+    With ``obs``, ``metrics`` and one ``bucket_<b>`` row count per bucket
+    in ``count_buckets`` are observed ON TOP of the exchange: they are
+    computed in the write's own result stage, once per task, with no extra
+    pass. Returns the frame and the names of its per-bucket counts."""
+    out = with_bucket(df, n_buckets).hint("rebalance", "bucket")
+    names = [f"bucket_{b}" for b in count_buckets]
+    if obs is not None:
+        counts = [
+            F.count_if(F.col("bucket") == b).alias(n)
+            for b, n in zip(count_buckets, names)
+        ]
+        out = out.observe(obs, *metrics, *counts)
+    return out, names
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -214,13 +257,6 @@ class TableSink:
         return self.spark.read.parquet(p)
 
 
-def write_bucketed(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Write a bucket-partitioned parquet table (fallback layout identical
-    to an Iceberg bucket-transform table). Kept for direct callers; the
-    resume path goes through TableSink."""
-    df.write.mode(mode).partitionBy("bucket").parquet(path)
-
-
 def append_lineage(
     sink: TableSink,
     run_id: str,
@@ -228,14 +264,22 @@ def append_lineage(
     bucket_counts,  # list[(bucket, triple_count)]
     stage_timings: dict,
 ) -> None:
+    import pandas as pd
+
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    rows = [
-        (run_id, source_snapshot_id, int(b), int(c), stage_timings, now)
-        for b, c in bucket_counts
-    ]
+    rows = pd.DataFrame(
+        [
+            (run_id, source_snapshot_id, int(b), int(c), stage_timings, now)
+            for b, c in bucket_counts
+        ],
+        columns=LINEAGE_SCHEMA.fieldNames(),
+    )
+    # a pandas frame goes to the JVM through Arrow, so the commit is a
+    # JVM-only job (a list of tuples would run a Python-worker job to
+    # unpickle it); one partition makes it one lineage file per commit
     sink.append(
         "lineage",
-        sink.spark.createDataFrame(rows, LINEAGE_SCHEMA),
+        sink.spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1),
         partitioned=False,
     )
 
@@ -297,34 +341,29 @@ def run_with_resume(
     from pyspark.sql import Observation
 
     obs = Observation("kg_run_metrics")
-    out = with_bucket(triples, n_buckets).observe(
-        obs,
-        F.count(F.lit(1)).alias("n_triples"),
-        F.sum(F.when(F.col("pred").startswith("tlink:"), 1).otherwise(0)).alias(
-            "n_tlink"
+    out, count_names = bucket_clustered(
+        triples, n_buckets, obs,
+        metrics=(
+            F.count(F.lit(1)).alias("n_triples"),
+            F.sum(F.when(F.col("pred").startswith("tlink:"), 1).otherwise(0))
+            .alias("n_tlink"),
+            F.sum(F.when(F.col("pred") == "entity-mention", 1).otherwise(0))
+            .alias("n_entity"),
+            # exact DISTINCT is disallowed in observed metrics; the HLL
+            # sketch is the standard observable cardinality
+            F.approx_count_distinct("conv_id").alias("n_convs_approx"),
         ),
-        F.sum(F.when(F.col("pred") == "entity-mention", 1).otherwise(0)).alias(
-            "n_entity"
-        ),
-        # exact DISTINCT is disallowed in observed metrics; the HLL sketch is
-        # the standard observable cardinality
-        F.approx_count_distinct("conv_id").alias("n_convs_approx"),
+        count_buckets=todo,
     )
     sink.append("triples", out)
     t1 = time.monotonic()
-    metrics = {k: float(v or 0) for k, v in obs.get.items()}
-
-    written = sink.read("triples").where(
-        F.col("bucket").isin([int(b) for b in todo])
-    )
-    counts = [
-        (r.bucket, r.cnt)
-        for r in written.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
-    ]
-    # buckets yielding zero triples still get a lineage row (they are
-    # complete; resume must not redo them)
-    counted = {b for b, _ in counts}
-    counts.extend((b, 0) for b in todo if b not in counted)
+    observed = obs.get
+    # one count per todo bucket, zero-triple buckets included: they are
+    # complete too, and resume must not redo them
+    counts = [(b, observed[n]) for b, n in zip(todo, count_names)]
+    metrics = {
+        k: float(v or 0) for k, v in observed.items() if k not in count_names
+    }
     # stage_timings/metrics are INVOCATION-scoped (identical across this
     # call's lineage rows); per-bucket cardinality is triple_count
     append_lineage(

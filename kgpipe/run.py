@@ -153,7 +153,7 @@ def main(argv=None) -> int:
         # read back through the same sink abstraction the writer used —
         # with --iceberg-table-prefix the triples live in the catalog, not
         # under <output>/triples
-        from .materialize import TableSink, with_bucket
+        from .materialize import TableSink, bucket_clustered
 
         sink = TableSink(
             spark, out_dir=args.output, table_prefix=args.iceberg_table_prefix
@@ -197,7 +197,7 @@ def main(argv=None) -> int:
 
         nt_path = os.path.join(args.output, "ntriples")
         (
-            with_bucket(ntriples_view(triples), args.buckets)
+            bucket_clustered(ntriples_view(triples), args.buckets)[0]
             .select("ntriple", "bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")

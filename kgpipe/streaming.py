@@ -539,10 +539,11 @@ def run_incremental_materialize(
 
     Returns the drained query.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .materialize import (
-        TableSink, append_lineage, migrate_legacy_store, with_bucket,
+        TableSink, append_lineage, bucket_clustered, migrate_legacy_store,
     )
 
     triples = stream_triples(
@@ -573,29 +574,27 @@ def run_incremental_materialize(
         sid = f"stream-batch-{batch_id}"
         if sid in committed:
             return  # redelivered batch: already committed, idempotent skip
-        out = (
-            with_bucket(batch_df, n_buckets)
-            .withColumn("source_snapshot_id", F.lit(sid))
-            .persist()
+        # the snapshot id is constant within a batch, so clustering on
+        # bucket alone gives one file per (snapshot, bucket) partition; the
+        # per-bucket counts are observed during that write
+        obs = Observation(f"kg_stream_batch_{batch_id}")
+        out, count_names = bucket_clustered(
+            batch_df.withColumn("source_snapshot_id", F.lit(sid)),
+            n_buckets, obs, count_buckets=range(n_buckets),
         )
-        try:
-            sink.replace_snapshot("triples", out, sid)
-            counts = [
-                (r.bucket, r.cnt)
-                for r in out.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            ]
-            append_lineage(
-                sink,
-                run_id=f"incr-{batch_id}",
-                source_snapshot_id=sid,
-                bucket_counts=counts,
-                stage_timings={"batch_id": float(batch_id)},
-            )
-            committed.add(sid)
-        finally:
-            out.unpersist()
+        sink.replace_snapshot("triples", out, sid)
+        observed = obs.get
+        counts = [
+            (b, observed[n]) for b, n in enumerate(count_names) if observed[n]
+        ]
+        append_lineage(
+            sink,
+            run_id=f"incr-{batch_id}",
+            source_snapshot_id=sid,
+            bucket_counts=counts,
+            stage_timings={"batch_id": float(batch_id)},
+        )
+        committed.add(sid)
 
     query = (
         triples.writeStream.foreachBatch(commit)

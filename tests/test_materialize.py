@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -47,32 +48,69 @@ def test_resume_produces_identical_output(spark, gazetteer, blacklist, tmp_path)
 
 
 def test_lineage_rows_and_counts(spark, gazetteer, blacklist, tmp_path):
+    """On both builds, a multi-partition input commits one parquet file per
+    bucket, and the per-bucket counts observed during the write equal a
+    read-back count."""
     cfg = PipelineConfig()
-    tr = synthetic_transcripts_df(spark, n_conv=6, turns_per_conv=3, hot_conv_factor=1)
-    out = str(tmp_path / "kg2")
-    run_with_resume(
-        spark, tr, out,
-        lambda df: build_triples(df, gazetteer, blacklist, cfg, fused=True),
-        run_id="rA", source_snapshot_id="sA", n_buckets=4,
-    )
-    lineage = spark.read.parquet(os.path.join(out, "lineage")).toPandas()
-    triples = spark.read.parquet(os.path.join(out, "triples"))
-    per_bucket = {
-        r.bucket: r.cnt
-        for r in triples.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
+    tr = synthetic_transcripts_df(
+        spark, n_conv=6, turns_per_conv=3, hot_conv_factor=1
+    ).repartition(6)
+    for fused in (True, False):
+        out = str(tmp_path / f"kg2_fused{fused}")
+        run_with_resume(
+            spark, tr, out,
+            lambda df: build_triples(df, gazetteer, blacklist, cfg, fused=fused),
+            run_id="rA", source_snapshot_id="sA", n_buckets=4,
+        )
+        bucket_dirs = glob.glob(os.path.join(out, "triples", "bucket=*"))
+        assert bucket_dirs
+        for d in bucket_dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+        # the commit's lineage rows land in one file too
+        assert len(glob.glob(os.path.join(out, "lineage", "*.parquet"))) == 1
+        lineage = spark.read.parquet(os.path.join(out, "lineage")).toPandas()
+        assert sorted(lineage.partition_hash) == [0, 1, 2, 3]
+        triples = spark.read.parquet(os.path.join(out, "triples"))
+        per_bucket = {
+            r.bucket: r.cnt
+            for r in triples.groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
+        }
+        total = triples.count()
+        for _, row in lineage.iterrows():
+            assert row.run_id == "rA" and row.source_snapshot_id == "sA"
+            assert per_bucket.get(row.partition_hash, 0) == row.triple_count
+            # observed metrics (computed inline during the write) land in
+            # lineage; the per-bucket counts stay out of stage_timings
+            assert set(row.stage_timings) == {
+                "build_and_write_sec", "n_triples", "n_tlink", "n_entity",
+                "n_convs_approx",
+            }
+            assert row.stage_timings["n_triples"] == total
+        sink = TableSink(spark, out_dir=out)
+        assert completed_buckets(sink, "sA") == set(lineage.partition_hash)
+        # a different snapshot id sees nothing completed
+        assert completed_buckets(sink, "sB") == set()
+
+
+def test_lineage_counts_only_own_snapshot(spark, gazetteer, blacklist, tmp_path):
+    """A second source snapshot committed into the same store records the
+    rows it wrote, not the earlier snapshot's rows in the same buckets."""
+    cfg = PipelineConfig()
+    tr = synthetic_transcripts_df(spark, n_conv=8, turns_per_conv=3, hot_conv_factor=1)
+    fn = lambda df: build_triples(df, gazetteer, blacklist, cfg, fused=True)
+    out = str(tmp_path / "kg_two_snapshots")
+    for sid in ("s1", "s2"):
+        run_with_resume(spark, tr, out, fn, run_id=f"r_{sid}",
+                        source_snapshot_id=sid, n_buckets=4)
+    sums = {
+        r.source_snapshot_id: r.n
+        for r in spark.read.parquet(os.path.join(out, "lineage"))
+        .groupBy("source_snapshot_id")
+        .agg(F.sum("triple_count").alias("n"))
+        .collect()
     }
-    total = triples.count()
-    for _, row in lineage.iterrows():
-        assert row.run_id == "rA" and row.source_snapshot_id == "sA"
-        assert per_bucket.get(row.partition_hash, 0) == row.triple_count
-        assert "build_and_write_sec" in row.stage_timings
-        # observed metrics (computed inline during the write) land in lineage
-        assert row.stage_timings["n_triples"] == total
-        assert {"n_tlink", "n_entity", "n_convs_approx"} <= set(row.stage_timings)
-    sink = TableSink(spark, out_dir=out)
-    assert completed_buckets(sink, "sA") == set(lineage.partition_hash)
-    # a different snapshot id sees nothing completed
-    assert completed_buckets(sink, "sB") == set()
+    want = fn(tr).count()
+    assert sums == {"s1": want, "s2": want}
 
 
 def test_bucket_assignment_is_conv_stable(spark):

@@ -21,6 +21,10 @@ Checks (each is a hard assertion, so this doubles as a regression gate):
 21. one annotation product — build_graph's triples and edges read one
    shared cached union frame, whose plan holds the only annotate
    MapInPandas; no plan runs a MapInPandas outside it.
+22. bucketed commit — the frame every bucketed write commits
+   (materialize.bucket_clustered over the fused build) adds exactly one
+   Exchange, a rebalance keyed on bucket, and observes its per-bucket
+   counts in a CollectMetrics above that Exchange.
 
 Usage: python tools/explain_plans.py [--write]  (--write refreshes PLANS.md)
 """
@@ -613,6 +617,37 @@ def main() -> int:
          "frame); its plan holds the only annotate MapInPandas, and no "
          "output plan runs a MapInPandas outside it; nodes read eager "
          "checkpoints of that frame's mentions"],
+    ))
+
+    # 22. bucketed commit: one rebalance on bucket, counts observed above it
+    from pyspark.sql import Observation
+
+    from kgpipe.materialize import bucket_clustered
+
+    commit, _ = bucket_clustered(
+        fused, 16, Observation("plan_audit"),
+        metrics=(F.count(F.lit(1)).alias("n_triples"),),
+        count_buckets=range(16),
+    )
+    p = plan_of(commit)
+    tree = p.split("\n\n", 1)[0]
+    assert count(r"\bExchange\b", tree) == 1, f"commit frame exchanges:\n{p}"
+    (key,) = keyed_exchange_args(p)
+    assert re.match(r"hashpartitioning\(bucket#\d+, \d+\)", key), key
+    assert "REBALANCE_PARTITIONS_BY_COL" in p, "the exchange is not a rebalance"
+    assert "CollectMetrics" in tree and (
+        tree.index("CollectMetrics") < tree.index("Exchange")
+    ), f"per-bucket counts are not observed above the exchange:\n{tree}"
+    sections.append((
+        "bucketed commit (materialize.bucket_clustered over the fused build)",
+        p,
+        ["Exchange nodes: 1 — a rebalance keyed on bucket in front of the "
+         "write: AQE coalesces small buckets without splitting them (one "
+         "file per bucket) and splits only buckets above the advisory "
+         "partition size, so the write is not capped at n_buckets tasks",
+         "CollectMetrics sits above the Exchange: the per-bucket lineage "
+         "counts are observed in the write's own result stage, with no "
+         "read-back job"],
     ))
 
     print("ALL PLAN ASSERTIONS PASS")
