@@ -4,8 +4,12 @@ stage (structured path), the fused zero-shuffle path, and ``kgpipe.run``.
 ``annotate_turn`` is a pure function of (text, anchor, gazetteer, blacklist,
 config) -> (anchor, tokens, mentions, timexes); the mention and timex dicts
 carry the payload columns of ``schemas.ANNOTATION_UNION_SCHEMA``
-(``extract.annotate_union`` emits them as flat union rows). It reproduces,
-per turn (turn ≙ reference note / CAS):
+(``extract.annotate_union`` emits them as flat union rows). It is the
+composition of two halves over one tokenization: ``annotate_mentions``
+(tokenize, gazetteer, mention rows) and ``annotate_timexes`` (detect +
+normalize), which the fused path calls separately so that it runs the timex
+half only for turns with a surviving mention. It reproduces, per turn
+(turn ≙ reference note / CAS):
 
 * tokenization + last-wins begin dedup (timeline_delegator.py:82-119)
 * gazetteer all-spans lookup (DictionarySubPipe / DefaultTermConsumer)
@@ -25,7 +29,7 @@ from __future__ import annotations
 import datetime as dt
 import re
 from bisect import bisect_right
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from .config import PipelineConfig
 from .score import (
@@ -45,7 +49,15 @@ from .text import (
 )
 from .timex import detect_timexes, normalize_timex
 
-__all__ = ["annotate_turn", "anchor_for", "full_anchor_for", "PRINCIPAL_DATE_RE"]
+__all__ = [
+    "annotate_turn",
+    "annotate_mentions",
+    "annotate_timexes",
+    "Tokenized",
+    "anchor_for",
+    "full_anchor_for",
+    "PRINCIPAL_DATE_RE",
+]
 
 PRINCIPAL_DATE_RE = re.compile(r"Principal Date\D*(\d{8})")
 
@@ -105,83 +117,38 @@ def _tok_at_end(end_map, ends_sorted, pos: int) -> int:
     return min(i, len(ends_sorted) - 1)
 
 
-def annotate_turn(
-    conv_id: str,
-    turn_idx: int,
-    text: str,
-    ts,
-    gazetteer,
-    blacklist,
-    cfg: PipelineConfig,
-    with_timexes: bool = True,
-    with_token_rows: bool = True,
-):
-    """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes):
-    token dicts (tok_idx, begin, end, text, is_newline), mention dicts
-    (mention_idx + the union schema's mention columns) and timex dicts
-    (timex_idx + begin, end, tok_begin, tok_end, surface, kind, normed).
+class Tokenized(NamedTuple):
+    """One turn's single tokenization, shared by the mention and timex
+    halves. ``inverse`` holds the char-offset -> token-index maps (see
+    ``_inverse_token_maps``), or None until a half that needs them runs."""
 
-    ``with_timexes=False`` skips timex detection+normalization entirely
-    (returns an empty timex list) — the fast path for consumers that only
-    read mentions (cross-turn edges, rollups, canonicalization; detection
-    is ~35% of per-turn CPU). Mention rows are identical either way — only
-    the downstream W1 id window mixes timexes into mention ids.
+    tokens: list
+    token_map: list
+    newline_flags: list
+    inverse: Optional[tuple] = None
 
-    Mentions are RAW (pre TUI/blacklist/conmod filtering): the structured
-    Spark path applies F1/F2/F4 as visible DataFrame operators; the fused
-    path and the oracle apply them via the same predicates in Python. The
-    blacklist is consulted here only by callers that request fused filtering.
-    """
+
+def _inverse_token_maps(token_map):
+    """(begin_map, end_map, begins_sorted, ends_sorted): the maps from char
+    offsets back to token indices. They serve only timex token offsets and
+    the conmod covering-sentence lookup."""
+    begin_map, end_map = invert_token_map(token_map)
+    return begin_map, end_map, [b for b, _ in token_map], [e for _, e in token_map]
+
+
+def annotate_mentions(text: str, ts, gazetteer, cfg: PipelineConfig):
+    """The mention half of ``annotate_turn``: tokenize once, look up the
+    gazetteer and build the mention dicts. Returns (anchor_date, Tokenized,
+    mention dicts); pass the Tokenized on to ``annotate_timexes`` so the
+    turn is never tokenized twice."""
     text = text or ""
     anchor = anchor_for(ts, text)
-    anchor_full = full_anchor_for(ts, anchor)
     tokens, token_map, newline_flags = tokenize(text)
     n = len(tokens)
-    # the inverse maps serve only timex token-offset mapping and the conmod
-    # covering-sentence lookup — skip the four O(n) builds when neither runs
-    if with_timexes or cfg.use_conmod:
-        begin_map, end_map = invert_token_map(token_map)
-        begins_sorted = [b for b, _ in token_map]
-        ends_sorted = [e for _, e in token_map]
+    inverse = _inverse_token_maps(token_map) if cfg.use_conmod else None
+    if inverse is not None:
+        begin_map, end_map, begins_sorted, ends_sorted = inverse
 
-    # token-row dicts are pure repackaging (~5% of per-turn CPU); callers
-    # that never read them pass False, callers that only need the raw
-    # streams (fused triple build, union annotate) pass "raw" and get
-    # (tokens, newline_flags) without the per-token dict round-trip
-    if with_token_rows == "raw":
-        token_rows = (tokens, newline_flags)
-    elif with_token_rows:
-        token_rows = [
-            {
-                "tok_idx": i,
-                "begin": token_map[i][0],
-                "end": token_map[i][1],
-                "text": tokens[i],
-                "is_newline": bool(newline_flags[i]),
-            }
-            for i in range(n)
-        ]
-    else:
-        token_rows = []
-
-    # --- timexes: detect + normalize (F6/X4/X5 live inside normalize) ---
-    timex_rows = []
-    for t_idx, t in enumerate(detect_timexes(text) if with_timexes else ()):
-        normed = normalize_timex(t["surface"], t["kind"], anchor_full)
-        timex_rows.append(
-            {
-                "timex_idx": t_idx,
-                "begin": t["begin"],
-                "end": t["end"],
-                "tok_begin": _tok_at_begin(begin_map, begins_sorted, t["begin"]) if n else 0,
-                "tok_end": _tok_at_end(end_map, ends_sorted, t["end"]) if n else 0,
-                "surface": t["surface"],
-                "kind": t["kind"],
-                "normed": normed,
-            }
-        )
-
-    # --- mentions: gazetteer lookup + per-mention context annotations ---
     # dtr/conmod labels + instance strings are computed only when their
     # stage is enabled (--use_dtr / --use_conmod analogs): the reference
     # only runs those classifiers when flagged (timeline_delegator.py:
@@ -252,4 +219,94 @@ def annotate_turn(
                 "win_char_end": win_ce,
             }
         )
+    return anchor, Tokenized(tokens, token_map, newline_flags, inverse), mention_rows
+
+
+def annotate_timexes(text: str, ts, anchor, tokenized: Tokenized):
+    """The timex half of ``annotate_turn``: detect + normalize (F6/X4/X5
+    live inside normalize) over the turn's existing tokenization, mapping
+    each timex to token offsets. Returns the timex dicts."""
+    text = text or ""
+    anchor_full = full_anchor_for(ts, anchor)
+    n = len(tokenized.tokens)
+    inverse = tokenized.inverse or _inverse_token_maps(tokenized.token_map)
+    begin_map, end_map, begins_sorted, ends_sorted = inverse
+    timex_rows = []
+    for t_idx, t in enumerate(detect_timexes(text)):
+        normed = normalize_timex(t["surface"], t["kind"], anchor_full)
+        timex_rows.append(
+            {
+                "timex_idx": t_idx,
+                "begin": t["begin"],
+                "end": t["end"],
+                "tok_begin": _tok_at_begin(begin_map, begins_sorted, t["begin"]) if n else 0,
+                "tok_end": _tok_at_end(end_map, ends_sorted, t["end"]) if n else 0,
+                "surface": t["surface"],
+                "kind": t["kind"],
+                "normed": normed,
+            }
+        )
+    return timex_rows
+
+
+def annotate_turn(
+    conv_id: str,
+    turn_idx: int,
+    text: str,
+    ts,
+    gazetteer,
+    blacklist,
+    cfg: PipelineConfig,
+    with_timexes: bool = True,
+    with_token_rows: bool = True,
+):
+    """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes):
+    token dicts (tok_idx, begin, end, text, is_newline), mention dicts
+    (mention_idx + the union schema's mention columns) and timex dicts
+    (timex_idx + begin, end, tok_begin, tok_end, surface, kind, normed).
+
+    The two halves, ``annotate_mentions`` and ``annotate_timexes``, share
+    one tokenization. ``annotate_turn`` always runs both (unless
+    ``with_timexes=False``), because the structured path's timex tables
+    serve consumers beyond the mention-gated triples; the fused
+    ``pair.turn_triples`` calls the halves itself and runs the timex half
+    only for turns whose mentions survive F1/F2/F4 (the O1 gate).
+
+    ``with_timexes=False`` skips timex detection+normalization entirely
+    (returns an empty timex list) — the fast path for consumers that only
+    read mentions (cross-turn edges, rollups, canonicalization; detection
+    is ~35% of per-turn CPU). Mention rows are identical either way — only
+    the downstream W1 id window mixes timexes into mention ids.
+
+    Mentions are RAW (pre TUI/blacklist/conmod filtering): the structured
+    Spark path applies F1/F2/F4 as visible DataFrame operators; the fused
+    path and the oracle apply them via the same predicates in Python. The
+    blacklist is consulted here only by callers that request fused filtering.
+    """
+    anchor, tokenized, mention_rows = annotate_mentions(text, ts, gazetteer, cfg)
+    tokens, token_map, newline_flags, _ = tokenized
+
+    # token-row dicts are pure repackaging (~5% of per-turn CPU); callers
+    # that never read them pass False, callers that only need the raw
+    # streams (union annotate) pass "raw" and get (tokens, newline_flags)
+    # without the per-token dict round-trip
+    if with_token_rows == "raw":
+        token_rows = (tokens, newline_flags)
+    elif with_token_rows:
+        token_rows = [
+            {
+                "tok_idx": i,
+                "begin": token_map[i][0],
+                "end": token_map[i][1],
+                "text": tokens[i],
+                "is_newline": bool(newline_flags[i]),
+            }
+            for i in range(len(tokens))
+        ]
+    else:
+        token_rows = []
+
+    timex_rows = (
+        annotate_timexes(text, ts, anchor, tokenized) if with_timexes else []
+    )
     return anchor, token_rows, mention_rows, timex_rows

@@ -139,8 +139,12 @@ def filter_union(
     is_timex = F.col("kind_rank") == 1
     out = union.where(~is_mention | (F.col("tui") == F.lit(cfg.keep_tui)))
     if blacklist:
+        # with Arrow on (kgpipe sessions) a pandas frame becomes a
+        # LocalRelation, so its broadcast is a JVM-only job; a list of
+        # tuples would start Python workers to unpickle it before every
+        # structured annotate stage
         bl_df = spark.createDataFrame(
-            [(t,) for t in sorted(blacklist)], "bl_term string"
+            pd.DataFrame({"bl_term": sorted(blacklist)}), "bl_term string"
         )
         out = out.join(
             F.broadcast(bl_df),

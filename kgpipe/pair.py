@@ -16,7 +16,8 @@ rule (X8, timeline_delegator.py:449-455).
 ``turn_triples`` is the fused per-turn equivalent (zero-shuffle path): one
 call produces ALL triples for a turn — tlink, entity-mention, doc-time-rel
 (opt-in), speaker-attribution, tool-invocation — with identical results to
-the structured path (equality-tested).
+the structured path (equality-tested). It detects timexes only in turns
+with a surviving mention (the O1 gate).
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .annotate import annotate_turn
+from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .schemas import TRIPLE_SCHEMA
 from .score import (
@@ -362,11 +363,15 @@ def turn_triples(
 ) -> List[dict]:
     """All triples for one turn (fused path). Mirrors the structured
     DataFrame algebra exactly; the equality of the two paths is a pytest
-    invariant."""
-    anchor, (toks_raw, nl_raw), mention_rows, timex_rows = annotate_turn(
-        conv_id, turn_idx, text, ts, gazetteer, blacklist, cfg,
-        with_token_rows="raw",
-    )
+    invariant.
+
+    Order of work follows the reference's O1 gate (TimeMentionNormalizer.
+    java:104-117): tokenize + gazetteer + mention rows, then F1/F2/F4, then
+    the F3 early return, and only for a turn with a surviving mention the
+    timex half (detect + normalize) over the same tokenization. A turn
+    without one yields only its speaker/tool triples, so detecting its
+    timexes would be work whose output is thrown away."""
+    anchor, tokenized, mention_rows = annotate_mentions(text, ts, gazetteer, cfg)
     note = f"{conv_id}_{turn_idx}"
     out: List[dict] = []
 
@@ -393,8 +398,9 @@ def turn_triples(
         and m["surface"].strip().lower() not in blacklist
         and (not cfg.use_conmod or m["conmod"] == "ACTUAL")
     ]
-    if not positive:  # F3 empty-doc skip
+    if not positive:  # F3 empty-doc skip; O1: no timex work for this turn
         return out
+    timex_rows = annotate_timexes(text, ts, anchor, tokenized)
     relevant = [t for t in timex_rows if t["normed"] is not None]  # F5
 
     # W1 annotation ids: mentions ∪ timexes, stable sort by begin
@@ -406,7 +412,7 @@ def turn_triples(
     for rank, (_, kind, i) in enumerate(ann):
         ids[(kind, i)] = f"{rank}@e@{note}@system"
 
-    tokens = tokens_for_mode(toks_raw, nl_raw, "dtr")
+    tokens = tokens_for_mode(tokenized.tokens, tokenized.newline_flags, "dtr")
     # the (normed, anchor) -> label map is per-TIMEX, not per-pair: compute
     # once per turn instead of once per (mention, timex) combination
     label_by_timex = [tlink_label(t["normed"], anchor) for t in relevant]

@@ -25,9 +25,13 @@ it, so the annotate pass and the W1 window run once per graph build.
 
 The O1 semi-join gate (normalize timexes only for turns that have a
 surviving entity mention — TimeMentionNormalizer.java:104-117,
-Timelines.piper:32-35) is inherent here: annotation runs in one fused pass
-per turn, and downstream joins are inner on turns with mentions, so
-timex-only turns never reach pairing/scoring.
+Timelines.piper:32-35) holds on both plans. The fused path applies it
+explicitly: ``pair.turn_triples`` runs F1/F2/F4 on the turn's mentions,
+returns early when none survives, and only then detects and normalizes the
+turn's timexes. The structured path detects timexes in every turn (the
+``build_annotations`` timex tables serve other consumers), and its
+downstream joins are inner on turns with mentions, so timex-only turns
+never reach pairing/scoring.
 """
 
 from __future__ import annotations

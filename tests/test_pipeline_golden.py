@@ -148,6 +148,80 @@ def test_empty_and_degenerate_inputs(spark, gazetteer, blacklist):
     assert build_triples(empty, gazetteer, blacklist, PipelineConfig(), fused=True).count() == 0
 
 
+# O1 gate battery: every turn carries timexes, and only the last two can
+# have a mention that survives F1/F2(/F4). (text, has a ts, gated under
+# the default config, gated under use_conmod)
+_O1_BATTERY = [
+    # no gazetteer term at all
+    ("rerun the loader on 3/5/2024 and again tomorrow", True, True, True),
+    # only blacklisted terms (F2)
+    ("Ice applied on 3/5/2024, cap removed 2 days ago", True, True, True),
+    # only non-T061 terms (F1)
+    ("aspirin given yesterday, glucose checked on 3/1/2024", True, True, True),
+    # one T061 mention, HYPOTHETICAL: positive unless the F4 gate is on
+    ("if cisplatin is needed we start on 3/5/2024", True, False, True),
+    # one positive mention; no ts, so the anchor comes from the header
+    ("Principal Date 20240301\nstarted folfox on 3/5/2024, 2 weeks ago",
+     False, False, False),
+]
+
+
+@pytest.mark.parametrize("use_dtr,use_conmod", [(False, False), (True, True)])
+def test_fused_o1_gate_skips_timex_work(
+    spark, gazetteer, blacklist, monkeypatch, use_dtr, use_conmod
+):
+    """turn_triples detects timexes only for turns with a surviving mention
+    (TimeMentionNormalizer.java:104-117) and tokenizes each turn once, with
+    output equal to the oracle row for row and to the structured plan."""
+    import datetime as dt
+
+    import kgpipe.annotate as annotate_mod
+    from kgpipe.pair import turn_triples
+    from kgpipe.schemas import TRANSCRIPTS_SCHEMA
+
+    from .oracle_ref import process_turn
+
+    cfg = PipelineConfig(use_dtr=use_dtr, use_conmod=use_conmod)
+    ts0 = dt.datetime(2024, 3, 10, 9, 30)
+    rows = [
+        ("cO1", i, "user", None, ts0 if has_ts else None, text)
+        for i, (text, has_ts, _, _) in enumerate(_O1_BATTERY)
+    ]
+    calls = {"tokenize": 0, "detect_timexes": 0}
+
+    def counting(name):
+        real = getattr(annotate_mod, name)
+
+        def wrapped(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+
+        return wrapped
+
+    for name in calls:
+        monkeypatch.setattr(annotate_mod, name, counting(name))
+
+    for (c, i, role, tool, ts, text), (_, _, gated, gated_conmod) in zip(rows, _O1_BATTERY):
+        for name in calls:
+            calls[name] = 0
+        got = turn_triples(c, i, role, tool, ts, text, gazetteer, blacklist, cfg)
+        assert got == process_turn(c, i, role, tool, ts, text, gazetteer, blacklist, cfg)
+        is_gated = gated_conmod if use_conmod else gated
+        assert calls == {"tokenize": 1, "detect_timexes": 0 if is_gated else 1}, (i, calls)
+        has_mention = any(t["pred"] == "entity-mention" for t in got)
+        assert has_mention != is_gated, (i, got)
+
+    monkeypatch.undo()
+    df = spark.createDataFrame(
+        [(c, i, role, text, tool, ts) for c, i, role, tool, ts, text in rows],
+        TRANSCRIPTS_SCHEMA,
+    )
+    s = build_triples(df, gazetteer, blacklist, cfg, fused=False).toPandas()
+    f = build_triples(df, gazetteer, blacklist, cfg, fused=True).toPandas()
+    assert _canon_frame(s).equals(_canon_frame(f))
+    assert (s.pred == "entity-mention").any()
+
+
 def test_ntriples_serialization_and_escaping(spark):
     from kgpipe.pipeline import ntriples_view
 
