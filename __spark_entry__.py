@@ -1991,9 +1991,12 @@ FROM e2
 # BIGINT floor, so iteration results are bit-equal regardless of summation
 # order; 3 unrolled iterations over the distinct directed cross-turn edges.
 def _pagerank_oracle(iters: int = 3, damping_pct: int = 85, scale: int = 10**12) -> str:
+    """The edge CTEs are MATERIALIZED, as in ``_cc_rounds_sql``: without the
+    hint DuckDB inlines the cross-turn edge derivation at every reference
+    and runs out of memory at sf0.1."""
     head = f"""
-WITH edges AS ({_ORACLE_CROSS_EDGES}),
-eg AS (SELECT DISTINCT src, dst FROM edges),
+WITH edges AS MATERIALIZED ({_ORACLE_CROSS_EDGES}),
+eg AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
 pnodes AS (
   SELECT DISTINCT node FROM (
     SELECT src AS node FROM eg UNION ALL SELECT dst AS node FROM eg

@@ -4,7 +4,8 @@ Replaces two reference components with deterministic, dependency-free rules:
 
 * detection — the reference's SVM ``BackwardsTimeAnnotator`` (Timelines.piper:30;
   model jar stripped from the repo) -> an ordered regex battery emitting
-  longest non-overlapping spans;
+  longest non-overlapping spans, behind gates derived from the patterns
+  (see below);
 * normalization — ``TimeMentionNormalizer`` rule fast-path + timenorm SCFG
   (TimeMentionNormalizer.java:162-234, TemporalExpressionParser.scala) -> the
   fast path reproduced exactly (3 all-numeric slash parts, American
@@ -21,14 +22,25 @@ empty-string-on-timeout behavior (TimeMentionNormalizer.java:199-213).
 
 TimeML value formatting follows Temporal.scala:325-355: day -> YYYY-MM-DD,
 ISO week -> YYYY-Www, month -> YYYY-MM, year -> YYYY.
+
+Detection gates come from the patterns' own parse trees
+(``kgpipe.regex_gate``), not from hand-kept tables: a pattern runs only if
+its literal gate (a CNF of one-word literals every match satisfies, tested
+per word on text folded as ``re.IGNORECASE`` folds it) holds, and one whose
+matches hold a digit within a few words scans only that window around the
+text's digits. The indicator-window kinds (``_REGION_BOUNDED``) keep
+hand-set margins, held to a full scan by a differential test.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import math
 import re
 from functools import lru_cache
 from typing import List, NamedTuple, Optional, Tuple
+
+from . import regex_gate
 
 __all__ = [
     "detect_timexes",
@@ -60,13 +72,6 @@ _MONTH_FULL_NO_MAY_ALT = "|".join(
 _MONTH_ABBR_ALT = "|".join(
     sorted((m for m in _MONTHS if m not in _MONTH_FULL), key=len, reverse=True)
 )
-# every month token (full or abbreviated) contains one of the 12
-# three-letter abbreviations as a substring — the necessary-condition
-# prefilter for the month patterns
-_MONTH_QUICK = (
-    "jan", "feb", "mar", "apr", "may", "jun", "jul", "aug", "sep",
-    "oct", "nov", "dec",
-)
 
 _WEEKDAYS = {
     "monday": 0, "tuesday": 1, "wednesday": 2, "thursday": 3,
@@ -85,7 +90,6 @@ _WEEKDAY_ABBRS = {
 }
 _WEEKDAYS_ANY = {**_WEEKDAYS, **_WEEKDAY_ABBRS}
 _WEEKDAY_ANY_ALT = "|".join(sorted(_WEEKDAYS_ANY, key=len, reverse=True))
-_WEEKDAY_ANY_KEYS = tuple(_WEEKDAYS_ANY)
 
 _UNIT_WORDS = {
     "one": 1, "two": 2, "three": 3, "four": 4, "five": 5,
@@ -164,9 +168,9 @@ _CLOCK_AT_ALT = (
     r"|noon|midday|midnight"
 )
 # the worded-AMPM clock lives in its OWN composition pattern
-# (date_at_time_word) so date_at_time's quick keys stay am/pm/colon/noon —
-# folding it into _CLOCK_AT_ALT would force time-of-day words into
-# date_at_time's first-level prefilter and run that large regex on every
+# (date_at_time_word) so date_at_time's literal gate stays am/pm/colon/noon —
+# folding it into _CLOCK_AT_ALT would put time-of-day words into
+# date_at_time's gate clauses and run that large regex on every
 # text mentioning a morning/afternoon/evening (measured +18% per-turn
 # detection cost on tod-heavy text)
 _CLOCK_WORD_ALT = r"\d{1,2}\s+in\s+the\s+(?:morning|afternoon|evening)"
@@ -1076,244 +1080,9 @@ TIMEX_PATTERNS: List[Tuple[str, re.Pattern]] = [
 
 _DIGIT_RE = re.compile(r"\d")
 
-# Cheap necessary-condition prefilters: a pattern's regex can only match if
-# one of these lowercase substrings occurs (or any digit, for "digit") —
-# C-speed `in` scans replace full regex scans for the common no-hit case.
-_QUICK_KEYS = {
-    "iso_date": "digit",
-    "slash_date": ("/",),
-    # month patterns need a month WORD, not just a digit — every corpus
-    # turn carries digits (dates), so the word check is the discriminating
-    # prefilter; the 12 abbreviations are substrings of their full names
-    "month_day_year": _MONTH_QUICK,
-    "weekday_date": _WEEKDAY_ANY_KEYS,
-    "month_year": _MONTH_QUICK,
-    "month_day": _MONTH_QUICK,
-    "holiday": (
-        "christmas", "xmas", "halloween", "thanksgiving", "election", "year",
-        "easter",
-    ),
-    "ago": ("ago", "earlier"),
-    "month_rel_year": ("year",),
-    "word_decade": (
-        "twenties", "thirties", "forties", "fifties",
-        "sixties", "seventies", "eighties", "nineties",
-    ),
-    "word_year": ("nineteen", "twenty"),
-    "frac_period": ("half",),
-    "span_set": ("each", "every"),
-    "day_of_month": _MONTH_QUICK,
-    "vague_period": ("couple", "few", "several"),
-    "first_period": ("first",),
-    "freq_set": ("once", "twice", "thrice", "times"),
-    "period_phrase": ("period",),
-    "recent_period": ("recent", "early", "first"),
-    # every alternative contains one: less/more/no-more THAN, at LEAST,
-    # or one of the single-word modifiers
-    "period_mod": (
-        "than", "least", "nearly", "over", "about", "around", "almost",
-    ),
-    "frac_slash": ("/",),
-    "in_n": ("in",),
-    "day_offset": ("day",),
-    # every match spells am/pm (optionally dotted) — "example" false-hits
-    # the substring check, which is fine for a necessary-condition filter
-    "clock_time": ("am", "pm", "a.m", "p.m"),
-    "noon_midnight": ("noon", "midday", "midnight"),
-    "clock_24h": (":",),
-    "date_at_time": (
-        "am", "pm", "a.m", "p.m", ":", "noon", "midday", "midnight",
-    ),
-    "date_at_time_word": ("morning", "afternoon", "evening"),
-    "hour_ampm_word": ("morning", "afternoon", "evening"),
-    "half_unit": ("half",),
-    "from_now": ("now",),
-    # NB: quarter_year is NOT digit-region-bounded — "first quarter of 2021"
-    # extends 3 words left of its first digit
-    "quarter_year": ("quarter", "q1", "q2", "q3", "q4"),
-    "bare_quarter": ("quarter", "q1", "q2", "q3", "q4"),
-    "week_of": ("week",),
-    "unit_of": ("month", "year"),
-    "unit_enclosing": ("week", "month", "quarter", "period"),
-    "mod_in_span": ("earlier", "later", "part"),
-    "tod_rel_day": ("yesterday", "today", "tomorrow"),
-    "mod_tod": ("morning", "afternoon", "evening", "night"),
-    "weekday_tod": ("morning", "afternoon", "evening", "night"),
-    "partial_rel_unit": ("this", "last", "next"),
-    "season_set": (
-        "spring", "summer", "fall", "autumn", "winter", "quarters",
-    ),
-    "season_year": ("spring", "summer", "fall", "autumn", "winter"),
-    "rel_season": ("spring", "summer", "fall", "autumn", "winter"),
-    "decade": ("0s",),
-    "century": ("century",),
-    "weekend": ("weekend",),
-    # prefilter only — "mid" also hits "midnight" etc.; the regex decides
-    "modified": (
-        "early", "mid", "late", "middle", "about", "around", "almost",
-        "post",
-    ),
-    "suffix_modified": ("later", "earlier", "beyond", "before"),
-    "bound_unit": ("beginning", "start", "end"),
-    "counted_tod_drop": ("mornings", "afternoons", "evenings", "nights"),
-    "tod_set": ("morning", "afternoon", "evening", "night"),
-    "weekday_tod_set": ("mornings", "afternoons", "evenings", "nights"),
-    "tod_of_date": ("morning", "afternoon", "evening", "night"),
-    "period_offset_date": ("before", "after"),
-    # "tonight" contains the substring "night"
-    "time_of_day": ("morning", "afternoon", "evening", "night"),
-    "period_set": (
-        "every", "each", "hourly", "daily", "weekly", "monthly",
-        "quarterly", "yearly", "annually",
-    ),
-    "rel_unit": (
-        "last", "next", "this", "following", "preceding", "coming", "past",
-        "previous", "current", "latest", "that",
-    ),
-    "rel_weekday": (
-        "last", "next", "following", "preceding", "coming", "past",
-        "previous", "this", "that",
-    ),
-    "rel_month": (
-        "last", "next", "following", "coming", "past", "previous",
-        "this", "that",
-    ),
-    "weekday": (
-        "monday", "tuesday", "wednesday", "thursday",
-        "friday", "saturday", "sunday",
-    ),
-    "rel_day": ("yesterday", "today", "tomorrow"),
-    "unspecified_period": ("while", "time", "lengthy"),
-    # branch 1 ("... or so") needs "so"; branch 2 ("up to ...") needs "up"
-    "period_approx": ("so", "up"),
-    "ago_partial": ("ago",),
-    # the apostrophe alone: "'s" would miss the grammar's spaced "' s" form
-    "year_possessive": ("'",),
-    "past_ref": ("recently", "previously", "formerly", "past"),
-    "future_ref": ("soon", "eventually", "future", "later"),
-    "present_ref": (
-        "currently", "presently", "present", "now", "days", "moment",
-    ),
-    "bare_year": "digit",
-}
-
-
-# Quick-key invariant: every substring is a single word — the regexes all
-# accept \s+ between words, so a multi-word key ("end of") would silently
-# drop matches whose words are separated by a newline or double space.
-# "a.m"/"p.m" carry no whitespace (the clock regex allows none inside).
-for _kind, _quick in _QUICK_KEYS.items():
-    if _quick != "digit":
-        for _k in _quick:
-            assert not any(c.isspace() for c in _k), (
-                f"multi-word quick key {_k!r} for {_kind} — prefilters must "
-                "not span ANY whitespace (the per-word memoized presence "
-                "scan splits on every whitespace character)"
-            )
-
-# Deduplicated prefilter plan: many patterns share substrings ("last",
-# "every", ...), so detect_timexes scans each DISTINCT substring once per
-# text and then gates each pattern with a C-speed isdisjoint — instead of
-# one short-circuiting any() generator per pattern (which re-scans shared
-# keys and pays a generator frame per pattern per text).
-_QUICK_SETS = {
-    k: frozenset(v) for k, v in _QUICK_KEYS.items() if v != "digit"
-}
-
-# Second-level prefilters (AND semantics): these patterns require a word
-# from their _QUICK_KEYS set AND one from this set — e.g. rel_unit needs
-# a rel word ("last", common) AND a unit word; partial_rel_unit needs
-# this/last/next AND a weekday/quarter/season word. The first-level keys
-# alone are everyday words, so the conjunction skips the regex on most
-# texts. Same single-word invariant as _QUICK_KEYS; each entry is a
-# NECESSARY condition (every alternative of the pattern contains one).
-_UNIT_KEYS = ("hour", "day", "week", "month", "year", "quarter")
-_WEEKDAY_KEYS = tuple(_WEEKDAYS)
-_SEASON_KEYS = ("spring", "summer", "fall", "autumn", "winter")
-_QUICK_KEYS2 = {
-    "rel_unit": _UNIT_KEYS,
-    "partial_rel_unit": (
-        _WEEKDAY_KEYS + ("quarter", "q1", "q2", "q3", "q4") + _SEASON_KEYS
-    ),
-    "unit_enclosing": ("ago", "last", "this", "next"),
-    "mod_in_span": ("week", "month", "year", "quarter", "19", "20"),
-    "tod_rel_day": ("morning", "afternoon", "evening", "night"),
-    "mod_tod": ("early", "mid", "late"),
-    "date_at_time": (
-        ("yesterday", "today", "tomorrow", "tonight", "night", "morning",
-         "afternoon", "evening", "day", "week", "month", "year", "/", "-")
-        + _WEEKDAY_KEYS + _MONTH_QUICK
-    ),
-    "ago_partial": ("year", "years"),
-    "hour_ampm_word": ("in",),
-    "date_at_time_word": ("in",),
-    "weekday_tod": _WEEKDAY_ANY_KEYS,
-    "weekday_tod_set": _WEEKDAY_KEYS,
-    "rel_weekday": _WEEKDAY_ANY_KEYS,
-    "weekday_date": _MONTH_QUICK + ("/", "-"),
-    "rel_month": _MONTH_QUICK,
-    "month_rel_year": _MONTH_QUICK,
-    "day_offset": ("before", "after"),
-    "period_offset_date": ("day", "week", "month", "year"),
-    "first_period": ("minute", "hour", "day", "week", "month", "year"),
-    "period_phrase": ("minute", "hour", "day", "week", "month", "year"),
-    "freq_set": ("minute", "hour", "day", "week", "month", "year"),
-    "week_of": ("of",),
-    "unit_of": ("of", "year"),
-    "tod_of_date": ("of",),
-    "bound_unit": ("of", "end"),
-    "suffix_modified": ("19", "20"),
-    "season_set": (
-        "every", "each", "past", "summers", "autumns", "winters",
-        "springs", "falls", "quarters",
-    ),
-    "vague_period": (
-        "minute", "hour", "day", "week", "month", "year",
-    ),
-    # "in" / "so" / "every" are everywhere; the unit word is the
-    # discriminating conjunct ("centur" covers century/centuries)
-    "in_n": (
-        "second", "minute", "hour", "day", "week", "month", "year",
-        "decade", "centur",
-    ),
-    "from_now": (
-        "second", "minute", "hour", "day", "week", "month", "year",
-        "decade", "centur",
-    ),
-    "period_approx": (
-        "minute", "hour", "day", "week", "month", "year",
-    ),
-    "period_mod": (
-        "second", "minute", "hour", "day", "week", "month", "year",
-    ),
-    "frac_slash": (
-        "second", "minute", "hour", "day", "week", "month", "year",
-    ),
-    "recent_period": (
-        "minute", "hour", "day", "week", "month", "year",
-    ),
-    "period_set": (
-        "other", "second", "minute", "hour", "day", "week", "month",
-        "year", "hourly", "daily", "weekly", "monthly", "quarterly",
-        "yearly", "annually",
-    ),
-    "span_set": _MONTH_QUICK + _WEEKDAY_KEYS + ("weekend",),
-    "modified": _MONTH_QUICK + (
-        "0s", "19", "20", "spring", "summer", "fall", "autumn", "winter",
-        "last", "next", "this",
-    ),
-}
-for _kind, _quick in _QUICK_KEYS2.items():
-    assert _kind in _QUICK_KEYS, _kind
-    for _k in _quick:
-        assert not any(c.isspace() for c in _k), (
-            f"multi-word second-level quick key {_k!r} for {_kind}"
-        )
-_QUICK_SETS2 = {k: frozenset(v) for k, v in _QUICK_KEYS2.items()}
-_QUICK_SUBSTRINGS = tuple(sorted(
-    set().union(*_QUICK_SETS.values()) | set().union(*_QUICK_SETS2.values())
-))
-
+# each kind's literal gate (one bit per distinct clause) and digit reach,
+# derived from the patterns themselves
+_GATES = regex_gate.battery_gates(TIMEX_PATTERNS)
 
 # tokens longer than this bypass the cache: real vocabulary words are
 # short, while long unique tokens (URLs, hashes, base64 blobs in tool
@@ -1321,70 +1090,15 @@ _QUICK_SUBSTRINGS = tuple(sorted(
 # bookkeeping on top of the probe
 _MAX_CACHED_WORD = 24
 
-# str.lower() applies the one unconditional multi-char Unicode lowercase
-# special case ('İ' U+0130 -> 'i' + combining dot) while re.IGNORECASE uses
-# simple per-char folding ('İ' matches pattern 'i') — so a lowered copy of
-# "FRİDAY" does not contain the substring "friday" although the weekday
-# regex matches it. Folding U+0130 to plain 'i' BEFORE lowering makes the
-# substring prefilter exactly as permissive as the re.I patterns it gates.
-_SIMPLE_FOLD = str.maketrans({"İ": "i"})
-
-
-def _fold_lower(s: str) -> str:
-    """Lowercase with re.IGNORECASE-compatible (simple) case folding."""
-    return s.translate(_SIMPLE_FOLD).lower()
-
 
 @lru_cache(maxsize=65536)
-def _word_quick_keys(word: str) -> frozenset:
-    """Quick-key substrings present in one (fold-lowered) whitespace
-    token. Memoized across calls — see the detect_timexes prefilter."""
-    return frozenset(k for k in _QUICK_SUBSTRINGS if k in word)
-
-
-# Patterns whose every match contains at least one digit AND extends at most
-# _DIGIT_LEFT_WORDS whitespace-words left of its first digit ("september 5,
-# 2021": one month word) and 0 chars right of its last digit (all five end
-# on \d\b). Their finditer can scan just the digit region instead of the
-# whole text.
-_DIGIT_BOUNDED = {
-    "iso_date", "slash_date", "month_day_year", "month_year", "bare_year",
-    # "summer of 2019": 2 words left of first digit; "the 1990s"/"the '90s":
-    # 1 word left, trailing "s" inside the +4-char right margin;
-    # "March 5(th)": 1 word left, ordinal suffix inside the right margin
-    "season_year", "decade", "month_day",
-    # "friday(,) march 5(th)(, 2021)" / "friday 3/5/2021" / "friday
-    # 2021-03-05": every alternative requires a digit; max reach left of
-    # the first digit is weekday word + detached comma + month word = 3
-    # whitespace-words ("friday , march 5": the \s*,? lets the comma stand
-    # alone), and every match ends on \d or an ordinal suffix inside the
-    # +4-char right margin
-    "weekday_date",
-}
-# the widest left reach of any _DIGIT_BOUNDED pattern (weekday_date above)
-_DIGIT_LEFT_WORDS = 3
-
-
-def _digit_region(text: str, first: int, last_end: int) -> Tuple[int, int]:
-    """Word-aligned window around [first digit, last digit): step left over
-    _DIGIT_LEFT_WORDS whitespace gaps (so the region never starts mid-word —
-    slicing at a word boundary preserves \\b semantics), keep >=4 chars of
-    right context (\\b after the final digit only inspects the next char)."""
-    start = first
-    gaps = 0
-    in_space = False
-    while start > 0 and gaps <= _DIGIT_LEFT_WORDS:
-        start -= 1
-        if text[start].isspace():
-            if not in_space:  # count word gaps, not whitespace chars
-                gaps += 1
-                if gaps > _DIGIT_LEFT_WORDS:
-                    start += 1
-                    break
-            in_space = True
-        else:
-            in_space = False
-    return start, min(len(text), last_end + 4)
+def _word_quick_keys(word: str) -> int:
+    """Mask of the gate clauses one folded whitespace token satisfies."""
+    mask = 0
+    for lit, clauses in _GATES.literals:
+        if lit in word:
+            mask |= clauses
+    return mask
 
 
 def _word_region(
@@ -1426,7 +1140,7 @@ def _word_region(
 
 # Region-bounded patterns: each can only match within a few words of a
 # RARE indicator token (a clock, a fraction slash, an or-so/up-to
-# connective), while its quick-key prefilters pass on far more texts
+# connective), while its literal gate passes on far more texts
 # than can actually match (":" and "am"-as-substring appear throughout
 # the corpus). Scanning word-aligned windows around the indicators
 # instead of the whole text cuts the dominant per-turn regex cost; a
@@ -1491,9 +1205,8 @@ def _bounded_windows(text: str, kind: str) -> List[Tuple[int, int]]:
 
 # --- word-level indicator-presence gate for the region-bounded kinds ---
 #
-# The generic quick keys are SUBSTRING tests ("am" hits "example"/"team",
-# "part" hits "particular"), so the region-bounded kinds ran their
-# indicator finditer on 55-80% of turns and found windows on almost none.
+# The literal gates pass on substrings ("am" in "example", "part" in
+# "particular"), so alone they would run the indicator scans on most turns.
 # Every region-bounded indicator is whitespace-free (asserted below), so an
 # indicator match in the text lies wholly inside one whitespace token, with
 # its word-boundary lookarounds evaluating identically in the token as in
@@ -1503,7 +1216,7 @@ def _bounded_windows(text: str, kind: str) -> List[Tuple[int, int]]:
 # be skipped EXACTLY. Multi-word indicators (or+so, up+to, part+of,
 # earlier/later+in, digit+in+the) decompose into per-token conditions
 # AND-ed per alternative; per-token results are lru-memoized like the
-# quick keys.
+# literal-gate clauses.
 # Per-token conditions are evaluated on the ORIGINAL-case token with the
 # same `re.I` engine the indicators use: `str.lower()` applies FULL case
 # folding (e.g. 'İ' -> 'i' + combining dot) while `re.IGNORECASE` applies
@@ -1579,9 +1292,10 @@ def _word_indicator_bits(word: str) -> frozenset:
 
 @lru_cache(maxsize=65536)
 def _word_prefilters(word: str):
-    """(quick-key set, indicator-bit set) of one ORIGINAL-case whitespace
-    token — the fused per-word memo detect_timexes unions per turn."""
-    return _word_quick_keys(_fold_lower(word)), _word_indicator_bits(word)
+    """(gate-clause mask, indicator-bit set) of one ORIGINAL-case
+    whitespace token — the fused per-word memo detect_timexes unions per
+    turn."""
+    return _word_quick_keys(regex_gate.fold(word)), _word_indicator_bits(word)
 
 
 def _region_kind_possible(kind: str, bits: frozenset, has_digit: bool) -> bool:
@@ -1617,6 +1331,43 @@ assert set(_REGION_BOUNDED) == {
 }
 
 
+# Digit-bounded kinds: every match holds a digit and touches at most
+# _DIGIT_LEFT whitespace runs before its first digit and _DIGIT_RIGHT after
+# its last (derived reach), so scanning that window around the text's
+# digits finds exactly the full scan's matches.
+_DIGIT_BOUNDED = frozenset(
+    kind for kind, reach in _GATES.reach.items()
+    if reach is not None and max(reach) < math.inf and kind not in _REGION_BOUNDED
+)
+_DIGIT_LEFT = max(_GATES.reach[k][0] for k in _DIGIT_BOUNDED)
+_DIGIT_RIGHT = max(_GATES.reach[k][1] for k in _DIGIT_BOUNDED)
+
+# (priority, kind, regex, required clauses, digit-, region-bounded)
+_SCAN_PLAN = tuple(
+    (prio, kind, pat, _GATES.need[kind], kind in _DIGIT_BOUNDED,
+     kind in _REGION_BOUNDED)
+    for prio, (kind, pat) in enumerate(TIMEX_PATTERNS)
+)
+
+
+def _text_prefilters(text: str, has_digit: bool) -> Tuple[int, set]:
+    """(satisfied gate clauses, indicator bits) of one text: unions over its
+    distinct whitespace tokens, memoized per token (every literal is one
+    word, so this equals a whole-text scan; word frequencies are Zipfian,
+    so the memo hits on most tokens)."""
+    mask = _GATES.digit_mask if has_digit else 0
+    ind_bits: set = set()
+    for w in set(text.split()):
+        if len(w) <= _MAX_CACHED_WORD:
+            qk, ib = _word_prefilters(w)
+        else:
+            qk = _word_quick_keys.__wrapped__(regex_gate.fold(w))
+            ib = _word_indicator_bits.__wrapped__(w)
+        mask |= qk
+        ind_bits |= ib
+    return mask, ind_bits
+
+
 def detect_timexes(text: str):
     """All timex spans in one turn: longest non-overlapping, earliest-first.
 
@@ -1627,54 +1378,31 @@ def detect_timexes(text: str):
     pattern in TIMEX_PATTERNS (deterministic). A later-beginning span can
     therefore lose to a shorter earlier one — patterns whose phrasings
     collide that way carry guards (e.g. past_ref's lookahead).
+
+    A pattern whose literal gate fails cannot match and is skipped; the
+    digit- and region-bounded ones scan only their windows. Both find
+    exactly the matches of a full scan (see the module docstring).
     """
     first_digit = _DIGIT_RE.search(text)
     has_digit = first_digit is not None
     if has_digit:
         last_digit_end = max(m.end() for m in _DIGIT_RE.finditer(text))
-        r_begin, r_end = _digit_region(text, first_digit.start(), last_digit_end)
-        region = text[r_begin:r_end]
-    # quick-key presence per WORD, memoized: every key is single-word
-    # (module invariant, asserted above), so the union of per-word key
-    # sets over the distinct whitespace tokens equals the whole-text
-    # substring scan — and natural-language word distributions are
-    # Zipfian, so the per-word sets cache extremely well (the 172-key
-    # scan itself was 25% of per-turn detection cost)
-    # indicator bits are computed on the ORIGINAL-case token (the
-    # conditions carry re.I themselves — see _word_indicator_bits on why
-    # lowered-string tests would be unsound under simple case folding);
-    # one fused per-word memo covers both prefilters, so the lowering and
-    # both probes run only on cache miss
-    present = set()
-    ind_bits = set()
-    for w in set(text.split()):
-        if len(w) <= _MAX_CACHED_WORD:
-            qk, ib = _word_prefilters(w)
-            present |= qk
-            ind_bits |= ib
-        else:
-            lw = _fold_lower(w)
-            present.update(k for k in _QUICK_SUBSTRINGS if k in lw)
-            ind_bits |= _word_indicator_bits.__wrapped__(w)
+        r_begin, r_end = _word_region(
+            text, first_digit.start(), last_digit_end, _DIGIT_LEFT, _DIGIT_RIGHT
+        )
+    mask, ind_bits = _text_prefilters(text, has_digit)
     candidates = []
-    for prio, (kind, pat) in enumerate(TIMEX_PATTERNS):
-        quick = _QUICK_KEYS.get(kind)
-        if quick == "digit":
-            if not has_digit:
-                continue
-        elif quick is not None and present.isdisjoint(_QUICK_SETS[kind]):
+    for prio, kind, pat, need, digit_bounded, region_bounded in _SCAN_PLAN:
+        if mask & need != need:
+            continue  # proven: some required clause holds for no word
+        if digit_bounded:
+            if has_digit:
+                for m in pat.finditer(text, r_begin, r_end):
+                    candidates.append(
+                        (m.start(), -(m.end() - m.start()), prio, m.end(), kind)
+                    )
             continue
-        quick2 = _QUICK_SETS2.get(kind)
-        if quick2 is not None and present.isdisjoint(quick2):
-            continue
-        if has_digit and kind in _DIGIT_BOUNDED:
-            for m in pat.finditer(region):
-                candidates.append((
-                    r_begin + m.start(), -(m.end() - m.start()), prio,
-                    r_begin + m.end(), kind,
-                ))
-            continue
-        if kind in _REGION_BOUNDED:
+        if region_bounded:
             if not _region_kind_possible(kind, ind_bits, has_digit):
                 continue  # proven: the indicator scan would find nothing
             for b, e in _bounded_windows(text, kind):

@@ -711,15 +711,15 @@ def test_frac_period_plural_inversion():
 
 
 def test_quick_keys_never_span_whitespace():
-    # prefilter substrings must be single words: the regexes accept \s+
-    # between words, so a multi-word key would silently drop matches whose
-    # words wrap across a newline or double space
-    from kgpipe.timex import _QUICK_KEYS
+    # gate literals must be single words: the regexes accept \s+ between
+    # words, so a multi-word literal would silently drop matches whose
+    # words wrap across a newline or double space (the per-word memo
+    # splits on every whitespace character)
+    from kgpipe.timex import _GATES
 
-    for kind, quick in _QUICK_KEYS.items():
-        if quick == "digit":
-            continue
-        assert all(" " not in k for k in quick), (kind, quick)
+    assert _GATES.literals
+    for lit, _clauses in _GATES.literals:
+        assert lit and not any(c.isspace() for c in lit), lit
     # the cases that used to be dropped by multi-word keys
     for text, kind in [
         ("we meet every\nmorning", "tod_set"),
@@ -1309,6 +1309,11 @@ def test_region_bounded_scan_matches_full_scan():
         "an example of programming", "the stream of data",
         # standalone punctuation and a detached-comma weekday date
         ",", "friday , march 5",
+        # standalone , . / - and weekdays next to clocks and fractions
+        ".", "/", "-", ", . / -", "friday", "mon 3pm", "next fri at noon",
+        "tue , march 5 at 10:30", "wed . 8 p.m. -", "sat / 9 am",
+        "sunday - 2 1/2 hours / or so", "thu. up to 3 days , ago",
+        "saturday 19:30 / monday 7 am .",
     ]
     for t in cases:
         for kind, pat in pats.items():
@@ -1324,16 +1329,19 @@ def test_region_bounded_scan_matches_full_scan():
 @settings(max_examples=150, deadline=None)
 @given(st.text(alphabet=st.characters(max_codepoint=0x2FF), max_size=120))
 def test_word_memoized_prefilter_matches_whole_text_scan(t):
-    # the per-word memoized quick-key presence set must equal the
-    # whole-text substring scan — sound because every key is single-word
-    # (module invariant); fuzz includes unicode whose lower() can change
-    # length
-    from kgpipe.timex import _QUICK_SUBSTRINGS, _fold_lower, _word_quick_keys
+    # the per-word memoized gate-clause mask must equal the whole-text
+    # substring scan — sound because every gate literal is single-word;
+    # fuzz includes unicode whose lower() can change length
+    from kgpipe.regex_gate import fold
+    from kgpipe.timex import _GATES, _word_quick_keys
 
-    lower = _fold_lower(t)
-    full = {k for k in _QUICK_SUBSTRINGS if k in lower}
-    per_word = set()
-    for w in set(lower.split()):
+    folded = fold(t)
+    full = 0
+    for lit, clauses in _GATES.literals:
+        if lit in folded:
+            full |= clauses
+    per_word = 0
+    for w in set(folded.split()):
         per_word |= _word_quick_keys(w)
     assert full == per_word
 
@@ -1351,6 +1359,84 @@ def test_quick_key_gate_simple_vs_full_case_folding():
                or "FRİDAY" in s["surface"] for s in spans), spans
     # and the plain-ASCII reading is unchanged
     assert detect_timexes("see you next FRIDAY")
+
+
+def test_fold_matches_ignorecase_exhaustively():
+    # the gate fold must agree with re.IGNORECASE on every code point the
+    # engine matches to an ASCII letter: besides A-Z that is the Kelvin
+    # sign, 'İ' (which str.lower() turns into 'i' + a combining dot), and
+    # the dotless 'ı' and long 'ſ', which re matches as 'i' and 's' although
+    # lower() keeps them apart
+    import re
+    import string
+
+    from kgpipe.regex_gate import fold
+
+    everything = "".join(
+        chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF
+    )
+    matched = [m.group() for m in re.finditer(r"(?i)[a-z]", everything)]
+    assert {"İ", "ı", "ſ", "\u212a"} <= set(matched)
+    for c in matched:
+        f = fold(c)
+        assert f in string.ascii_lowercase, (hex(ord(c)), f)
+        assert re.fullmatch("(?i)" + f, c), (hex(ord(c)), f)
+
+
+def test_fold_keeps_dotless_i_and_long_s_detections():
+    # 'frıday' and 'yeſterday' match the weekday / rel_day regexes under
+    # re.IGNORECASE; a str.lower() gate dropped them, and dropped the
+    # season_year span of 'ſpring 2020'
+    from tests.test_timex_differential import _detect_full_scan
+
+    for text, kind in [
+        ("see you next frıday", "rel_weekday"),
+        ("yeſterday we met", "rel_day"),
+        ("ſpring 2020", "season_year"),
+    ]:
+        det = detect_timexes(text)
+        assert det == _detect_full_scan(text), text
+        assert [d["kind"] for d in det] == [kind], (text, det)
+
+
+def _gate_fuzz_alphabet():
+    from kgpipe.timex import _GATES
+
+    lits = [lit for lit, _ in _GATES.literals]
+    variants = [
+        v for lit in lits for v in (
+            lit.upper(), lit.replace("i", "ı"), lit.replace("s", "ſ"),
+            lit.upper().replace("I", "İ"),
+        ) if v != lit
+    ]
+    return sorted(set(
+        lits + variants + list(" \n\t,./-:'0123456789")
+        + ["  ", " , ", "5th", "2021", "1990s", "a.m.", "10:30", "3/5/2021"]
+    ))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.data())
+def test_derived_gate_is_sound(data):
+    # for every pattern, a false derived gate implies the regex cannot
+    # match: the gate is a CNF over the pattern's own literals (see
+    # kgpipe.regex_gate), evaluated per word on the folded text
+    from kgpipe.timex import (
+        _DIGIT_RE, _GATES, TIMEX_PATTERNS, _text_prefilters,
+    )
+
+    alphabet = _gate_fuzz_alphabet()
+    words = data.draw(st.lists(st.sampled_from(alphabet), max_size=12))
+    seps = data.draw(st.lists(
+        st.sampled_from(["", " ", "  ", "\n", ", ", " - ", "/"]),
+        min_size=len(words), max_size=len(words),
+    ))
+    t = "".join(w + s for w, s in zip(words, seps))
+    mask, _bits = _text_prefilters(t, _DIGIT_RE.search(t) is not None)
+    for kind, pat in TIMEX_PATTERNS:
+        need = _GATES.need[kind]
+        if mask & need != need:
+            assert pat.search(t) is None, (kind, t)
 
 
 @settings(max_examples=300, deadline=None)

@@ -1,26 +1,20 @@
-"""Differential guard for the digit-region finditer optimization: the
-region-scanned detect_timexes must equal the straightforward full-text scan
-(kept inline here as the executable spec) on seeded adversarial inputs —
-boundary-hugging dates, repeated whitespace, digit-adjacent words."""
+"""Differential guard for detect_timexes' gates and bounded scans: the
+production detector (derived literal gates, digit-region and
+indicator-window scans) must equal a plain scan of the whole battery over
+the whole text (kept inline here as the executable spec, trusting no gate)
+on seeded adversarial inputs — boundary-hugging dates, repeated
+whitespace, digit-adjacent words, punctuation and non-ASCII case."""
 
 from __future__ import annotations
 
 import random
 
-from kgpipe.timex import TIMEX_PATTERNS, _DIGIT_RE, _QUICK_KEYS, detect_timexes
+from kgpipe.timex import TIMEX_PATTERNS, detect_timexes
 
 
 def _detect_full_scan(text: str):
-    lower = text.lower()
-    has_digit = _DIGIT_RE.search(text) is not None
     candidates = []
     for prio, (kind, pat) in enumerate(TIMEX_PATTERNS):
-        quick = _QUICK_KEYS.get(kind)
-        if quick == "digit":
-            if not has_digit:
-                continue
-        elif quick is not None and not any(k in lower for k in quick):
-            continue
         for m in pat.finditer(text):
             candidates.append(
                 (m.start(), -(m.end() - m.start()), prio, m.end(), kind)
@@ -53,6 +47,11 @@ _WORDS = [
     # mod-in-span words, worded clocks) and their everyday near-misses
     "or", "so", "up", "to", "1/2", "2", "part", "earlier", "later",
     "noon", "for", "some", "today", "group", "into", "p.m.", "weeks",
+    # case folding the engine applies but str.lower() does not (dotted
+    # capital I, dotless i, long s), standalone signs, weekday abbreviations
+    "FRİDAY", "frıday", "yeſterday", "ſpring", "İn", "AGO", "-", "/",
+    "mon", "tue", "tues", "wed", "thu", "thurs", "fri", "sat", "sun",
+    "Wed.", "saturday", "q3", "21st", "century", "19:30", "8", "or so",
 ]
 _SEPS = [" ", "  ", " \n ", "\t", "   "]
 
@@ -77,11 +76,15 @@ def test_region_scan_handpicked_boundaries():
         "x september  5 ,  2021 y",  # multi-space gaps inside the match
         "abc123def",  # digits glued to letters: \b must NOT match
         "1999 word word word september 2021",  # two digit clusters spanning words
-        "in 3 days",  # digit pattern not in _DIGIT_BOUNDED (keyword-gated)
+        "in 3 days",  # digit pattern without a finite digit reach
         "now 2021-03-04",  # ref word + iso date
         "5",  # single digit token
         "word 19 99",  # split digits — bare_year must not fire
         "friday , march 5 , 2021",  # detached commas: 3 words left of the digit
+        # matches that end words past their last digit: the derived right
+        # reach (lookaheads included) must cover them
+        "in 1990 or\nlater", "at 5 in the\n\nmorning", "the 21st\ncentury",
+        "19:30  pm", "19:30 p.m. x", "the 3rd of march , 2021",
     ]
     for text in cases:
         assert detect_timexes(text) == _detect_full_scan(text), repr(text)

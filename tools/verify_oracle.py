@@ -7,12 +7,18 @@ Usage: python tools/verify_oracle.py [sf_dir] [query ...] [--out report.json]
 
 With --out, the per-query results land as a JSON artifact in the same shape
 as the driver's CORRECTNESS files (rows/schema/hash matches + row counts),
-so out-of-driver-window verification runs are committable evidence.
+plus each query's Spark and DuckDB wall seconds and the host's core count
+and load average, so out-of-driver-window verification runs are committable
+evidence and a per-query wall ledger.
+
+DuckDB runs with a memory limit and a thread count (DUCKDB_CONFIG) so that
+the sf0.1 oracles fit a host that also runs the Spark session.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -22,6 +28,8 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as E  # noqa: E402
+
+DUCKDB_CONFIG = {"memory_limit": "4GB", "threads": min(4, os.cpu_count() or 1)}
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -58,7 +66,8 @@ def main() -> int:
 
     spark = get_spark("verify-oracle", master="local[8]", shuffle_partitions=8)
 
-    con = duckdb.connect()
+    con = duckdb.connect(config=DUCKDB_CONFIG)
+    load_start = os.getloadavg()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
@@ -74,6 +83,7 @@ def main() -> int:
         if name not in oracles:
             print(f"  {name:24s} rows-only: {len(sdf)} rows  ({t_spark:.1f}s)")
             report[name] = {"rows_only": True, "spark_rows": len(sdf),
+                            "t_spark": round(t_spark, 3),
                             "err": None if len(sdf) else "0 rows"}
             if len(sdf) == 0:
                 failures.append((name, "0 rows on rows-only query"))
@@ -101,6 +111,8 @@ def main() -> int:
             "hash_match": ok,
             "spark_rows": len(a),
             "oracle_rows": len(b),
+            "t_spark": round(t_spark, 3),
+            "t_duck": round(t_duck, 3),
             "err": None if ok else status.splitlines()[0],
         }
         if not ok:
@@ -109,7 +121,10 @@ def main() -> int:
     print()
     if out_path:
         with open(out_path, "w") as f:
-            json.dump({"sf_dir": sf_dir, "results": report}, f, indent=2)
+            host = {"cores": os.cpu_count(), "loadavg_start": load_start,
+                    "loadavg_end": os.getloadavg(), "duckdb": DUCKDB_CONFIG}
+            json.dump({"sf_dir": sf_dir, "host": host, "results": report},
+                      f, indent=2)
         print(f"report: {out_path}")
     if failures:
         for n, s in failures:
