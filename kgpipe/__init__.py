@@ -18,7 +18,8 @@ equality-tested against each other and a doc-at-a-time oracle:
   row_number windows, band join), all shuffles keyed on (conv_id, turn_idx)
   so Catalyst reuses a single exchange.
 * ``pipeline.build_triples(..., fused=True)`` — fused: one zero-shuffle
-  ``mapInPandas`` pass (scan -> triples), the 100-TB scale path.
+  ``mapInArrow`` pass (scan -> triples), the 100-TB scale path; a batch-level
+  RE2 screen sends only the turns that can hold a mention through Python.
 """
 
 __version__ = "0.1.0"

@@ -1,6 +1,6 @@
 """Spark extraction stages (structured path).
 
-``annotate_union`` is the single heavy scan: one ``mapInPandas`` pass over
+``annotate_union`` is the single heavy scan: one ``mapInArrow`` pass over
 the transcripts table — a NARROW transformation (zero shuffle), so it
 scales linearly with input splits; the gazetteer/blacklist ride along as a
 broadcast variable (S2/S3). It emits one flat frame in the merged W1 union
@@ -23,19 +23,19 @@ the J1 band join and the token join all reuse:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .annotate import annotate_turn
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import ANNOTATION_UNION_SCHEMA
+from .schemas import ANNOTATION_UNION_ARROW_SCHEMA, ANNOTATION_UNION_SCHEMA
 from .score import tokens_for_mode
+from .worker import local_wall_ts, worker_body
 
 __all__ = [
     "annotate_union",
+    "union_batch",
     "filter_union",
     "assign_union_ids",
     "kind_view",
@@ -74,47 +74,64 @@ def annotate_union(
     spark = transcripts.sparkSession
     bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz, _bl, c = bc.value
-        for pdf in batches:
-            out = {k: [] for k in _UNION_COLS}
-
-            def emit(conv_id, turn_idx, anchor, kind_rank, in_kind_idx, **payload):
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["anchor_date"].append(anchor)
-                out["kind_rank"].append(kind_rank)
-                out["in_kind_idx"].append(in_kind_idx)
-                for k in _UNION_COLS[5:]:
-                    out[k].append(payload.get(k))
-
-            for row in pdf.itertuples(index=False):
-                ts = None if pd.isna(row.ts) else row.ts
-                anchor, tok_rows, ments, tmx = annotate_turn(
-                    row.conv_id, row.turn_idx, row.text, ts, gaz, _bl, c,
-                    with_timexes=timexes,
-                    with_token_rows="raw" if timexes else False,
-                )
-                for m in ments:
-                    emit(
-                        row.conv_id, row.turn_idx, anchor, 0, m["mention_idx"],
-                        **{k: m[k] for k in _MENTION_FIELDS},
-                    )
-                if not timexes:
-                    continue
-                for t in tmx:
-                    emit(
-                        row.conv_id, row.turn_idx, anchor, 1, t["timex_idx"],
-                        **{k: t[k] for k in _TIMEX_FIELDS},
-                    )
-                emit(
-                    row.conv_id, row.turn_idx, anchor, 2, 0,
-                    tok_stream="\x1f".join(tokens_for_mode(*tok_rows, "dtr")),
-                )
-            yield pd.DataFrame(out)
+    @worker_body
+    def gen(batches):
+        gaz, bl, c = bc.value
+        for batch in batches:
+            yield union_batch(batch, gaz, bl, c, timexes)
 
     cols = ["conv_id", "turn_idx", "text", "ts"]
-    return transcripts.select(*cols).mapInPandas(gen, schema=ANNOTATION_UNION_SCHEMA)
+    return transcripts.select(*cols).mapInArrow(gen, schema=ANNOTATION_UNION_SCHEMA)
+
+
+def union_batch(batch, gazetteer, blacklist, cfg: PipelineConfig, timexes: bool = True):
+    """One Arrow batch of transcripts (conv_id, turn_idx, text, ts) ->
+    its union rows as one ``pa.RecordBatch`` in the Arrow form of
+    ANNOTATION_UNION_SCHEMA: per turn, its mention rows, then (with
+    ``timexes``) its timex rows and its token-stream row. ``ts`` reaches
+    ``annotate_turn`` as the naive wall-clock datetime.
+
+    The columns are built as typed lists: five per-row key lists, and one
+    payload dict per row (the annotate dicts themselves) from which each
+    payload column is read with ``dict.get``, so a column a row's kind does
+    not carry is null."""
+    import pyarrow as pa
+
+    head = {k: [] for k in _UNION_COLS[:5]}
+    payloads = []
+    for conv_id, turn_idx, text, ts in zip(
+        batch.column("conv_id").to_pylist(),
+        batch.column("turn_idx").to_pylist(),
+        batch.column("text").to_pylist(),
+        local_wall_ts(batch.column("ts")).to_pylist(),
+    ):
+        anchor, tok_rows, ments, tmx = annotate_turn(
+            conv_id, turn_idx, text, ts, gazetteer, blacklist, cfg,
+            with_timexes=timexes,
+            with_token_rows="raw" if timexes else False,
+        )
+        rows = ments
+        kinds = [0] * len(ments)
+        idx = [m["mention_idx"] for m in ments]
+        if timexes:
+            rows = ments + tmx + [
+                {"tok_stream": "\x1f".join(tokens_for_mode(*tok_rows, "dtr"))}
+            ]
+            kinds += [1] * len(tmx) + [2]
+            idx += [t["timex_idx"] for t in tmx] + [0]
+        n = len(rows)
+        head["conv_id"].extend([conv_id] * n)
+        head["turn_idx"].extend([turn_idx] * n)
+        head["anchor_date"].extend([anchor] * n)
+        head["kind_rank"].extend(kinds)
+        head["in_kind_idx"].extend(idx)
+        payloads.extend(rows)
+    fields = list(ANNOTATION_UNION_ARROW_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(head[f.name], f.type) for f in fields[:5]]
+        + [pa.array([p.get(f.name) for p in payloads], f.type) for f in fields[5:]],
+        schema=ANNOTATION_UNION_ARROW_SCHEMA,
+    )
 
 
 def filter_union(

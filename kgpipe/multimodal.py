@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .worker import worker_body
+
 __all__ = [
     "MEDIA_SCHEMA",
     "attach_fake_media",
@@ -121,6 +123,7 @@ def resize_images(
     width*height (a real deployment swaps the body for PIL decode ->
     resize -> re-encode; schema / batch shape / partitioning identical)."""
 
+    @worker_body
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         target = width * height
         for pdf in batches:
@@ -157,6 +160,7 @@ def sample_frames(
     sampler produces). Stubbed codec: each fake frame is a deterministic
     byte-slice of the payload tagged with its timestamp."""
 
+    @worker_body
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = pdf[pdf["media_type"] == "video"]
@@ -192,6 +196,7 @@ def extract_media_features(media: DataFrame, *, fake: bool = True) -> DataFrame:
     batch of encoded payloads in, one batch of feature vectors out; narrow,
     no shuffle)."""
 
+    @worker_body
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [

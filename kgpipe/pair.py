@@ -17,12 +17,15 @@ rule (X8, timeline_delegator.py:449-455).
 call produces ALL triples for a turn — tlink, entity-mention, doc-time-rel
 (opt-in), speaker-attribution, tool-invocation — with identical results to
 the structured path (equality-tested). It detects timexes only in turns
-with a surviving mention (the O1 gate).
+with a surviving mention (the O1 gate). ``fused_triples`` runs it in one
+``mapInArrow`` pass; ``triples_batch`` calls it only for turns whose text
+passes ``text.mention_screen`` and builds the other turns' speaker and
+tool triples with ``pyarrow.compute``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 
 from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import TRIPLE_SCHEMA
+from .schemas import TRIPLE_ARROW_SCHEMA, TRIPLE_SCHEMA
 from .score import (
     TLINK_PAD_LENGTH,
     apply_inversion,
@@ -38,6 +41,8 @@ from .score import (
     tlink_label,
     tokens_for_mode,
 )
+from .text import mention_screen
+from .worker import local_wall_ts, worker_body
 
 __all__ = [
     "pair_window",
@@ -45,6 +50,7 @@ __all__ = [
     "nearest_anchor_timex",
     "event_event_triples",
     "turn_triples",
+    "triples_batch",
 ]
 
 
@@ -128,6 +134,7 @@ def _tlink_label_udf():
     event-event scorer."""
 
     @F.pandas_udf("string")
+    @worker_body
     def lab(normed: pd.Series, anchor: pd.Series) -> pd.Series:
         cache: dict = {}
         out = []
@@ -262,6 +269,7 @@ def _ee_label_udf():
     from .timex import timeml_interval
 
     @F.pandas_udf("string")
+    @worker_body
     def ee_label(na: pd.Series, nb: pd.Series) -> pd.Series:
         uniq = pd.unique(pd.concat([na, nb], ignore_index=True).dropna())
         cache = {}
@@ -449,34 +457,102 @@ def turn_triples(
     return out
 
 
+def triples_batch(batch, gazetteer, blacklist, cfg: PipelineConfig, screen):
+    """All triples of one Arrow batch of transcripts (conv_id, turn_idx,
+    role, text, tool, ts) as a ``pa.Table`` in the Arrow form of
+    TRIPLE_SCHEMA: the rows ``turn_triples`` gives turn by turn,
+    concatenated in input order.
+
+    ``screen`` is ``text.mention_screen``'s pattern (None: no screen). A
+    turn whose text misses it has no surviving mention, so its triples are
+    the speaker and tool triples alone; when its ts, conv_id and turn_idx
+    are all set they are built for the whole batch with ``pyarrow.compute``
+    (anchor ``date(ts)`` in session wall time). Every other turn runs
+    ``turn_triples`` with ``ts`` as the naive wall-clock datetime. A
+    ``(row, sub)`` sort puts the two parts back in ``turn_triples``' order:
+    per turn, speaker, then tool, then the rest."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = TRIPLE_ARROW_SCHEMA
+    names = ["row", "sub"] + schema.names
+    conv, turn = batch.column("conv_id"), batch.column("turn_idx")
+    ts = local_wall_ts(batch.column("ts"))
+    if screen is None:
+        columnar = pa.array([False] * batch.num_rows)
+    else:
+        hit = pc.fill_null(pc.match_substring_regex(batch.column("text"), screen), False)
+        keyed = pc.and_(pc.and_(pc.is_valid(ts), pc.is_valid(conv)), pc.is_valid(turn))
+        columnar = pc.and_(pc.invert(hit), keyed)
+
+    kernel = pc.indices_nonzero(pc.invert(columnar))
+    picked = batch.take(kernel)
+    rows, subs, triples = [], [], []
+    for row, c, i, role, tool, t, text in zip(
+        kernel.to_pylist(),
+        *(picked.column(k).to_pylist() for k in ("conv_id", "turn_idx", "role", "tool")),
+        ts.take(kernel).to_pylist(),
+        picked.column("text").to_pylist(),
+    ):
+        out = turn_triples(c, i, role, tool, t, text, gazetteer, blacklist, cfg)
+        rows.extend([row] * len(out))
+        subs.extend(range(len(out)))
+        triples.extend(out)
+    parts = [pa.table(
+        [pa.array(rows, pa.int32()), pa.array(subs, pa.int32())]
+        + [pa.array([d[f.name] for d in triples], f.type) for f in schema],
+        names=names,
+    )]
+    if len(kernel) < batch.num_rows:
+        subj = pc.binary_join_element_wise(
+            "turn@", conv, "_", pc.cast(turn, pa.string()), ""
+        )
+        anchor = pc.cast(ts, pa.date32())
+        role, tool = batch.column("role"), batch.column("tool")
+        for sub, pred, obj, keep in (
+            (0, "speaker-attribution", role, pc.is_valid(role)),
+            (1, "tool-invocation", tool,
+             pc.fill_null(pc.greater(pc.utf8_length(tool), 0), False)),
+        ):
+            idx = pc.indices_nonzero(pc.and_(columnar, keep))
+            k = len(idx)
+            none = pa.nulls(k, pa.string())
+            parts.append(pa.table(
+                [
+                    idx, pa.repeat(pa.scalar(sub, pa.int32()), k),
+                    subj.take(idx), pa.repeat(pa.scalar(pred), k), obj.take(idx),
+                    anchor.take(idx), conv.take(idx), turn.take(idx),
+                    none, none, none,
+                ],
+                names=names,
+            ).cast(parts[0].schema))
+    return (
+        pa.concat_tables(parts)
+        .sort_by([("row", "ascending"), ("sub", "ascending")])
+        .drop_columns(["row", "sub"])
+    )
+
+
 def fused_triples(
     transcripts: DataFrame,
     gazetteer,
     blacklist,
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """transcripts -> triples in ONE narrow mapInPandas pass (no shuffle
+    """transcripts -> triples in ONE narrow mapInArrow pass (no shuffle
     anywhere). This is the 100-TB scale path: throughput is bounded only by
-    scan + CPU, partitions never exchange."""
+    scan + CPU, partitions never exchange. Python runs per turn only where
+    ``text.mention_screen`` lets a mention through (see ``triples_batch``);
+    the screen pattern is built once here and rides the broadcast."""
     spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
+    screen = mention_screen(gazetteer, blacklist, cfg)
+    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg, screen))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz, bl, c = bc.value
-        for pdf in batches:
-            rows: List[dict] = []
-            for r in pdf.itertuples(index=False):
-                ts = None if pd.isna(r.ts) else r.ts
-                rows.extend(
-                    turn_triples(
-                        r.conv_id, r.turn_idx, r.role, r.tool, ts, r.text, gaz, bl, c
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=TRIPLE_SCHEMA.fieldNames()
-            ) if rows else pd.DataFrame(
-                {k: [] for k in TRIPLE_SCHEMA.fieldNames()}
-            )
+    @worker_body
+    def gen(batches):
+        gaz, bl, c, scr = bc.value
+        for batch in batches:
+            yield from triples_batch(batch, gaz, bl, c, scr).to_batches()
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    return transcripts.select(*cols).mapInPandas(gen, schema=TRIPLE_SCHEMA)
+    return transcripts.select(*cols).mapInArrow(gen, schema=TRIPLE_SCHEMA)

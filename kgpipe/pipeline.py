@@ -8,7 +8,7 @@ Two equivalent execution plans (equality-tested):
   directly in the merged W1 schema). Plan shape — ONE hash exchange total
   (plan-asserted in PLANS.md):
 
-      scan -> mapInPandas(annotate -> union rows)         [narrow]
+      scan -> mapInArrow(annotate -> union rows)          [narrow]
         -> F1 predicate, F2 broadcast anti-join, F5       [narrow]
         -> W1 row_number window   ── one exchange on (conv_id, turn_idx)
         -> persist; kind views are co-partitioned views of the cache
@@ -16,8 +16,10 @@ Two equivalent execution plans (equality-tested):
         -> tlink label / instance column expressions
         -> union with attribution/entity/dtr projections
 
-* ``build_triples(..., fused=True)`` — one narrow mapInPandas, zero
+* ``build_triples(..., fused=True)`` — one narrow mapInArrow, zero
   shuffles; the 10^12-turn scale path (scan-bound, embarrassingly parallel).
+  Turns that miss ``text.mention_screen`` get their speaker/tool triples
+  from ``pyarrow.compute``; only the rest run the per-turn kernel.
 
 ``build_annotations`` returns ``kind_rank`` views of the same frame, and
 ``build_graph`` feeds triples, edges and nodes from one persisted copy of

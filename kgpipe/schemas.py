@@ -10,6 +10,7 @@ mentions/timexes tables are projections of it.
 from __future__ import annotations
 
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
@@ -76,6 +77,11 @@ TRIPLE_SCHEMA = T.StructType(
         T.StructField("instance", T.StringType()),
     ]
 )
+
+# the Arrow forms the mapInArrow kernels emit (extract.union_batch,
+# pair.triples_batch)
+ANNOTATION_UNION_ARROW_SCHEMA = to_arrow_schema(ANNOTATION_UNION_SCHEMA)
+TRIPLE_ARROW_SCHEMA = to_arrow_schema(TRIPLE_SCHEMA)
 
 NODE_SCHEMA = T.StructType(
     [

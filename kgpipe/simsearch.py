@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .worker import worker_body
+
 __all__ = [
     "cosine_col",
     "brute_force_topk",
@@ -189,6 +191,7 @@ def _bucket_udf(dim: int, n_bits: int, table: int):
     planes = _hyperplanes(dim, n_bits, table)
 
     @F.pandas_udf(T.IntegerType())
+    @worker_body
     def bucket(embs: pd.Series) -> pd.Series:
         mat = np.stack(embs.to_numpy())  # (batch, dim)
         bits = (mat @ planes.T) > 0  # (batch, n_bits)
@@ -210,6 +213,7 @@ def _bucket_all_udf(dim: int, n_bits: int, n_tables: int):
     )  # (n_tables * n_bits, dim)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    @worker_body
     def buckets(embs: pd.Series) -> pd.Series:
         mat = np.stack(embs.to_numpy())  # (batch, dim)
         bits = (mat @ flat.T) > 0  # (batch, n_tables * n_bits)
@@ -274,6 +278,7 @@ def _assign_lists_udf(centroids: np.ndarray, n_probe: int):
     unit = centroids / norms[:, None]
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    @worker_body
     def assign(embs: pd.Series) -> pd.Series:
         mat = np.stack(embs.to_numpy()).astype(np.float64)  # (batch, dim)
         mn = np.linalg.norm(mat, axis=1)

@@ -12,7 +12,7 @@ store.
 * source: ``readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)`` —
   file-source bookkeeping (plus ``maxFilesPerTrigger``) gives incremental,
   replay-safe input batching.
-* transform: ``fused_triples`` — mapInPandas is fully streaming-compatible;
+* transform: ``fused_triples`` — mapInArrow is fully streaming-compatible;
   zero stateful operators, so no watermark is required (token windows are
   intra-turn, not event-time windows).
 * sink: parquet + checkpointLocation -> exactly-once file sink; the
@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .pair import fused_triples
 from .schemas import TRANSCRIPTS_SCHEMA
+from .worker import worker_body
 
 __all__ = [
     "stream_triples",
@@ -310,6 +311,7 @@ _STATE_SCHEMA = (
 )
 
 
+@worker_body
 def _update_conv_state(key, pdfs: Iterator[pd.DataFrame], state):
     """Custom stateful operator body: merge this micro-batch's turns for one
     conversation into the running state, emit the cumulative snapshot."""

@@ -2,8 +2,10 @@
 sentinels, sentence spans, section segmentation, and gazetteer span matching.
 
 These are pure functions over a single turn's text. They run inside Arrow
-batches (``mapInPandas``) on executors — never as row-at-a-time Spark UDFs —
+batches (``mapInArrow``) on executors — never as row-at-a-time Spark UDFs —
 and double as the building blocks of the doc-at-a-time test oracle.
+``mention_screen`` is the batch-level counterpart: one RE2 pattern that a
+turn must match to yield any mention surviving F1/F2.
 
 Reference semantics reproduced:
 * token stream with (begin, end) char offsets and a newline sentinel token
@@ -31,6 +33,7 @@ __all__ = [
     "sentence_spans",
     "section_spans",
     "match_gazetteer",
+    "mention_screen",
     "NEWLINE_SENTINEL",
     "CONMOD_NEWLINE_SENTINEL",
 ]
@@ -201,3 +204,70 @@ def match_gazetteer(
             )
         ]
     return out
+
+
+# what a lowercased word token looks like (the word branch of _TOKEN_RE)
+_WORD_TOKEN_LOWER_RE = re.compile(r"[a-z0-9]+(?:[-'][a-z0-9]+)*")
+# U+0130 is the one character whose str.lower() is two characters long
+_DOTTED_CAPITAL_I = "İ"
+# an RE2 class no character is in: the screen when no term can survive
+_MATCHES_NOTHING = r"[^\x00-\x{10FFFF}]"
+
+
+def _re2_char(c: str) -> str:
+    return "\\x{%x}" % ord(c)
+
+
+def mention_screen(gazetteer, blacklist, cfg) -> Optional[str]:
+    """One RE2 pattern (for ``pyarrow.compute.match_substring_regex``)
+    that the text of every turn with a mention surviving F1 and F2 matches,
+    or None when the gazetteer has no first-word index: then there is no
+    screen and every turn runs the per-turn kernel.
+
+    A mention opens on a token whose lowercase is the first word of a term
+    with ``tui == cfg.keep_tui`` (F1). Single-word terms in the blacklist
+    are left out: such a term covers one token, whose surface lowercases
+    to the term, so F2 always drops it. A token is either a word — ASCII
+    letters and digits with inner ``-``/``'``, bounded by a character that
+    is not an ASCII letter or digit, or by an end of the text — or one
+    symbol character. So the pattern is
+    ``(?:^|[^A-Za-z0-9])(?i:w1|w2|…)(?:[^A-Za-z0-9]|$)`` over the first
+    words of word shape, plus unbounded alternatives for the first words a
+    symbol token can lowercase to: a single character (case-insensitive,
+    which covers e.g. ``K`` U+212A for ``k``) and the two-character
+    lowercase of U+0130. Any other first word equals no lowercased token.
+
+    The boundary classes stay outside ``(?i:…)``: under case folding RE2's
+    ``[^A-Za-z0-9]`` also excludes ``ſ`` (U+017F) and ``K`` (U+212A),
+    which the tokenizer treats as boundaries. A miss proves the turn has
+    no surviving mention; a hit proves nothing. A pattern RE2 cannot
+    compile (a very large gazetteer) gives None as well."""
+    if not gazetteer.first_words:
+        return None
+    blacklist = blacklist or frozenset()
+    words = {
+        term.split(" ", 1)[0]
+        for term, (_cui, tui) in gazetteer.terms.items()
+        if tui == cfg.keep_tui and (" " in term or term not in blacklist)
+    } & gazetteer.first_words
+    bounded = sorted(w for w in words if _WORD_TOKEN_LOWER_RE.fullmatch(w))
+    symbol = sorted(w for w in words if len(w) == 1)
+    alts = []
+    if bounded:
+        alts.append(
+            "(?:^|[^A-Za-z0-9])(?i:" + "|".join(bounded) + ")(?:[^A-Za-z0-9]|$)"
+        )
+    if symbol:
+        alts.append("(?i:" + "|".join(map(_re2_char, symbol)) + ")")
+    if _DOTTED_CAPITAL_I.lower() in words:
+        alts.append(_re2_char(_DOTTED_CAPITAL_I))
+    pattern = "|".join(alts) or _MATCHES_NOTHING
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    try:
+        pc.match_substring_regex(pa.array([""]), pattern)
+    except pa.ArrowInvalid:
+        return None
+    return pattern

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .worker import worker_body
+
 __all__ = [
     "exact_dedup",
     "doc_shingles",
@@ -266,6 +268,7 @@ def simhash(documents: DataFrame, bits: int = 64) -> DataFrame:
         raise ValueError("simhash: only 64-bit signatures are supported")
 
     @F.pandas_udf(T.LongType())
+    @worker_body
     def _simhash(texts: pd.Series) -> pd.Series:
         # Vectorized bit accumulation: md5 once per DISTINCT token (memoized
         # across the Arrow batch), np.unpackbits into a ±1 row of 64, count-

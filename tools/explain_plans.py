@@ -3,8 +3,8 @@ the evidence to PLANS.md.
 
 Checks (each is a hard assertion, so this doubles as a regression gate):
 
-1. fused path — zero Exchange nodes: the 10^12-turn extraction is one
-   narrow mapInPandas over the scan.
+1. fused path — zero Exchange nodes and exactly one MapInArrow: the
+   10^12-turn extraction is one narrow mapInArrow over the scan.
 2. structured path — the only wide operators are keyed on
    (conv_id, turn_idx); blacklist F2 is a BroadcastHashJoin (left anti),
    never a shuffled join.
@@ -20,7 +20,7 @@ Checks (each is a hard assertion, so this doubles as a regression gate):
 6-20. the per-operator sections below, each with its own assertion.
 21. one annotation product — build_graph's triples and edges read one
    shared cached union frame, whose plan holds the only annotate
-   MapInPandas; no plan runs a MapInPandas outside it.
+   MapInArrow; no plan runs a MapInArrow outside it.
 22. bucketed commit — the frame every bucketed write commits
    (materialize.bucket_clustered over the fused build) adds exactly one
    Exchange, a rebalance keyed on bucket, and observes its per-bucket
@@ -88,14 +88,14 @@ def plan_nodes(plan) -> list:
 
 def cached_reads(df) -> tuple[dict, int]:
     """({identity: CachedRDDBuilder} of every cached relation ``df`` reads,
-    number of MapInPandas nodes outside those caches)."""
+    number of MapInArrow nodes outside those caches)."""
     identity = df.sparkSession._jvm.java.lang.System.identityHashCode
     nodes = plan_nodes(df._jdf.queryExecution().withCachedData())
     caches = {
         identity(n.cacheBuilder()): n.cacheBuilder()
         for n in nodes if _name(n) == "InMemoryRelation"
     }
-    return caches, sum(_name(n) == "MapInPandas" for n in nodes)
+    return caches, sum(_name(n) == "MapInArrow" for n in nodes)
 
 
 def main() -> int:
@@ -140,11 +140,14 @@ def main() -> int:
     # node would be a deliberate round-robin repartition (skew control)
     assert n_ex == 0, f"fused plan has {n_ex} exchanges"
     assert count(r"hashpartitioning", p) == 0, "fused plan shuffles on a key"
-    assert "ArrowEvalPython" in p or "MapInPandas" in p or "mapInPandas" in p.lower(), p
+    n_map = count(r"(?m)^\(\d+\) MapInArrow\b", p)
+    assert n_map == 1, f"fused plan has {n_map} MapInArrow nodes"
+    assert "MapInPandas" not in p and "ArrowEvalPython" not in p, p
     sections.append((
         "fused extraction (build_triples fused=True) over the transcripts scan",
         p,
-        ["Exchange nodes: 0 — scan -> MapInPandas, embarrassingly parallel"],
+        ["Exchange nodes: 0, MapInArrow nodes: 1 — scan -> MapInArrow, "
+         "embarrassingly parallel"],
     ))
 
     # 2. structured: keyed exchanges only; blacklist broadcast ---------------
@@ -604,18 +607,18 @@ def main() -> int:
     # final plan reads those checkpoints, not the cache itself
     assert reads["nodes"][0].keys() <= shared.keys(), "nodes read another cache"
     for k, (_, n_map) in reads.items():
-        assert n_map == 0, f"{k} runs {n_map} MapInPandas outside the cache"
+        assert n_map == 0, f"{k} runs {n_map} MapInArrow outside the cache"
     (builder,) = shared.values()
     n_annotate = sum(
-        _name(n) == "MapInPandas" for n in plan_nodes(builder.logicalPlan())
+        _name(n) == "MapInArrow" for n in plan_nodes(builder.logicalPlan())
     )
     assert n_annotate == 1, f"cached union frame runs {n_annotate} annotate passes"
     sections.append((
         "one annotation product (build_graph triples / edges / nodes)",
         plan_of(graph["edges"]),
         ["triples and edges read ONE cached relation (the W1-ranked union "
-         "frame); its plan holds the only annotate MapInPandas, and no "
-         "output plan runs a MapInPandas outside it; nodes read eager "
+         "frame); its plan holds the only annotate MapInArrow, and no "
+         "output plan runs a MapInArrow outside it; nodes read eager "
          "checkpoints of that frame's mentions"],
     ))
 
