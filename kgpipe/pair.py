@@ -82,7 +82,12 @@ def pair_window(
         F.col("annotation_id").alias("t_annotation_id"),
         _tlink_label_udf()("normed", "anchor_date").alias("t_lab0"),
     )
-    return m.join(t, ["conv_id", "turn_idx"]).where(
+    # the timex side is the build side by hint, not by size: both sides
+    # read the one cached frame, AQE re-plans the join as each side's cache
+    # stage reports, and the order of those reports decided which side it
+    # broadcast (the timex side on most runs, the mention side on some:
+    # a second broadcast and newly generated code to compile)
+    return m.join(F.broadcast(t), ["conv_id", "turn_idx"]).where(
         F.col("t_begin").between(F.col("win_char_begin"), F.col("win_char_end"))
         & F.col("t_end").between(F.col("win_char_begin"), F.col("win_char_end"))
     )
@@ -200,7 +205,8 @@ def tlink_triples_from_pairs(
         F.when(F.col("tok_stream") == "", F.array().cast("array<string>"))
         .otherwise(F.split("tok_stream", "\x1f")).alias("toks_arr"),
     )
-    joined = pairs.join(tok_arr, ["conv_id", "turn_idx"])
+    # one row per turn, broadcast by hint for the reason pair_window gives
+    joined = pairs.join(F.broadcast(tok_arr), ["conv_id", "turn_idx"])
     label = F.when(
         F.col("t_begin") < F.col("m_begin"),
         F.element_at(_invert_map_col(), F.col("t_lab0")),

@@ -11,6 +11,8 @@ single-process reference-style oracle (SURVEY.md §5):
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -78,6 +80,24 @@ def test_structured_equals_fused(corpus_df, gazetteer, blacklist):
     s = build_triples(corpus_df, gazetteer, blacklist, cfg, fused=False).toPandas()
     f = build_triples(corpus_df, gazetteer, blacklist, cfg, fused=True).toPandas()
     assert _canon_frame(s).equals(_canon_frame(f))
+
+
+def test_structured_joins_broadcast_by_hint(spark, corpus_df, gazetteer, blacklist):
+    """The band join and the token join broadcast their right side (timexes,
+    token streams) whatever the size statistics say, so AQE cannot re-pick
+    the build side from whichever cache stage reports first: with size-based
+    broadcasting off, both stay broadcast joins built on the right."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = build_triples(corpus_df, gazetteer, blacklist, PipelineConfig(), fused=False)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    inner = re.findall(r"BroadcastHashJoin \[[^\]]*\], \[[^\]]*\], Inner, (\w+)", plan)
+    assert inner == ["BuildRight", "BuildRight"], plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_per_turn_text_equality_invariant(spark, corpus_pdf, corpus_df, gazetteer, blacklist):
