@@ -24,12 +24,12 @@ the J1 band join and the token join all reuse:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .annotate import annotate_turn
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import ANNOTATION_UNION_ARROW_SCHEMA, ANNOTATION_UNION_SCHEMA
+from .schemas import ANNOTATION_UNION_ARROW_SCHEMA, ANNOTATION_UNION_SCHEMA, sql_str
 from .score import tokens_for_mode
 from .worker import local_wall_ts, worker_body
 
@@ -80,8 +80,9 @@ def annotate_union(
         for batch in batches:
             yield union_batch(batch, gaz, bl, c, timexes)
 
-    cols = ["conv_id", "turn_idx", "text", "ts"]
-    return transcripts.select(*cols).mapInArrow(gen, schema=ANNOTATION_UNION_SCHEMA)
+    return transcripts.selectExpr("conv_id", "turn_idx", "text", "ts").mapInArrow(
+        gen, schema=ANNOTATION_UNION_SCHEMA
+    )
 
 
 def union_batch(batch, gazetteer, blacklist, cfg: PipelineConfig, timexes: bool = True):
@@ -152,9 +153,15 @@ def filter_union(
         timeline_delegator.py:171-177; silent-drop semantics O3).
     """
     spark = union.sparkSession
-    is_mention = F.col("kind_rank") == 0
-    is_timex = F.col("kind_rank") == 1
-    out = union.where(~is_mention | (F.col("tui") == F.lit(cfg.keep_tui)))
+    keep = [
+        f"(kind_rank != 0 OR tui = {sql_str(cfg.keep_tui)})",
+        "(kind_rank != 1 OR normed IS NOT NULL)",
+    ]
+    if cfg.use_conmod:
+        keep.append("(kind_rank != 0 OR conmod = 'ACTUAL')")
+    # one predicate for F1/F4/F5 (it commutes with the F2 anti-join, and
+    # Catalyst merges the filters below that join either way)
+    out = union.where(" AND ".join(keep))
     if blacklist:
         # with Arrow on (kgpipe sessions) a pandas frame becomes a
         # LocalRelation, so its broadcast is a JVM-only job; a list of
@@ -165,13 +172,10 @@ def filter_union(
         )
         out = out.join(
             F.broadcast(bl_df),
-            (out["kind_rank"] == 0)
-            & (F.lower(F.trim(out["surface"])) == bl_df["bl_term"]),
+            F.expr("kind_rank = 0 AND lower(trim(surface)) = bl_term"),
             "left_anti",
         )
-    if cfg.use_conmod:
-        out = out.where(~is_mention | (F.col("conmod") == F.lit("ACTUAL")))
-    return out.where(~is_timex | F.col("normed").isNotNull())
+    return out
 
 
 def assign_union_ids(union_f: DataFrame) -> DataFrame:
@@ -180,20 +184,13 @@ def assign_union_ids(union_f: DataFrame) -> DataFrame:
     sort strictly last so they never shift a rank — formatted
     ``{i}@e@{conv}_{turn}@system`` (NULL for token rows). This is the
     structured path's single exchange."""
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        (F.col("kind_rank") == 2).cast("int"), "begin", "kind_rank", "in_kind_idx"
-    )
-    return union_f.withColumn(
-        "ann_rank", F.row_number().over(w) - F.lit(1)
-    ).withColumn(
-        "annotation_id",
-        F.when(
-            F.col("kind_rank") < 2,
-            F.format_string(
-                "%d@e@%s_%d@system",
-                F.col("ann_rank"), F.col("conv_id"), F.col("turn_idx"),
-            ),
-        ),
+    return union_f.selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY conv_id, turn_idx ORDER BY "
+        "CAST(kind_rank = 2 AS INT), begin, kind_rank, in_kind_idx) - 1 AS ann_rank",
+        "CASE WHEN kind_rank < 2 THEN "
+        "format_string('%d@e@%s_%d@system', ann_rank, conv_id, turn_idx) END "
+        "AS annotation_id",
     )
 
 
@@ -205,8 +202,7 @@ def kind_view(union: DataFrame, kind_rank: int, ids: bool = False) -> DataFrame:
     idx, fields = (
         ("mention_idx", _MENTION_FIELDS), ("timex_idx", _TIMEX_FIELDS)
     )[kind_rank]
-    return union.where(F.col("kind_rank") == kind_rank).select(
-        "conv_id", "turn_idx", "anchor_date",
-        F.col("in_kind_idx").alias(idx), *fields,
-        *(["annotation_id"] if ids else []),
+    return union.where(f"kind_rank = {kind_rank}").selectExpr(
+        "conv_id", "turn_idx", "anchor_date", f"in_kind_idx AS {idx}",
+        *(f"`{f}`" for f in fields), *(["annotation_id"] if ids else []),
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import TRIPLE_SCHEMA
+from .schemas import triple_exprs
 
 __all__ = [
     "attribution_triples",
@@ -46,87 +46,46 @@ __all__ = [
     "tlink_closure",  # back-compat alias
 ]
 
-_TRIPLE_COLS = TRIPLE_SCHEMA.fieldNames()
-
-
-def _as_triples(df: DataFrame) -> DataFrame:
-    """Project onto TRIPLE_SCHEMA, filling absent columns with typed nulls."""
-    cols = []
-    present = set(df.columns)
-    for f in TRIPLE_SCHEMA.fields:
-        if f.name in present:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+# anchor: date(ts) with the X3 header-scan fallback (DCTAnnotator.java:
+# 62-89) — same rule as annotate.anchor_for, so the structured and fused
+# paths agree on ts-less turns; try_to_date keeps ANSI mode non-throwing
+_TURN_ANCHOR = (
+    r"coalesce(to_date(ts), try_to_date(nullif(regexp_extract("
+    r"text, 'Principal Date\\D*(\\d{8})', 1), ''), 'yyyyMMdd'))"
+)
 
 
 def attribution_triples(transcripts: DataFrame) -> DataFrame:
     """(turn@conv_turn, speaker-attribution, role) for every turn plus
     (turn@conv_turn, tool-invocation, tool) where a tool is recorded."""
-    # anchor: date(ts) with the X3 header-scan fallback (DCTAnnotator.java:
-    # 62-89) — same rule as annotate.anchor_for, so the structured and fused
-    # paths agree on ts-less turns; try_to_date keeps ANSI mode non-throwing
-    anchor = F.coalesce(
-        F.to_date("ts"),
-        F.expr(
-            r"try_to_date(nullif(regexp_extract(text, 'Principal Date\\D*(\\d{8})', 1), ''), 'yyyyMMdd')"
-        ),
+    turn = dict(
+        subj="format_string('turn@%s_%d', conv_id, turn_idx)",
+        anchor_date=_TURN_ANCHOR,
     )
-    base = transcripts.select(
-        F.format_string("turn@%s_%d", "conv_id", "turn_idx").alias("subj"),
-        "conv_id",
-        "turn_idx",
-        anchor.alias("anchor_date"),
-        "role",
-        "tool",
+    speaker = transcripts.where("role IS NOT NULL").selectExpr(
+        *triple_exprs(pred="'speaker-attribution'", obj="role", **turn)
     )
-    speaker = _as_triples(
-        base.where(F.col("role").isNotNull()).select(
-            "subj",
-            F.lit("speaker-attribution").alias("pred"),
-            F.col("role").alias("obj"),
-            "anchor_date", "conv_id", "turn_idx",
-        )
-    )
-    tool = _as_triples(
-        base.where(F.col("tool").isNotNull() & (F.col("tool") != "")).select(
-            "subj",
-            F.lit("tool-invocation").alias("pred"),
-            F.col("tool").alias("obj"),
-            "anchor_date", "conv_id", "turn_idx",
-        )
+    tool = transcripts.where("tool IS NOT NULL AND tool != ''").selectExpr(
+        *triple_exprs(pred="'tool-invocation'", obj="tool", **turn)
     )
     return speaker.unionByName(tool)
 
 
 def entity_mention_triples(mentions_with_id: DataFrame) -> DataFrame:
     """(mention annotation id, entity-mention, cui)."""
-    return _as_triples(
-        mentions_with_id.select(
-            F.col("annotation_id").alias("subj"),
-            F.lit("entity-mention").alias("pred"),
-            F.col("cui").alias("obj"),
-            "anchor_date", "conv_id", "turn_idx",
-            F.col("surface").alias("subj_text"),
-            F.col("term").alias("obj_text"),
-        )
-    )
+    return mentions_with_id.selectExpr(*triple_exprs(
+        subj="annotation_id", pred="'entity-mention'", obj="cui",
+        subj_text="surface", obj_text="term",
+    ))
 
 
 def dtr_triples(mentions_with_id: DataFrame) -> DataFrame:
     """(mention annotation id, doc-time-rel, label) with the instance string
     kept for the debug contract (README.md:61 analog)."""
-    return _as_triples(
-        mentions_with_id.select(
-            F.col("annotation_id").alias("subj"),
-            F.lit("doc-time-rel").alias("pred"),
-            F.col("dtr").alias("obj"),
-            "anchor_date", "conv_id", "turn_idx",
-            F.col("surface").alias("subj_text"),
-            F.col("dtr_inst").alias("instance"),
-        )
-    )
+    return mentions_with_id.selectExpr(*triple_exprs(
+        subj="annotation_id", pred="'doc-time-rel'", obj="dtr",
+        subj_text="surface", instance="dtr_inst",
+    ))
 
 
 def entity_timeline_summary(mentions_with_id: DataFrame) -> DataFrame:

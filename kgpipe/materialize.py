@@ -28,7 +28,9 @@ and writes a single TSV at collection end (timeline_delegator.py:328,
   wrote to that bucket, observed during the write itself (one
   ``count_if`` per bucket on an ``Observation`` in the write's result
   stage), so no job reads the store back. NOTE: the ``stage_timings`` map
-  (wall seconds + observed n_triples/n_tlink/... metrics) is
+  (wall seconds: ``plan_sec``, the Spark driver's build of the write's plan
+  before any job of it runs, and ``build_and_write_sec``; plus the
+  observed n_triples/n_tlink/... metrics) is
   INVOCATION-scoped — every lineage row written by one run_with_resume
   call carries the same totals for the whole invocation, not per-bucket
   values; per-bucket cardinality lives in ``triple_count``.
@@ -110,7 +112,7 @@ def triple_delta(
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+        "bucket", F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)")
     )
 
 
@@ -135,7 +137,7 @@ def bucket_clustered(
     names = [f"bucket_{b}" for b in count_buckets]
     if obs is not None:
         counts = [
-            F.count_if(F.col("bucket") == b).alias(n)
+            F.expr(f"count_if(bucket = {int(b)}) AS {n}")
             for b, n in zip(count_buckets, names)
         ]
         out = out.observe(obs, *metrics, *counts)
@@ -298,6 +300,17 @@ def completed_buckets(sink: TableSink, source_snapshot_id: str):
     return {r.partition_hash for r in rows}
 
 
+# the run metrics observed in run_with_resume's write (lineage
+# stage_timings); exact DISTINCT is disallowed in observed metrics, and the
+# HLL sketch is the standard observable cardinality
+_RUN_METRICS = (
+    "count(1) AS n_triples",
+    "sum(CASE WHEN startswith(pred, 'tlink:') THEN 1 ELSE 0 END) AS n_tlink",
+    "sum(CASE WHEN pred = 'entity-mention' THEN 1 ELSE 0 END) AS n_entity",
+    "approx_count_distinct(conv_id) AS n_convs_approx",
+)
+
+
 def run_with_resume(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -334,7 +347,7 @@ def run_with_resume(
         return {"written_buckets": [], "skipped_buckets": sorted(done), "triples_written": 0}
 
     t0 = time.monotonic()
-    subset = bucketed_in.where(F.col("bucket").isin([int(b) for b in todo]))
+    subset = bucketed_in.where(f"bucket IN ({', '.join(str(int(b)) for b in todo)})")
     triples = build_fn(subset.drop("bucket"))
     # Spark-native observed metrics: computed inline during the write action
     # itself (no extra pass), recorded into the lineage rows
@@ -343,18 +356,10 @@ def run_with_resume(
     obs = Observation("kg_run_metrics")
     out, count_names = bucket_clustered(
         triples, n_buckets, obs,
-        metrics=(
-            F.count(F.lit(1)).alias("n_triples"),
-            F.sum(F.when(F.col("pred").startswith("tlink:"), 1).otherwise(0))
-            .alias("n_tlink"),
-            F.sum(F.when(F.col("pred") == "entity-mention", 1).otherwise(0))
-            .alias("n_entity"),
-            # exact DISTINCT is disallowed in observed metrics; the HLL
-            # sketch is the standard observable cardinality
-            F.approx_count_distinct("conv_id").alias("n_convs_approx"),
-        ),
+        metrics=[F.expr(m) for m in _RUN_METRICS],
         count_buckets=todo,
     )
+    t_plan = time.monotonic()
     sink.append("triples", out)
     t1 = time.monotonic()
     observed = obs.get
@@ -371,7 +376,7 @@ def run_with_resume(
         run_id,
         source_snapshot_id,
         counts,
-        {"build_and_write_sec": t1 - t0, **metrics},
+        {"plan_sec": t_plan - t0, "build_and_write_sec": t1 - t0, **metrics},
     )
     return {
         "written_buckets": sorted(todo),

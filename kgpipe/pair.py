@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .annotate import annotate_mentions, annotate_timexes
-from .config import DEFAULT_CONFIG, PipelineConfig
-from .schemas import TRIPLE_ARROW_SCHEMA, TRIPLE_SCHEMA
+from .config import DEFAULT_CONFIG, LABEL_TO_INVERTED_LABEL, PipelineConfig
+from .schemas import TRIPLE_ARROW_SCHEMA, TRIPLE_SCHEMA, sql_str, triple_exprs
 from .score import (
     TLINK_PAD_LENGTH,
     apply_inversion,
@@ -60,75 +60,77 @@ def pair_window(
 ) -> DataFrame:
     """J1: band join of filtered+id'd mentions against normalized+id'd
     timexes within the mention's char window. Returns one row per (mention,
-    timex) pair with both spans and ids."""
-    m = mentions_f.select(
-        "conv_id", "turn_idx", "anchor_date",
-        F.col("begin").alias("m_begin"), F.col("end").alias("m_end"),
-        F.col("tok_begin").alias("m_tok_begin"), F.col("tok_end").alias("m_tok_end"),
-        F.col("surface").alias("m_surface"), F.col("cui").alias("m_cui"),
-        F.col("dtr").alias("m_dtr"), F.col("dtr_inst").alias("m_dtr_inst"),
-        F.col("annotation_id").alias("m_annotation_id"),
-        "win_char_begin", "win_char_end",
+    timex) pair with both spans and ids (the timex side's keys as
+    t_conv_id / t_turn_idx)."""
+    m = mentions_f.selectExpr(
+        "conv_id", "turn_idx", "anchor_date", "`begin` AS m_begin", "`end` AS m_end",
+        "tok_begin AS m_tok_begin", "tok_end AS m_tok_end", "surface AS m_surface",
+        "cui AS m_cui", "dtr AS m_dtr", "dtr_inst AS m_dtr_inst",
+        "annotation_id AS m_annotation_id", "win_char_begin", "win_char_end",
     )
     # the uninverted tlink label is a function of the TIMEX row alone
     # (normed value vs the turn anchor), so it is computed here on the
     # timex side — one narrow vectorized UDF over |timexes| rows — and
     # rides the join, instead of running over the ~5x larger pair set
-    t = timexes_f.select(
-        "conv_id", "turn_idx",
-        F.col("begin").alias("t_begin"), F.col("end").alias("t_end"),
-        F.col("tok_begin").alias("t_tok_begin"), F.col("tok_end").alias("t_tok_end"),
-        F.col("normed").alias("t_normed"),
-        F.col("annotation_id").alias("t_annotation_id"),
-        _tlink_label_udf()("normed", "anchor_date").alias("t_lab0"),
+    t = timexes_f.withColumn(
+        "t_lab0", _tlink_label_udf()("normed", "anchor_date")
+    ).selectExpr(
+        "conv_id AS t_conv_id", "turn_idx AS t_turn_idx",
+        "`begin` AS t_begin", "`end` AS t_end",
+        "tok_begin AS t_tok_begin", "tok_end AS t_tok_end", "normed AS t_normed",
+        "annotation_id AS t_annotation_id", "t_lab0",
     )
     # the timex side is the build side by hint, not by size: both sides
     # read the one cached frame, AQE re-plans the join as each side's cache
     # stage reports, and the order of those reports decided which side it
     # broadcast (the timex side on most runs, the mention side on some:
-    # a second broadcast and newly generated code to compile)
-    return m.join(F.broadcast(t), ["conv_id", "turn_idx"]).where(
-        F.col("t_begin").between(F.col("win_char_begin"), F.col("win_char_end"))
-        & F.col("t_end").between(F.col("win_char_begin"), F.col("win_char_end"))
-    )
+    # a second broadcast and newly generated code to compile). The keys
+    # are compared null-safe, as the fused path pairs within a turn whose
+    # conv_id or turn_idx is null.
+    return m.join(F.broadcast(t), F.expr(
+        "conv_id <=> t_conv_id AND turn_idx <=> t_turn_idx"
+        " AND t_begin BETWEEN win_char_begin AND win_char_end"
+        " AND t_end BETWEEN win_char_begin AND win_char_end"
+    ))
 
 
-def _py_slice(arr, a, b):
-    """Python-style ``arr[a:b]`` (0-based, end-exclusive, clamped) as a
-    Spark slice expression — Spark's slice is 1-based with a non-negative
-    length."""
-    return F.slice(arr, a + F.lit(1), F.greatest(F.lit(0), b - a))
-
-
-def _tlink_instance_col(tokens):
-    """get_tlink_instance as a pure JVM column expression over the turn's
-    token array: identical string algebra (packet sort by begin with the
+def _tlink_instance_sql() -> str:
+    """get_tlink_instance as expression text over the turn's token array
+    ``toks_arr``: identical string algebra (packet sort by begin with the
     event winning ties — Python's stable sort —, pad clamping, and the
-    reference's end-exclusive final slice), no Python boundary."""
-    e_b, e_e = F.col("m_tok_begin"), F.col("m_tok_end") + F.lit(1)
-    t_b, t_e = F.col("t_tok_begin"), F.col("t_tok_end") + F.lit(1)
-    event_first = e_b <= t_b
-    fb = F.when(event_first, e_b).otherwise(t_b)
-    fe = F.when(event_first, e_e).otherwise(t_e)
-    fo = F.when(event_first, F.lit("<e>")).otherwise(F.lit("<t>"))
-    fc = F.when(event_first, F.lit("</e>")).otherwise(F.lit("</t>"))
-    sb = F.when(event_first, t_b).otherwise(e_b)
-    se = F.when(event_first, t_e).otherwise(e_e)
-    so = F.when(event_first, F.lit("<t>")).otherwise(F.lit("<e>"))
-    sc = F.when(event_first, F.lit("</t>")).otherwise(F.lit("</e>"))
-    pad = F.lit(TLINK_PAD_LENGTH)
-    start = F.greatest(F.lit(0), fb - pad)
-    end_i = F.least(F.size(tokens) - F.lit(1), se + pad)
-    return F.array_join(
-        F.concat(
-            _py_slice(tokens, start, fb), F.array(fo),
-            _py_slice(tokens, fb, fe), F.array(fc),
-            _py_slice(tokens, fe, sb), F.array(so),
-            _py_slice(tokens, sb, se), F.array(sc),
-            _py_slice(tokens, se, end_i),
-        ),
-        " ",
-    )
+    reference's end-exclusive final slice), no Python boundary. Python's
+    ``x[a:b]`` is ``slice(x, a + 1, greatest(0, b - a))``: Spark's slice is
+    1-based with a non-negative length."""
+
+    def first(event, timex):  # the event's value if its packet comes first
+        return f"CASE WHEN m_tok_begin <= t_tok_begin THEN {event} ELSE {timex} END"
+
+    def py_slice(a, b):
+        return f"slice(toks_arr, ({a}) + 1, greatest(0, ({b}) - ({a})))"
+
+    e_e, t_e = "m_tok_end + 1", "t_tok_end + 1"
+    fb, fe = first("m_tok_begin", "t_tok_begin"), first(e_e, t_e)
+    sb, se = first("t_tok_begin", "m_tok_begin"), first(t_e, e_e)
+    start = f"greatest(0, ({fb}) - {TLINK_PAD_LENGTH})"
+    end = f"least(size(toks_arr) - 1, ({se}) + {TLINK_PAD_LENGTH})"
+
+    def tag(event, timex):  # the packet's open or close tag
+        return f"array({first(repr(event), repr(timex))})"
+
+    pieces = [
+        py_slice(start, fb), tag("<e>", "<t>"), py_slice(fb, fe), tag("</e>", "</t>"),
+        py_slice(fe, sb), tag("<t>", "<e>"), py_slice(sb, se), tag("</t>", "</e>"),
+        py_slice(se, end),
+    ]
+    return f"array_join(concat({', '.join(pieces)}), ' ')"
+
+
+_TLINK_INSTANCE = _tlink_instance_sql()
+# the label is inverted (X8) when the timex precedes the event in the text
+_TLINK_PRED = (
+    "concat('tlink:', CASE WHEN t_begin < m_begin THEN element_at(map({}), t_lab0)"
+    " ELSE t_lab0 END)"
+).format(", ".join(sql_str(x) for kv in LABEL_TO_INVERTED_LABEL.items() for x in kv))
 
 
 def _tlink_label_udf():
@@ -164,20 +166,6 @@ def _tlink_label_udf():
     return lab
 
 
-_INVERT_MAP_COL = None
-
-
-def _invert_map_col():
-    from .config import LABEL_TO_INVERTED_LABEL
-
-    global _INVERT_MAP_COL
-    if _INVERT_MAP_COL is None:
-        _INVERT_MAP_COL = F.create_map(
-            *[F.lit(x) for kv in LABEL_TO_INVERTED_LABEL.items() for x in kv]
-        )
-    return _INVERT_MAP_COL
-
-
 def tlink_triples_from_pairs(
     pairs: DataFrame,
     toks: DataFrame,
@@ -200,30 +188,21 @@ def tlink_triples_from_pairs(
     row-at-a-time Python loop; moving the string algebra into codegen
     removed the whole mapInPandas stage (~1.6 s of the structured path at
     sf0.1, plan: MapInPandas -> none)."""
-    tok_arr = toks.select(
-        "conv_id", "turn_idx",
-        F.when(F.col("tok_stream") == "", F.array().cast("array<string>"))
-        .otherwise(F.split("tok_stream", "\x1f")).alias("toks_arr"),
+    tok_arr = toks.selectExpr(
+        "conv_id AS k_conv_id", "turn_idx AS k_turn_idx",
+        "CASE WHEN tok_stream = '' THEN CAST(array() AS array<string>) "
+        f"ELSE split(tok_stream, {sql_str(chr(0x1f))}) END AS toks_arr",
     )
-    # one row per turn, broadcast by hint for the reason pair_window gives
-    joined = pairs.join(F.broadcast(tok_arr), ["conv_id", "turn_idx"])
-    label = F.when(
-        F.col("t_begin") < F.col("m_begin"),
-        F.element_at(_invert_map_col(), F.col("t_lab0")),
-    ).otherwise(F.col("t_lab0"))
-    out = joined.select(
-        F.col("m_annotation_id").alias("subj"),
-        F.concat(F.lit("tlink:"), label).alias("pred"),
-        F.col("t_annotation_id").alias("obj"),
-        "anchor_date", "conv_id", "turn_idx",
-        F.col("m_surface").alias("subj_text"),
-        F.col("t_normed").alias("obj_text"),
-        _tlink_instance_col(F.col("toks_arr")).alias("instance"),
+    # one row per turn, broadcast by hint and keyed null-safe for the
+    # reasons pair_window gives
+    joined = pairs.join(
+        F.broadcast(tok_arr), F.expr("conv_id <=> k_conv_id AND turn_idx <=> k_turn_idx")
     )
-    # exact schema contract (types included) with the previous shape
-    return out.select(
-        *[F.col(f.name).cast(f.dataType) for f in TRIPLE_SCHEMA.fields]
-    )
+    # TRIPLE_SCHEMA exactly, types included
+    return joined.selectExpr(*triple_exprs(
+        subj="m_annotation_id", pred=_TLINK_PRED, obj="t_annotation_id",
+        subj_text="m_surface", obj_text="t_normed", instance=_TLINK_INSTANCE,
+    ))
 
 
 def nearest_anchor_timex(mentions_f: DataFrame, timexes_f: DataFrame) -> DataFrame:
@@ -364,6 +343,13 @@ def event_event_triples(
 # fused path: transcripts -> triples in one narrow pass
 # --------------------------------------------------------------------------
 
+def note_name(conv_id, turn_idx) -> str:
+    """``{conv_id}_{turn_idx}``, the turn's part of its triple ids, as the
+    structured path's ``format_string`` renders it: a null key reads
+    ``null``."""
+    return "_".join("null" if k is None else str(k) for k in (conv_id, turn_idx))
+
+
 def turn_triples(
     conv_id: str,
     turn_idx: int,
@@ -386,7 +372,7 @@ def turn_triples(
     without one yields only its speaker/tool triples, so detecting its
     timexes would be work whose output is thrown away."""
     anchor, tokenized, mention_rows = annotate_mentions(text, ts, gazetteer, cfg)
-    note = f"{conv_id}_{turn_idx}"
+    note = note_name(conv_id, turn_idx)
     out: List[dict] = []
 
     def triple(subj, pred, obj, subj_text=None, obj_text=None, instance=None):
@@ -560,5 +546,6 @@ def fused_triples(
         for batch in batches:
             yield from triples_batch(batch, gaz, bl, c, scr).to_batches()
 
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    return transcripts.select(*cols).mapInArrow(gen, schema=TRIPLE_SCHEMA)
+    return transcripts.selectExpr(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts"
+    ).mapInArrow(gen, schema=TRIPLE_SCHEMA)

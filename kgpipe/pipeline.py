@@ -61,25 +61,32 @@ __all__ = [
 ]
 
 
-def _annotate(transcripts, gazetteer, blacklist, cfg, persist=True):
-    """build_annotations' tables (timexes=True) plus the post-W1 union
-    frame they are views of."""
+def _union(transcripts, gazetteer, blacklist, cfg):
+    """The persisted post-W1 union frame (annotate -> F1/F2/F4/F5 -> W1).
+    Without the persist the W1 window (exchange -> sort -> window) and the
+    annotate pass under it would re-execute once per consumer — entity
+    triples, both pairing sides, the token join (measured 3x subtree wall
+    at sf0.1)."""
     raw = annotate_union(transcripts, gazetteer, blacklist, cfg)
-    filtered = filter_union(raw, blacklist, cfg)
-    union = assign_union_ids(filtered)
-    if persist:
-        # the W1 window (exchange -> sort -> window) and the annotate pass
-        # under it would otherwise re-execute once per consumer — entity
-        # triples, both pairing sides, the token join (measured 3x subtree
-        # wall at sf0.1); the id-free keys read the same cache
-        union = filtered = union.persist(StorageLevel.MEMORY_AND_DISK)
+    return assign_union_ids(filter_union(raw, blacklist, cfg)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+
+
+def _id_views(union: DataFrame) -> dict:
     return {
-        "mentions_raw": kind_view(raw, 0),
-        "mentions_f": kind_view(filtered, 0),
-        "timexes_f": kind_view(filtered, 1),
         "mentions": kind_view(union, 0, ids=True),
         "timexes": kind_view(union, 1, ids=True),
-    }, union
+    }
+
+
+def _persisted_tables(union: DataFrame) -> dict:
+    """build_annotations' tables as views of the persisted union frame."""
+    return {
+        "mentions_f": kind_view(union, 0),
+        "timexes_f": kind_view(union, 1),
+        **_id_views(union),
+    }
 
 
 def build_annotations(
@@ -93,16 +100,15 @@ def build_annotations(
     """Structured intermediate tables, every one a ``kind_rank`` view of the
     union frame ``annotate_union`` emits:
 
-    * ``mentions_raw`` — mentions before F1/F2/F4;
     * ``mentions_f`` / ``timexes_f`` — after F1/F2/F4 and F5, no ids;
     * ``mentions`` / ``timexes`` — the same rows plus the W1
-      ``annotation_id``.
+      ``annotation_id``;
+    * ``mentions_raw`` — mentions before F1/F2/F4 (only with
+      ``persist=False`` or ``timexes=False``).
 
     ``persist=True`` persists the post-W1 frame MEMORY_AND_DISK and serves
-    every filtered key from it, so the annotate pass and the W1 exchange
-    run once however many consumers read the tables. ``mentions_raw`` holds
-    rows the filters have already dropped, so it stays a lazy view of the
-    annotate pass (reading it re-runs that pass).
+    every key from it, so the annotate pass and the W1 exchange run once
+    however many consumers read the tables.
 
     ``persist=False`` keeps every key lazy and the id-free keys pre-W1: a
     single-consumer plan such as mentions_f -> cross-turn edges pays no
@@ -115,15 +121,17 @@ def build_annotations(
     timex-free pass would disagree with the full pipeline's; omitting the
     keys makes that misuse impossible). With ``persist`` the raw mention
     frame is the persisted one."""
-    if timexes:
-        return _annotate(transcripts, gazetteer, blacklist, cfg, persist)[0]
-    raw = annotate_union(transcripts, gazetteer, blacklist, cfg, timexes=False)
+    if timexes and persist:
+        return _persisted_tables(_union(transcripts, gazetteer, blacklist, cfg))
+    raw = annotate_union(transcripts, gazetteer, blacklist, cfg, timexes=timexes)
     if persist:
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    return {
-        "mentions_raw": kind_view(raw, 0),
-        "mentions_f": kind_view(filter_union(raw, blacklist, cfg), 0),
-    }
+    filtered = filter_union(raw, blacklist, cfg)
+    tables = {"mentions_raw": kind_view(raw, 0), "mentions_f": kind_view(filtered, 0)}
+    if timexes:
+        tables["timexes_f"] = kind_view(filtered, 1)
+        tables.update(_id_views(assign_union_ids(filtered)))
+    return tables
 
 
 def _spread(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -138,20 +146,19 @@ def _spread(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _structured_triples(
-    transcripts: DataFrame, tables: dict, union: DataFrame, cfg: PipelineConfig
+    transcripts: DataFrame, union: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
-    """Triples from build_annotations' tables and the persisted union frame
-    they view. All joins key on (conv_id, turn_idx) and read co-partitioned
-    views of that one cached frame, so the band join, the pair groupBy and
-    the token join add zero exchanges."""
-    mentions_id, timexes_id = tables["mentions"], tables["timexes"]
+    """Triples from the persisted union frame. All joins key on (conv_id,
+    turn_idx) and read co-partitioned views of that one cached frame, so
+    the band join, the pair groupBy and the token join add zero exchanges.
+    The id'd mention and timex rows are read in the union's own columns:
+    each consumer's one projection picks what it needs."""
+    mentions_id, timexes_id = union.where("kind_rank = 0"), union.where("kind_rank = 1")
     # F3 (empty-doc skip) + O1 (entity gate on timex work) fall out of the
     # inner equi-join in pair_window: timexes of mention-less turns never
     # reach instance assembly or scoring.
     pairs = pair_window(mentions_id, timexes_id)
-    tlink = tlink_triples_from_pairs(
-        pairs, union.where(F.col("kind_rank") == 2), cfg
-    )
+    tlink = tlink_triples_from_pairs(pairs, union.where("kind_rank = 2"), cfg)
 
     out = attribution_triples(transcripts).unionByName(
         entity_mention_triples(mentions_id)
@@ -174,7 +181,7 @@ def build_triples(
     if fused:
         return fused_triples(transcripts, gazetteer, blacklist, cfg)
     return _structured_triples(
-        transcripts, *_annotate(transcripts, gazetteer, blacklist, cfg), cfg
+        transcripts, _union(transcripts, gazetteer, blacklist, cfg), cfg
     )
 
 
@@ -190,9 +197,10 @@ def build_graph(
     from .canon import canonical_nodes  # local import: optional stage
 
     transcripts = _spread(transcripts, cfg)
-    tables, union = _annotate(transcripts, gazetteer, blacklist, cfg)
+    union = _union(transcripts, gazetteer, blacklist, cfg)
+    tables = _persisted_tables(union)
     return {
-        "triples": _structured_triples(transcripts, tables, union, cfg),
+        "triples": _structured_triples(transcripts, union, cfg),
         "edges": cross_turn_event_edges(tables["mentions"], cfg),
         "nodes": canonical_nodes(tables["mentions"]),
         **tables,

@@ -78,6 +78,38 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
+_TRIPLE_KEYS = ("anchor_date", "conv_id", "turn_idx")
+
+
+def triple_exprs(**fields: str) -> list[str]:
+    """``selectExpr`` text projecting a frame onto TRIPLE_SCHEMA: each field
+    is the SQL expression given for it, cast to its type and named after
+    it. A field not given is its same-named column for the turn keys
+    (anchor_date, conv_id, turn_idx) and a typed NULL otherwise."""
+    return [
+        f"CAST({fields.get(f.name, f.name if f.name in _TRIPLE_KEYS else 'NULL')}"
+        f" AS {f.dataType.simpleString()}) AS {f.name}"
+        for f in TRIPLE_SCHEMA.fields
+    ]
+
+
+def sql_str(value) -> str:
+    """``value`` (a string or None) as a Spark SQL literal for expression
+    text. Every character outside [A-Za-z0-9 _-.:] is written as \\uXXXX
+    escapes of its UTF-16 units, so no quote, backslash or ``${...}``
+    variable reference in the value can change the text around it."""
+    if value is None:
+        return "NULL"
+    out = []
+    for ch in value:
+        if ch.isascii() and (ch.isalnum() or ch in " _-.:"):
+            out.append(ch)
+        else:
+            u = ch.encode("utf-16-be")
+            out.extend(f"\\u{u[i]:02x}{u[i + 1]:02x}" for i in range(0, len(u), 2))
+    return "'" + "".join(out) + "'"
+
+
 # the Arrow forms the mapInArrow kernels emit (extract.union_batch,
 # pair.triples_batch)
 ANNOTATION_UNION_ARROW_SCHEMA = to_arrow_schema(ANNOTATION_UNION_SCHEMA)

@@ -82,9 +82,11 @@ def test_lineage_rows_and_counts(spark, gazetteer, blacklist, tmp_path):
             # observed metrics (computed inline during the write) land in
             # lineage; the per-bucket counts stay out of stage_timings
             assert set(row.stage_timings) == {
-                "build_and_write_sec", "n_triples", "n_tlink", "n_entity",
-                "n_convs_approx",
+                "plan_sec", "build_and_write_sec", "n_triples", "n_tlink",
+                "n_entity", "n_convs_approx",
             }
+            # planning is the Spark driver's part of the same pass
+            assert 0 < row.stage_timings["plan_sec"] < row.stage_timings["build_and_write_sec"]
             assert row.stage_timings["n_triples"] == total
         sink = TableSink(spark, out_dir=out)
         assert completed_buckets(sink, "sA") == set(lineage.partition_hash)

@@ -11,6 +11,7 @@ single-process reference-style oracle (SURVEY.md §5):
 
 from __future__ import annotations
 
+import datetime as dt
 import re
 
 import pandas as pd
@@ -160,12 +161,129 @@ def test_id_format_and_window_tie_break(spark, gazetteer, blacklist):
     assert set(tl.obj) == {"1@e@cT_0@system"}
 
 
+def _rows(df) -> list:
+    """Every row of a triples frame as a tuple in TRIPLE_SCHEMA order (subj,
+    pred, obj, anchor_date, conv_id, ...), sorted; nulls stay None."""
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+_TS = dt.datetime(2024, 3, 10, 9, 30)
+# (conv_id, turn_idx, role, text, tool, ts)
+_NORMAL_TURNS = [
+    ("cN", 0, "user", "started cisplatin on 3/5/2024 and folfox yesterday", None, _TS),
+    ("cN", 1, "assistant", "On 3/1/2024 carboplatin was held", "search", _TS),
+]
+_DEGENERATE_TURNS = [
+    ("cD", None, "user", "cisplatin given on 3/5/2024", None, _TS),
+    (None, 3, "assistant", "folfox 2 weeks ago", "search", _TS),
+    (None, None, "user", "carboplatin on 3/5/2024", None, _TS),
+    ("cD", 1, "user", None, "lookup", _TS),
+    ("cD", 2, "user", "", None, _TS),
+]
+
+
 def test_empty_and_degenerate_inputs(spark, gazetteer, blacklist):
     from kgpipe.schemas import TRANSCRIPTS_SCHEMA
 
+    cfg = PipelineConfig()
     empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    assert build_triples(empty, gazetteer, blacklist, PipelineConfig(), fused=False).count() == 0
-    assert build_triples(empty, gazetteer, blacklist, PipelineConfig(), fused=True).count() == 0
+    assert build_triples(empty, gazetteer, blacklist, cfg, fused=False).count() == 0
+    assert build_triples(empty, gazetteer, blacklist, cfg, fused=True).count() == 0
+
+    # turns with a null key or null/empty text mixed into a batch: both
+    # paths give the same rows (a null key reads `null` in every id), and
+    # the normal turns' rows are the ones a run without the others gives
+    mixed = spark.createDataFrame(_NORMAL_TURNS + _DEGENERATE_TURNS, TRANSCRIPTS_SCHEMA)
+    s = _rows(build_triples(mixed, gazetteer, blacklist, cfg, fused=False))
+    assert s == _rows(build_triples(mixed, gazetteer, blacklist, cfg, fused=True))
+    subjects = {r[0] for r in s}
+    assert {"turn@cD_null", "turn@null_3", "turn@null_null", "turn@cD_1"} <= subjects
+    # the null-keyed turns pair their mention with their timex
+    assert {
+        (r[0], r[2]) for r in s if r[1].startswith("tlink:") and r[4] != "cN"
+    } == {
+        ("0@e@cD_null@system", "1@e@cD_null@system"),
+        ("0@e@null_3@system", "1@e@null_3@system"),
+        ("0@e@null_null@system", "1@e@null_null@system"),
+    }
+    normal = spark.createDataFrame(_NORMAL_TURNS, TRANSCRIPTS_SCHEMA)
+    for fused in (False, True):
+        alone = _rows(build_triples(normal, gazetteer, blacklist, cfg, fused=fused))
+        assert [r for r in s if r[4] == "cN"] == alone, fused
+
+
+def test_config_values_quoted_into_expressions(spark, blacklist):
+    """A ``keep_tui`` holding a quote, a backslash, a ``${...}`` variable
+    reference and non-ASCII text reaches the structured path's F1
+    predicate as the same string: both paths keep the same mentions."""
+    from kgpipe.resources import Gazetteer, builtin_gazetteer_rows
+    from kgpipe.schemas import TRANSCRIPTS_SCHEMA
+
+    tui = "T'0\\6${x}\u00e9\U0001F600\n"
+    gaz = Gazetteer.from_rows(
+        [(c, tui if t == "T061" else t, term) for c, t, term in builtin_gazetteer_rows()]
+    )
+    cfg = PipelineConfig(keep_tui=tui)
+    df = spark.createDataFrame(_NORMAL_TURNS, TRANSCRIPTS_SCHEMA)
+    s = _rows(build_triples(df, gaz, blacklist, cfg, fused=False))
+    assert s == _rows(build_triples(df, gaz, blacklist, cfg, fused=True))
+    assert sum(r[1] == "entity-mention" for r in s) == 3
+
+
+# Corner cases of the structured path's tlink label and instance
+# expressions (pair.tlink_triples_from_pairs), each a turn of its own. The
+# gazetteer adds two T061 terms that are also timex words, so a mention
+# and a timex can start on the same token.
+_EDGE_TERMS = [("C900", "T061", "today"), ("C901", "T061", "today regimen")]
+_EDGE_BATTERY = [
+    # the timex precedes the mention: inverted label, <t> packet first
+    "On 3/5/2024 cisplatin was given",
+    # mention and timex on the same single token: the event wins the tie
+    "today",
+    # a two-token mention and a timex starting on its first token
+    "today regimen started on 3/5/2024",
+    # pads clamp at token 0 and at the last token; adjacent packets leave
+    # an empty slice between them
+    "cisplatin yesterday",
+    "yesterday folfox",
+    # a <newline> token between the packets
+    "cisplatin\n3/5/2024",
+]
+
+
+@pytest.mark.parametrize("use_dtr", [False, True])
+def test_tlink_expression_edges(spark, blacklist, use_dtr):
+    """Both paths equal the oracle row for row, instances included, on the
+    tlink expressions' corner cases."""
+    from kgpipe.resources import Gazetteer, builtin_gazetteer_rows
+    from kgpipe.schemas import TRANSCRIPTS_SCHEMA, TRIPLE_SCHEMA
+
+    from .oracle_ref import process_turn
+
+    gaz = Gazetteer.from_rows(builtin_gazetteer_rows() + _EDGE_TERMS)
+    cfg = PipelineConfig(use_dtr=use_dtr)
+    turns = [("cE", i, "user", text, None, _TS) for i, text in enumerate(_EDGE_BATTERY)]
+    want = sorted(
+        (
+            tuple(d[k] for k in TRIPLE_SCHEMA.fieldNames())
+            for c, i, role, text, tool, ts in turns
+            for d in process_turn(c, i, role, tool, ts, text, gaz, blacklist, cfg)
+        ),
+        key=repr,
+    )
+    instances = {r[-1] for r in want if r[1].startswith("tlink:")}
+    assert {
+        "On <t> 3 / 5 / 2024 </t> <e> cisplatin </e> was",
+        "<e> today </e> <t> today </t>",
+        "<e> cisplatin </e> <t> yesterday </t>",
+        "<t> yesterday </t> <e> folfox </e>",
+        "<e> cisplatin </e> <newline> <t> 3 / 5 / 2024 </t>",
+    } <= instances, instances
+    assert ("tlink:before", "2024-03-05") in {(r[1], r[7]) for r in want}
+    df = spark.createDataFrame(turns, TRANSCRIPTS_SCHEMA)
+    for fused in (False, True):
+        got = _rows(build_triples(df, gaz, blacklist, cfg, fused=fused))
+        assert got == want, fused
 
 
 # O1 gate battery: every turn carries timexes, and only the last two can
