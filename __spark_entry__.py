@@ -33,6 +33,7 @@ unlikely on real data and absent on the driver corpus.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -80,22 +81,29 @@ _CFG = DEFAULT_CONFIG
 # shared inputs
 # --------------------------------------------------------------------------
 
-def _spread_small(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a scan that cannot split (single-row-group
-    parquet + the 4 MB open-cost floor leave the driver tables at 1-2
-    partitions, serializing every downstream narrow stage on 1-2 cores of
-    local[32]). Content-neutral; fires only when the scan yields fewer
-    splits than cores, so a production-scale table (thousands of row
-    groups) passes through untouched with no shuffle."""
-    spark = df.sparkSession
+@lru_cache(maxsize=None)
+def _spread_to(spark: SparkSession, path: str) -> int:
+    """Partition count to round-robin a scan of ``path`` to, or 0 to leave
+    it as read. A scan that cannot split (single-row-group parquet + the
+    4 MB open-cost floor leave the sf tables at 1-2 partitions)
+    serializes every downstream narrow stage on 1-2 cores; it is spread
+    to 3 tasks per core. A production-scale table (thousands of row
+    groups) splits at least once per core and passes through with no
+    shuffle. Decided once per (session, path): the split count plans a
+    scan, and every query re-reads the same few tables."""
     cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        return df.repartition(3 * cores)
-    return df
+    splits = spark.read.parquet(path).rdd.getNumPartitions()
+    return 3 * cores if splits < cores else 0
+
+
+def _read_spread(spark: SparkSession, path: str, spread: bool = True) -> DataFrame:
+    df = spark.read.parquet(path)
+    n = spread and _spread_to(spark, path)
+    return df.repartition(n) if n else df
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread_small(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _read_spread(spark, f"{sf_dir}/documents.parquet")
 
 
 def _docs_plus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,8 +128,7 @@ def _embeddings(
     """``spread=False`` skips the small-scan repartition for consumers
     whose per-row work is trivial (the 10k-row brute-force cross join):
     there the added exchange costs more than the parallelism buys."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _spread_small(df) if spread else df
+    return _read_spread(spark, f"{sf_dir}/embeddings.parquet", spread)
 
 
 def _emb_plus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -702,9 +709,10 @@ def _q_timeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_canon_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity canonicalization: MinHash-LSH blocking (md5-portable hashes)
-    + connected components via min-label propagation. The DuckDB oracle
-    replays the identical hash/band/Jaccard algebra and closes components
-    with a recursive CTE, so this iterative op still gets an exact check."""
+    + connected components (graph.connected_components, run to its
+    fixpoint). The DuckDB oracle replays the identical hash/band/Jaccard
+    algebra and closes components with a recursive CTE, so this iterative
+    op still gets an exact check."""
     from kgpipe.canon import canonical_nodes
 
     mentions = _annotations(spark, sf_dir)["mentions_f"]

@@ -6,20 +6,21 @@ north_star requires real surface-form merging, so:
 
 1. candidate edges between distinct mention surfaces from
    (a) shared gazetteer CUI, and
-   (b) MinHash-LSH over char-3-gram shingles — pure DataFrame algebra:
-       explode shingles -> k min-hash aggregates in ONE groupBy ->
-       band keys -> self-join per band (blocking), verified by true
-       n-gram Jaccard so LSH false positives never merge clusters;
-2. connected components via iterative min-label propagation over the
-   undirected edge list (GraphFrames-style, dependency-free), label = lexical
-   min surface; ``localCheckpoint`` per iteration truncates the plan lineage;
-   iteration is bounded and convergence-checked.
+   (b) MinHash-LSH over char-3-gram shingles, verified by exact n-gram
+       Jaccard so LSH false positives never merge clusters;
+2. connected components over the undirected edge list, label = lexical min
+   surface.
+
+Everything past the shingling is composed from the near-duplicate toolkit
+the document-dedup path uses: ``textops.minhash_signatures``,
+``banded_keys``, ``band_join`` and ``exact_jaccard``, then
+``graph.connected_components`` (hash-to-min with pointer doubling, stopped
+at its fixpoint).
 
 Scale notes: surfaces are DISTINCT mention strings — cardinality grows with
 vocabulary, not corpus size, so the self-join stays small even at 10^12
 turns; the banding self-join is an equi-join on band keys (shuffle on a
-well-distributed hash); label propagation is O(diameter) iterations of
-equi-joins.
+well-distributed hash); components close in O(log diameter) rounds.
 """
 
 from __future__ import annotations
@@ -27,23 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "surface_shingles",
-    "minhash_signatures",
-    "lsh_candidate_pairs",
-    "connected_components",
-    "canonical_nodes",
-]
+from .graph import connected_components
+from .textops import band_join, banded_keys, exact_jaccard, minhash_signatures
 
-_PRIME = 2305843009213693951  # 2^61 - 1
-
-
-def _portable_hash(col, seed: int):
-    """Deterministic 60-bit integer hash of a string column (md5-prefix
-    based, reproducible in any engine — the DuckDB oracle replays it)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 15), 16, 10
-    ).cast("bigint")
+__all__ = ["surface_shingles", "canonical_nodes"]
 
 
 def surface_shingles(surfaces: DataFrame, n: int = 3) -> DataFrame:
@@ -61,110 +49,6 @@ def surface_shingles(surfaces: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(shingled: DataFrame, k: int = 12) -> DataFrame:
-    """(surface, shingle) -> (surface, sig_0..sig_{k-1}) — k min-hash values
-    computed in ONE aggregation pass."""
-    aggs = [
-        F.min(_portable_hash(F.col("shingle"), seed)).alias(f"sig_{seed}")
-        for seed in range(k)
-    ]
-    return shingled.groupBy("surface").agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, k: int = 12, bands: int = 4
-) -> DataFrame:
-    """Band the signature, self-join per band key -> candidate (a, b) pairs
-    with a < b. rows_per_band = k // bands."""
-    from .textops import banded_keys
-
-    banded = banded_keys(signatures, "surface", k=k, bands=bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.surface") < F.col("r.surface")),
-        )
-        .select(F.col("l.surface").alias("a"), F.col("r.surface").alias("b"))
-        .distinct()
-    )
-
-
-def _jaccard_verify(pairs: DataFrame, shingled: DataFrame, threshold: float) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs (kills LSH false positives)."""
-    sizes = shingled.groupBy("surface").agg(F.count("*").alias("n_sh"))
-    inter = (
-        pairs.join(shingled.withColumnRenamed("surface", "a"), "a")
-        .join(
-            shingled.withColumnRenamed("surface", "b").withColumnRenamed("shingle", "shingle_b"),
-            "b",
-        )
-        .where(F.col("shingle") == F.col("shingle_b"))
-        .groupBy("a", "b")
-        .agg(F.countDistinct("shingle").alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("surface", "a").withColumnRenamed("n_sh", "n_a"), "a")
-        .join(sizes.withColumnRenamed("surface", "b").withColumnRenamed("n_sh", "n_b"), "b")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b")
-    )
-
-
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """Min-label propagation. edges(a, b) undirected; vertices(id).
-    Returns (id, component) with component = lexical min member id.
-    Converges in O(component diameter) rounds; bounded by ``max_iter``
-    (hash-prefix chains in fixtures keep diameters small; adversarial chains
-    cost extra rounds, never correctness — the bound is asserted by tests).
-    """
-    und = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        # the edge list is re-joined every iteration: checkpoint it once so
-        # the (possibly deep) edge-derivation lineage never re-executes
-        .localCheckpoint(eager=True)
-    )
-    labels = vertices.select(F.col("id"), F.col("id").alias("component"))
-    if und.isEmpty():  # no edges -> every vertex is its own component
-        return labels
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und["src"] == labels["id"])
-            .groupBy("dst")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["dst"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
 def canonical_nodes(
     mentions_f: DataFrame,
     *,
@@ -178,11 +62,12 @@ def canonical_nodes(
 
     surfaces sharing a CUI or LSH-similar (verified) surfaces merge; the
     canonical node id is ``entity:<lexical-min surface>``, canonical_cui the
-    min CUI in the cluster, surfaces the sorted member list.
+    min CUI in the cluster, surfaces the sorted member list. ``max_iter``
+    bounds the connected-components rounds; the loop stops at the fixpoint.
     """
     # surf is vocabulary-bounded (distinct surface strings, not corpus rows)
     # and fans out into 6+ downstream branches (cui self-join, shingling,
-    # CC vertices, final membership join); persisting it cuts the expensive
+    # final membership join); persisting it cuts the expensive
     # mention-extraction lineage to ONE execution instead of one per branch.
     surf = (
         mentions_f.select(F.lower(F.trim("surface")).alias("surface"), "cui")
@@ -191,32 +76,34 @@ def canonical_nodes(
         # once per concurrent branch of the first fan-out action
         .localCheckpoint(eager=True)
     )
-    surfaces = surf.select("surface").distinct()
 
     cui_edges = (
         surf.alias("x")
         .join(surf.alias("y"), "cui")
         .where(F.col("x.surface") < F.col("y.surface"))
         .select(F.col("x.surface").alias("a"), F.col("y.surface").alias("b"))
-        .distinct()
     )
     # shingled is referenced by the signature agg and three times inside the
-    # Jaccard verify — also vocabulary-bounded, also worth one materialization
-    shingled = surface_shingles(surfaces).localCheckpoint(eager=True)
-    sigs = minhash_signatures(shingled, k=k)
-    lsh_pairs = lsh_candidate_pairs(sigs, k=k, bands=bands)
-    lsh_edges = _jaccard_verify(lsh_pairs, shingled, jaccard_threshold)
-
-    edges = cui_edges.unionByName(lsh_edges).distinct()
-    comps = connected_components(
-        edges, surfaces.select(F.col("surface").alias("id")), max_iter=max_iter
+    # Jaccard check — also vocabulary-bounded, also worth one materialization
+    shingled = surface_shingles(surf.select("surface").distinct()).localCheckpoint(
+        eager=True
     )
-    membered = comps.join(
-        surf.withColumnRenamed("surface", "id"), "id"
+    sigs = minhash_signatures(shingled, "surface", k=k)
+    lsh_pairs = band_join(banded_keys(sigs, "surface", k=k, bands=bands), "surface")
+    lsh_edges = exact_jaccard(lsh_pairs, shingled, "surface", jaccard_threshold)
+
+    edges = cui_edges.unionByName(lsh_edges.select("a", "b"))
+    comps = connected_components(
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+        rounds=max_iter,
+    )
+    # a surface with no edge is its own component
+    membered = surf.join(comps, surf["surface"] == comps["node"], "left").select(
+        "surface", "cui", F.coalesce("component", "surface").alias("component")
     )
     return membered.groupBy("component").agg(
         F.format_string("entity:%s", F.col("component")).alias("node_id"),
         F.lit("entity").alias("kind"),
         F.min("cui").alias("canonical_cui"),
-        F.sort_array(F.collect_set("id")).alias("surfaces"),
+        F.sort_array(F.collect_set("surface")).alias("surfaces"),
     ).select("node_id", "kind", "canonical_cui", "surfaces")

@@ -2,7 +2,8 @@
 
 Window sizes mirror the reference's constants
 (timeline_delegator.py:23-27): DTR_WINDOW_RADIUS=10, MAX_TLINK_DISTANCE=60,
-TLINK_PAD_LENGTH=2, CHEMO_TUI='T061'.
+TLINK_PAD_LENGTH=2 (score.TLINK_PAD_LENGTH, not configurable),
+CHEMO_TUI='T061'.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ class PipelineConfig:
     # reference constants (timeline_delegator.py:23-27)
     max_tlink_distance: int = 60      # token window for mention<->timex pairing
     dtr_window_radius: int = 10       # token context for DTR instances
-    tlink_pad_length: int = 2         # pad tokens around tlink instances
     keep_tui: str = "T061"            # TUI filter (F1)
     min_term_span: int = 2            # minimumSpan=2 (Timelines.piper:14)
 
@@ -28,7 +28,6 @@ class PipelineConfig:
     all_spans: bool = True
 
     # materialization
-    n_buckets: int = 64               # bucket(conv_id) partitioning for writes
     salt_partitions: int = 0          # >0: salted repartition before grouped ops
 
     # hot-conversation chunking for cross-turn stages (chunk + halo)

@@ -573,8 +573,8 @@ def tlink_conflicts(triples: DataFrame) -> DataFrame:
 def connected_components(edges: DataFrame, *, rounds: int = 6) -> DataFrame:
     """Weakly connected components over an EDGE_SCHEMA-shaped edge list via
     deterministic min-label propagation with pointer doubling (the
-    "hash-to-min" dataflow CC — the general-graph version of canon.py's
-    vocabulary-bounded bounded-CC).
+    "hash-to-min" dataflow CC; Rastogi et al., ICDE 2013). Shared by the
+    cross-turn graph, doc-dedup clustering and surface canonicalization.
 
     Each round does two label updates:
       propagate   l(v) <- min(l(v), min over neighbors u of l(u))
@@ -591,6 +591,11 @@ def connected_components(edges: DataFrame, *, rounds: int = 6) -> DataFrame:
     ~log2(diameter)+1 rounds with a +1..2 margin rather than the bare
     log; at diameter 33 the exact need is 7, not 6. Result is well-defined for any graph as "labels after r
     compound rounds" — same spec in the SQL oracle.
+
+    The loop stops after the first round that lowers no label: that round
+    is a fixpoint, so every later round would return the same rows. The
+    round-start label rides the round as ``label0`` and the test reads the
+    round's own checkpoint (one limit-1 scan, no join).
 
     Scale shape: per round, one shuffle keyed on node for the neighbor-min
     aggregate and one self-join on the label — the standard distributed CC;
@@ -631,6 +636,7 @@ def connected_components(edges: DataFrame, *, rounds: int = 6) -> DataFrame:
             lab.join(nbr_min, lab["node"] == nbr_min["src"], "left")
             .select(
                 "node",
+                F.col("label").alias("label0"),
                 F.least(
                     F.col("label"), F.coalesce("nbr_label", F.col("label"))
                 ).alias("label"),
@@ -649,12 +655,15 @@ def connected_components(edges: DataFrame, *, rounds: int = 6) -> DataFrame:
             )
             .select(
                 F.col("a.node").alias("node"),
+                "a.label0",
                 F.least(
                     F.col("a.label"), F.coalesce("llabel", F.col("a.label"))
                 ).alias("label"),
             )
             .localCheckpoint(eager=True)
         )
+        if lab.where(F.col("label") < F.col("label0")).isEmpty():
+            break
     sizes = lab.groupBy("label").agg(F.count(F.lit(1)).alias("component_size"))
     return (
         lab.join(sizes, "label")

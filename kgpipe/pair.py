@@ -25,11 +25,13 @@ tool triples with ``pyarrow.compute``.
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import List
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, LABEL_TO_INVERTED_LABEL, PipelineConfig
@@ -73,7 +75,8 @@ def pair_window(
     # timex side — one narrow vectorized UDF over |timexes| rows — and
     # rides the join, instead of running over the ~5x larger pair set
     t = timexes_f.withColumn(
-        "t_lab0", _tlink_label_udf()("normed", "anchor_date")
+        "t_lab0",
+        _tlink_label_udf(timexes_f.sparkSession.sparkContext)("normed", "anchor_date"),
     ).selectExpr(
         "conv_id AS t_conv_id", "turn_idx AS t_turn_idx",
         "`begin` AS t_begin", "`end` AS t_end",
@@ -133,14 +136,19 @@ _TLINK_PRED = (
 ).format(", ".join(sql_str(x) for kv in LABEL_TO_INVERTED_LABEL.items() for x in kv))
 
 
-def _tlink_label_udf():
+@lru_cache(maxsize=1)
+def _tlink_label_udf(sc):
     """tlink_label over (normed, anchor) as a vectorized UDF: the
     TimeML-interval parse runs once per DISTINCT (normed, anchor) in the
     Arrow batch (values repeat heavily — a few hundred distinct anchors
     over ~1M pairs at sf0.1), exactly the per-distinct memo shape of the
-    event-event scorer."""
+    event-event scorer.
 
-    @F.pandas_udf("string")
+    Built once per SparkContext ``sc`` (the cache key): a UDF pickles its
+    function into a JVM object on first use, and that object belongs to
+    the context active then."""
+
+    @F.pandas_udf(T.StringType())
     @worker_body
     def lab(normed: pd.Series, anchor: pd.Series) -> pd.Series:
         cache: dict = {}
@@ -236,7 +244,8 @@ def nearest_anchor_timex(mentions_f: DataFrame, timexes_f: DataFrame) -> DataFra
     )
 
 
-def _ee_label_udf():
+@lru_cache(maxsize=1)
+def _ee_label_udf(sc):
     """Interval-algebra label between two TimeML values (the event-event
     analog of the U1 scorer; documented spec, shared with the oracle):
     either side unparseable/missing -> 'none'; disjoint -> 'before'/'after'
@@ -247,13 +256,14 @@ def _ee_label_udf():
     TimeML value in the Arrow batch, not once per pair — anchor values
     repeat heavily (175k pairs over a few hundred distinct anchors at
     sf0.1), so the parse cost is O(distinct), and the interval algebra
-    itself is vectorized int64 ordinal comparisons via ``np.select``."""
+    itself is vectorized int64 ordinal comparisons via ``np.select``.
+    Built once per SparkContext ``sc``, as ``_tlink_label_udf``."""
     import numpy as np  # noqa: F811 (worker-side import)
     import pandas as pd  # noqa: F811 (worker-side import)
 
     from .timex import timeml_interval
 
-    @F.pandas_udf("string")
+    @F.pandas_udf(T.StringType())
     @worker_body
     def ee_label(na: pd.Series, nb: pd.Series) -> pd.Series:
         uniq = pd.unique(pd.concat([na, nb], ignore_index=True).dropna())
@@ -322,7 +332,7 @@ def event_event_triples(
             F.col("a.win_char_begin"), F.col("a.win_char_end")
         )
     )
-    label = _ee_label_udf()
+    label = _ee_label_udf(mentions_id.sparkSession.sparkContext)
     out = pairs.select(
         F.col("a.annotation_id").alias("subj"),
         F.concat(

@@ -30,8 +30,11 @@ from .worker import worker_body
 __all__ = [
     "exact_dedup",
     "doc_shingles",
-    "doc_minhash_signatures",
+    "minhash_signatures",
+    "banded_keys",
+    "band_join",
     "minhash_dup_pairs",
+    "exact_jaccard",
     "ngram_jaccard_pairs",
     "simhash",
     "simhash_dup_pairs",
@@ -114,12 +117,15 @@ def doc_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     return _word_grams(documents, n, clamp=True).distinct()
 
 
-def doc_minhash_signatures(shingled: DataFrame, k: int = 16) -> DataFrame:
+def minhash_signatures(shingled: DataFrame, id_col: str, *, k: int) -> DataFrame:
+    """(id, shingle) -> (id, sig_0..sig_{k-1}): k min-hash values in ONE
+    aggregation pass. min() is duplicate-insensitive, so ``shingled`` may
+    hold repeated rows."""
     aggs = [
         F.min(_portable_hash(F.col("shingle"), seed)).alias(f"sig_{seed}")
         for seed in range(k)
     ]
-    return shingled.groupBy("doc_id").agg(*aggs)
+    return shingled.groupBy(id_col).agg(*aggs)
 
 
 def banded_keys(
@@ -147,31 +153,75 @@ def banded_keys(
     ).select(id_col, "bk.band", "bk.band_key")
 
 
-def minhash_dup_pairs(
-    documents: DataFrame, *, n: int = 3, k: int = 16, bands: int = 4
-) -> DataFrame:
-    """MinHash+LSH near-duplicate candidates: (doc_a, doc_b, n_bands_hit)
-    with doc_a < doc_b. Docs colliding in >=1 band are candidates; the
-    n_bands_hit count orders by similarity evidence."""
-    # min() is duplicate-insensitive, so the signatures read the RAW gram
-    # stream — doc_shingles' distinct() added a full shuffle of every gram
-    # and, worse, blocked map-side partial aggregation (the 8 min-aggs now
-    # compress ~50 grams/doc to one row per doc before the exchange)
-    sigs = doc_minhash_signatures(_word_grams(documents, n, clamp=True), k=k)
-    banded = banded_keys(sigs, "doc_id", k=k, bands=bands)
+def band_join(banded: DataFrame, id_col: str) -> DataFrame:
+    """Self-join of ``banded_keys`` output on (band, band_key):
+    (a, b, n_bands_hit) with a < b, one row per pair colliding in >= 1
+    band. Shared by the doc-dedup and the surface-canon LSH paths."""
     l, rgt = banded.alias("l"), banded.alias("r")
     return (
         l.join(
             rgt,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
         )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
+        .groupBy(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
         .agg(F.count("*").alias("n_bands_hit"))
     )
+
+
+def minhash_dup_pairs(
+    documents: DataFrame, *, n: int = 3, k: int = 16, bands: int = 4
+) -> DataFrame:
+    """MinHash+LSH near-duplicate candidates: (doc_a, doc_b, n_bands_hit)
+    with doc_a < doc_b. Docs colliding in >=1 band are candidates; the
+    n_bands_hit count orders by similarity evidence."""
+    # the signatures read the RAW gram stream — doc_shingles' distinct()
+    # added a full shuffle of every gram and, worse, blocked map-side
+    # partial aggregation (the 8 min-aggs now compress ~50 grams/doc to one
+    # row per doc before the exchange)
+    sigs = minhash_signatures(_word_grams(documents, n, clamp=True), "doc_id", k=k)
+    return band_join(banded_keys(sigs, "doc_id", k=k, bands=bands), "doc_id").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "n_bands_hit"
+    )
+
+
+def _jaccard_from_counts(
+    inter: DataFrame, shingled: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """inter(a, b, n_inter) + the distinct (id, shingle) frame ->
+    (a, b, jaccard) with jaccard >= threshold."""
+    sizes = shingled.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    return (
+        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("n_a")), "a")
+        .join(sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("n_b")), "b")
+        .withColumn(
+            "jaccard",
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
+def exact_jaccard(
+    pairs: DataFrame, shingled: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact shingle-set Jaccard of candidate pairs(a, b) over the DISTINCT
+    (id, shingle) frame: (a, b, jaccard) with jaccard >= threshold. The
+    recount reads every shingle of both sides, so LSH or hot-shingle
+    candidate cuts never approximate a score."""
+    inter = (
+        pairs.join(shingled.alias("x"), F.col("a") == F.col(f"x.{id_col}"))
+        .join(
+            shingled.alias("y"),
+            (F.col("b") == F.col(f"y.{id_col}"))
+            & (F.col("x.shingle") == F.col("y.shingle")),
+        )
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    return _jaccard_from_counts(inter, shingled, id_col, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -195,27 +245,22 @@ def ngram_jaccard_pairs(
     shingles, so any pair with at least one sub-threshold-frequency shingle
     is found (pytest-property-tested; the driver query runs with the cut
     active and still matches the full-jaccard oracle)."""
-    from pyspark import StorageLevel
-
     # the shingle set feeds sizes, the df-cut, BOTH sides of the candidate
     # join and BOTH sides of the exact re-count — 6 subtree executions of
-    # the explode+distinct without a persist (one of them eager, for the
-    # hot-shingle log line); pin it once per call. The cache entry lives
-    # until the session's next clearCache (bench does this per query) —
-    # long-lived callers invoking this per-corpus should clearCache or
-    # accept one shingle-frame-sized entry per invocation.
-    sh = doc_shingles(documents, n=n).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    # the explode+distinct without pinning it (one of them eager, for the
+    # hot-shingle log line). An eager localCheckpoint pins it once per
+    # call; Spark's ContextCleaner drops its blocks once the frame is
+    # unreachable, so repeated calls leave no cache entry behind.
+    sh = doc_shingles(documents, n=n).localCheckpoint(eager=True)
     if max_shingle_df is None:
         inter = (
             sh.alias("x")
             .join(sh.alias("y"), "shingle")
             .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .groupBy(
-                F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-            )
+            .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
             .agg(F.count("*").alias("n_inter"))
         )
+        scored = _jaccard_from_counts(inter, sh, "doc_id", threshold)
     else:
         dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         n_hot = dfreq.where(F.col("df") > max_shingle_df).count()
@@ -232,31 +277,12 @@ def ngram_jaccard_pairs(
             sh_rare.alias("x")
             .join(sh_rare.alias("y"), "shingle")
             .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-            )
+            .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
             .distinct()
         )
-        # exact intersection over the FULL shingle sets of each candidate
-        inter = (
-            cand.join(sh.alias("a"), F.col("doc_a") == F.col("a.doc_id"))
-            .join(
-                sh.alias("b"),
-                (F.col("doc_b") == F.col("b.doc_id"))
-                & (F.col("a.shingle") == F.col("b.shingle")),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        scored = exact_jaccard(cand, sh, "doc_id", threshold)
+    return scored.select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "jaccard"
     )
 
 

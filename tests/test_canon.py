@@ -1,29 +1,13 @@
-"""Canonicalization: MinHash-LSH blocking + connected components."""
+"""Canonicalization: MinHash-LSH blocking + connected components (the
+connected-components cases live in test_graph_summary.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe.canon import (
-    canonical_nodes,
-    connected_components,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    surface_shingles,
-)
-
-
-def test_connected_components_chain(spark):
-    """Adversarial chain a-b-c-d-e must converge to one component
-    (SURVEY.md §7.4.7)."""
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")],
-        "a string, b string",
-    )
-    verts = spark.createDataFrame([(v,) for v in "abcdexy"], "id string")
-    comps = {r.id: r.component for r in connected_components(edges, verts).collect()}
-    assert comps == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
+from kgpipe.canon import canonical_nodes, surface_shingles
+from kgpipe.textops import band_join, banded_keys, minhash_signatures
 
 
 def test_lsh_self_similarity(spark):
@@ -33,8 +17,9 @@ def test_lsh_self_similarity(spark):
         "surface string",
     )
     sh = surface_shingles(surf.distinct())
-    sigs = minhash_signatures(sh, k=12)
-    pairs = {(r.a, r.b) for r in lsh_candidate_pairs(sigs, k=12, bands=6).collect()}
+    sigs = minhash_signatures(sh, "surface", k=12)
+    banded = banded_keys(sigs, "surface", k=12, bands=6)
+    pairs = {(r.a, r.b) for r in band_join(banded, "surface").collect()}
     assert any("fluorouracil" in a and "fluorouracil" in b for a, b in pairs)
 
 

@@ -263,6 +263,41 @@ def test_components_chain_converges_past_naive_reach(spark):
     assert all(v[1] == 40 for v in got.values())
 
 
+def test_components_chain_and_pair(spark):
+    # the chain a-b-c-d-e converges to one component beside an island
+    # (SURVEY.md §7.4.7)
+    got = _cc(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")])
+    assert got == {
+        **{v: ("a", 5) for v in "abcde"},
+        "x": ("x", 2), "y": ("x", 2),
+    }
+
+
+def test_components_stop_at_fixpoint(spark, monkeypatch):
+    """A 40-node chain needs 39 naive propagation steps; hash-to-min closes
+    it within a smaller ``rounds`` and, given a larger one, stops one round
+    after the labels stop moving (that round's emptiness probe finds no
+    lowered label)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    names = [f"n{i:02d}" for i in range(40)]
+    chain = list(zip(names, names[1:]))
+    closed = {n: ("n00", 40) for n in names}
+    need = next(r for r in range(1, 12) if _cc(spark, chain, rounds=r) == closed)
+    assert need < 39
+
+    probes = [0]
+    real = DataFrame.isEmpty
+
+    def counting(self):
+        probes[0] += 1
+        return real(self)
+
+    monkeypatch.setattr(DataFrame, "isEmpty", counting)
+    assert _cc(spark, chain, rounds=20) == closed
+    assert probes[0] == need + 1
+
+
 def test_components_self_loop_singleton(spark):
     got = _cc(spark, [("a", "a"), ("b", "c")])
     assert got["a"] == ("a", 1)

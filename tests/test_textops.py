@@ -134,6 +134,17 @@ def test_ngram_jaccard_hot_shingle_cut_property(spark):
     assert cut == full and (0, 1) in cut
 
 
+def test_ngram_jaccard_leaves_no_cache_entry(spark, docs):
+    """The shingle frame is pinned by a checkpoint, not a cache entry, so
+    repeated calls in a long-lived session leave the CacheManager as they
+    found it."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    for cut in (None, 3):
+        assert ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=cut).count() > 0
+    assert cm.numCachedEntries() == before
+
+
 def test_redact_pii_order_and_counts(spark):
     from kgpipe.textops import redact_pii
 

@@ -100,10 +100,11 @@ def main() -> int:
 
     from kgpipe.session import get_spark
     from kgpipe.textops import (
+        banded_keys,
         dedup_clusters,
-        doc_minhash_signatures,
         doc_shingles,
         minhash_dup_pairs,
+        minhash_signatures,
     )
     from kgpipe.graph import connected_components
 
@@ -132,16 +133,12 @@ def main() -> int:
     # structural bounds: candidate volume + hottest band bucket
     pairs = minhash_dup_pairs(docs, n=3, k=8, bands=4)
     n_pairs = pairs.count()
-    sigs = doc_minhash_signatures(doc_shingles(docs, n=3), k=8)
-    r = 8 // 4
-    hot = 0
-    for b in range(4):
-        cols = [F.col(f"sig_{i}").cast("string") for i in range(b * r, (b + 1) * r)]
-        m = (
-            sigs.select(F.md5(F.concat_ws("|", *cols)).alias("key"))
-            .groupBy("key").count().agg(F.max("count")).first()[0]
-        )
-        hot = max(hot, int(m))
+    sigs = minhash_signatures(doc_shingles(docs, n=3), "doc_id", k=8)
+    hot = int(
+        banded_keys(sigs, "doc_id", k=8, bands=4)
+        .groupBy("band", "band_key").count()
+        .agg(F.max("count")).first()[0]
+    )
 
     # planted truth: even groups are 4-dup quadruples -> every such doc in a
     # cluster of >=4; candidate pairs ~ 6 per dup group, never ~n^2/2
