@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .annotate import annotate_turn
 from .config import DEFAULT_CONFIG, PipelineConfig
+from .resources import broadcast_artifacts
 from .schemas import ANNOTATION_UNION_ARROW_SCHEMA, ANNOTATION_UNION_SCHEMA, sql_str
 from .score import tokens_for_mode
 from .worker import local_wall_ts, worker_body
@@ -71,8 +72,7 @@ def annotate_union(
     timex detection is skipped (~35% of per-turn CPU) and only kind_rank 0
     rows are emitted, so the Arrow boundary carries no timex or token
     rows."""
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg))
+    bc = broadcast_artifacts(transcripts.sparkSession.sparkContext, gazetteer, blacklist, cfg)
 
     @worker_body
     def gen(batches):

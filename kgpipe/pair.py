@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, LABEL_TO_INVERTED_LABEL, PipelineConfig
+from .resources import broadcast_artifacts
 from .schemas import TRIPLE_ARROW_SCHEMA, TRIPLE_SCHEMA, sql_str, triple_exprs
 from .score import (
     TLINK_PAD_LENGTH,
@@ -545,10 +546,10 @@ def fused_triples(
     anywhere). This is the 100-TB scale path: throughput is bounded only by
     scan + CPU, partitions never exchange. Python runs per turn only where
     ``text.mention_screen`` lets a mention through (see ``triples_batch``);
-    the screen pattern is built once here and rides the broadcast."""
-    spark = transcripts.sparkSession
-    screen = mention_screen(gazetteer, blacklist, cfg)
-    bc = spark.sparkContext.broadcast((gazetteer, blacklist, cfg, screen))
+    the screen pattern is built with the broadcast and rides it."""
+    bc = broadcast_artifacts(
+        transcripts.sparkSession.sparkContext, gazetteer, blacklist, cfg, mention_screen
+    )
 
     @worker_body
     def gen(batches):

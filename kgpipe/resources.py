@@ -9,16 +9,19 @@ Mirrors the reference's dictionary-lookup inputs:
   filter semantics (EventFilter.java:100-134).
 
 Both are tiny dimensions -> shipped as broadcast variables / broadcast join
-sides, never shuffled (SURVEY.md §2.1 S2/S3).
+sides, never shuffled (SURVEY.md §2.1 S2/S3). ``broadcast_artifacts`` makes
+each kernel's broadcast once per (SparkContext, artifacts).
 """
 
 from __future__ import annotations
 
 import io
 from dataclasses import dataclass
+from functools import lru_cache
 
 __all__ = [
     "Gazetteer",
+    "broadcast_artifacts",
     "load_gazetteer_bsv",
     "load_blacklist",
     "builtin_gazetteer_rows",
@@ -59,6 +62,42 @@ class Gazetteer:
             max_tokens = max(max_tokens, len(norm.split()))
         first = frozenset(t.split(" ", 1)[0] for t in terms)
         return Gazetteer(terms=terms, max_tokens=max_tokens, first_words=first)
+
+
+class _Same:
+    """An artifact as a memo key by identity (a ``Gazetteer`` holds a dict
+    and does not hash); the key holds the object, so its id stays valid."""
+
+    __slots__ = ("obj",)
+
+    def __init__(self, obj):
+        self.obj = obj
+
+    def __hash__(self):
+        return id(self.obj)
+
+    def __eq__(self, other):
+        return isinstance(other, _Same) and other.obj is self.obj
+
+
+def broadcast_artifacts(sc, gazetteer, blacklist, cfg, derive=None):
+    """``sc.broadcast((gazetteer, blacklist, cfg))``, with
+    ``derive(gazetteer, blacklist, cfg)`` appended when given, made once per
+    (SparkContext ``sc``, the same gazetteer and blacklist objects, an equal
+    ``cfg``, ``derive``) and handed to every later build with them.
+
+    A new broadcast per build would make every Python worker read and keep
+    one more copy per operation, and none is ever released. The memo holds
+    the latest two keys (one per kernel when a session runs both paths); an
+    evicted broadcast is left to Spark's cleaner, as before, because a
+    DataFrame built earlier may still read it."""
+    return _broadcast(sc, _Same(gazetteer), _Same(blacklist), cfg, derive)
+
+
+@lru_cache(maxsize=2)
+def _broadcast(sc, gazetteer, blacklist, cfg, derive):
+    value = (gazetteer.obj, blacklist.obj, cfg)
+    return sc.broadcast(value if derive is None else value + (derive(*value),))
 
 
 def load_gazetteer_bsv(path_or_text: str, *, is_text: bool = False) -> Gazetteer:
