@@ -67,11 +67,11 @@ def annotate_union(
     exchange (the W1 window) and ONE persist. Mentions are RAW — F1/F2/F4/F5
     stay visible DataFrame operators downstream (``filter_union``).
 
-    ``timexes=False`` is the mentions-only mode for consumers that read
-    nothing but mentions (cross-turn edges, rollups, canonicalization):
-    timex detection is skipped (~35% of per-turn CPU) and only kind_rank 0
-    rows are emitted, so the Arrow boundary carries no timex or token
-    rows."""
+    ``timexes=False`` is the mentions-only mode for callers that read
+    nothing but mentions — ``__spark_entry__``'s ``kg_conmod`` query, and
+    ``bench.py``'s cross-turn wall through ``build_annotations``: timex
+    detection is skipped (~35% of per-turn CPU) and only kind_rank 0 rows
+    are emitted, so the Arrow boundary carries no timex or token rows."""
     bc = broadcast_artifacts(transcripts.sparkSession.sparkContext, gazetteer, blacklist, cfg)
 
     @worker_body

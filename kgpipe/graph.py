@@ -457,10 +457,11 @@ def resolve_conflicts(triples: DataFrame) -> DataFrame:
     confidence evidence. Real timeline consumers read THIS view; the
     conflicts audit view feeds the review queue.
 
-    Two keyed hash aggregates — (term, normed, label) counts with map-side
-    partial combine, then a (term, normed) max_by reduction over at most
-    |label vocabulary| rows per key — so per-key state is O(10) regardless
-    of corpus size.
+    One keyed hash aggregate — (term, normed, label) counts with map-side
+    partial combine — then one (term, normed) window over at most |label
+    vocabulary| rows per key, so per-key state is O(10) regardless of
+    corpus size. The window's ``lead`` reads the runner-up in the same
+    pass, so the triples under it are computed once.
 
     Returns (term, normed, label, n_support, n_total, margin).
     """
@@ -476,21 +477,16 @@ def resolve_conflicts(triples: DataFrame) -> DataFrame:
     w = Window.partitionBy("term", "normed").orderBy(
         F.col("n_support").desc(), F.col("label").asc()
     )
-    ranked = votes.withColumn("rk", F.row_number().over(w)).withColumn(
-        "n_total", F.sum("n_support").over(Window.partitionBy("term", "normed"))
-    )
-    runner = ranked.where(F.col("rk") == 2).select(
-        "term", "normed", F.col("n_support").alias("runner_support")
-    )
-    return (
-        ranked.where(F.col("rk") == 1)
-        .join(runner, ["term", "normed"], "left")
-        .select(
-            "term", "normed", "label", "n_support", "n_total",
-            (
-                F.col("n_support") - F.coalesce("runner_support", F.lit(0))
-            ).alias("margin"),
+    ranked = (
+        votes.withColumn("rk", F.row_number().over(w))
+        .withColumn("runner_support", F.lead("n_support").over(w))
+        .withColumn(
+            "n_total", F.sum("n_support").over(Window.partitionBy("term", "normed"))
         )
+    )
+    return ranked.where(F.col("rk") == 1).select(
+        "term", "normed", "label", "n_support", "n_total",
+        (F.col("n_support") - F.coalesce("runner_support", F.lit(0))).alias("margin"),
     )
 
 

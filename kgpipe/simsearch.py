@@ -151,6 +151,25 @@ def cosine_col(a, b):
     return dot / (na * nb)
 
 
+def _rerank_topk(cand: DataFrame, k: int, raw: bool = False) -> DataFrame:
+    """Exact cosine re-rank of (query_id, vec_id, q_emb, embedding)
+    candidates -> (query_id, vec_id, cosine, rank<=k). Ties break on vec_id
+    for determinism; unless ``raw``, the cosine is rounded for display."""
+    scored = cand.select(
+        "query_id", "vec_id",
+        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc()
+    )
+    cos = F.col("cosine") if raw else F.round("cosine", 6).alias("cosine")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", cos, "rank")
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -160,19 +179,7 @@ def brute_force_topk(
     q = queries.select(
         F.col("query_id"), F.col("embedding").alias("q_emb")
     )
-    joined = embeddings.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rerank_topk(embeddings.crossJoin(F.broadcast(q)), k)
 
 
 def _hyperplanes(dim: int, n_bits: int, table: int) -> np.ndarray:
@@ -254,19 +261,7 @@ def lsh_topk(
     cand = c.join(F.broadcast(q), ["tbl", "bkt"]).select(
         "query_id", "vec_id", "q_emb", "embedding"
     ).dropDuplicates(["query_id", "vec_id"])
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-    cos = F.col("cosine") if raw else F.round("cosine", 6).alias("cosine")
-    return ranked.select("query_id", "vec_id", cos, "rank")
+    return _rerank_topk(cand, k, raw)
 
 
 def _assign_lists_udf(centroids: np.ndarray, n_probe: int):
@@ -329,19 +324,7 @@ def ivf_topk(
         F.col("embedding").alias("q_emb"),
         F.explode(query_assign("embedding")).alias("list_id"),
     )
-    cand = corpus.join(F.broadcast(q), "list_id")
-    scored = cand.select(
-        "query_id", "vec_id",
-        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-    cos = F.col("cosine") if raw else F.round("cosine", 6).alias("cosine")
-    return ranked.select("query_id", "vec_id", cos, "rank")
+    return _rerank_topk(corpus.join(F.broadcast(q), "list_id"), k, raw)
 
 
 def _resolve_centroids(embeddings: DataFrame, centroids, n_list: int) -> np.ndarray:
@@ -409,19 +392,7 @@ def ivf_topk_indexed(
         F.explode(q_assign("embedding")).alias("list_id"),
     )
     corpus = spark.read.parquet(index_path)
-    cand = corpus.join(F.broadcast(q), "list_id")
-    scored = cand.select(
-        "query_id", "vec_id",
-        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-    cos = F.col("cosine") if raw else F.round("cosine", 6).alias("cosine")
-    return ranked.select("query_id", "vec_id", cos, "rank")
+    return _rerank_topk(corpus.join(F.broadcast(q), "list_id"), k, raw)
 
 
 def embedding_dup_pairs(

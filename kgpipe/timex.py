@@ -28,8 +28,10 @@ Detection gates come from the patterns' own parse trees
 its literal gate (a CNF of one-word literals every match satisfies, tested
 per word on text folded as ``re.IGNORECASE`` folds it) holds, and one whose
 matches hold a digit within a few words scans only that window around the
-text's digits. The indicator-window kinds (``_REGION_BOUNDED``) keep
-hand-set margins, held to a full scan by a differential test.
+text's digits. The two kinds with no digit reach and a costly full scan
+(``date_at_time``, ``period_approx``: ``_REGION_BOUNDED``) scan hand-set
+windows around their indicator tokens, held to a full scan by a
+differential test.
 """
 
 from __future__ import annotations
@@ -1138,15 +1140,16 @@ def _word_region(
     return start, stop
 
 
-# Region-bounded patterns: each can only match within a few words of a
-# RARE indicator token (a clock, a fraction slash, an or-so/up-to
-# connective), while its literal gate passes on far more texts
-# than can actually match (":" and "am"-as-substring appear throughout
-# the corpus). Scanning word-aligned windows around the indicators
-# instead of the whole text cuts the dominant per-turn regex cost; a
-# differential test asserts region-bounded == full-text detection.
-# Margins are generous upper bounds on the pattern's reach around its
-# indicator (date side up to ~5 words + connectives).
+# Region-bounded patterns: kinds with no derived digit reach (a match need
+# not hold a digit) whose full scan is costly. Each can only match within
+# a few words of a RARE indicator token (a clock, an or-so/up-to
+# connective), while its literal gate passes on far more texts than can
+# actually match (":" and "am"-as-substring appear throughout the corpus).
+# On clinical-dense text a full scan costs date_at_time ~105 us/turn and
+# period_approx ~30 us/turn, against ~2 and under 1 windowed; every other
+# kind costs under 5 us/turn without a window. Margins are hand-set upper
+# bounds on each pattern's reach around its indicator; a differential
+# test asserts region-bounded == full-text detection.
 _REGION_BOUNDED: dict = {
     # clock indicator: ":", a word-INITIAL am/pm (the lookaround keeps
     # "stream"/"example" from creating windows), or noon/midday/midnight
@@ -1157,30 +1160,12 @@ _REGION_BOUNDED: dict = {
         ),
         8, 8,
     ),
-    # worded clock: "<digit> in the" (the tod word follows inside the
-    # window)
-    "date_at_time_word": (re.compile(r"\d\s+in\s+the\b", re.I), 8, 10),
-    # proper fraction core WITH its leading integer: every frac_slash
-    # match contains "<int> <num>/<den>", and requiring the digit-word
-    # adjacency in the indicator keeps plain slash DATES ("on 3/5/2021",
-    # planted on most turns) from opening windows at all
-    "frac_slash": (re.compile(r"\d\s+\d{1,2}/\d"), 4, 5),
     # "or so" / "up to" connectives. The right margin must cover the
     # up-to branch's FULL reach incl. the trailing (?!ago|earlier)
     # lookahead — "up to a couple of weeks ago" is 6 words past the
     # indicator, and a truncated lookahead would vacuously pass and
     # mis-accept the anchored reading as a period (test-pinned)
     "period_approx": (re.compile(r"\bor\s+so\b|\bup\s+to\b", re.I), 5, 7),
-    # every clock_time match ends at a word-initial-or-digit-adjacent
-    # am/pm ("am" as a plain substring hits "stream" on most turns)
-    "clock_time": (
-        re.compile(r"(?<![a-z])[ap]\.?m\.?(?![a-z])", re.I), 3, 2,
-    ),
-    # every mod_in_span match starts at its connective ("part" is a
-    # corpus vocabulary word, so the substring prefilter passes broadly)
-    "mod_in_span": (
-        re.compile(r"\b(?:earlier|later)\s+in\b|\bpart\s+of\b", re.I), 1, 4,
-    ),
 }
 
 
@@ -1205,18 +1190,17 @@ def _bounded_windows(text: str, kind: str) -> List[Tuple[int, int]]:
 
 # --- word-level indicator-presence gate for the region-bounded kinds ---
 #
-# The literal gates pass on substrings ("am" in "example", "part" in
-# "particular"), so alone they would run the indicator scans on most turns.
-# Every region-bounded indicator is whitespace-free (asserted below), so an
-# indicator match in the text lies wholly inside one whitespace token, with
-# its word-boundary lookarounds evaluating identically in the token as in
-# the text (token edges abut whitespace / string ends, which are non-word
-# on both sides) — therefore "no token carries the indicator token-level
-# condition" proves "the indicator cannot match the text", and the scan can
-# be skipped EXACTLY. Multi-word indicators (or+so, up+to, part+of,
-# earlier/later+in, digit+in+the) decompose into per-token conditions
-# AND-ed per alternative; per-token results are lru-memoized like the
-# literal-gate clauses.
+# The literal gates pass on substrings ("am" in "example", "to" in
+# "today"), so alone they would run the indicator scans on most turns.
+# Every region-bounded indicator is whitespace-free between its \s+ joints,
+# so each word of an indicator match lies wholly inside one whitespace
+# token, with its word-boundary lookarounds evaluating identically in the
+# token as in the text (token edges abut whitespace / string ends, which
+# are non-word on both sides) — therefore "no token carries the indicator
+# token-level condition" proves "the indicator cannot match the text", and
+# the scan can be skipped EXACTLY. Multi-word indicators (or+so, up+to)
+# decompose into per-token conditions AND-ed per alternative; per-token
+# results are lru-memoized like the literal-gate clauses.
 # Per-token conditions are evaluated on the ORIGINAL-case token with the
 # same `re.I` engine the indicators use: `str.lower()` applies FULL case
 # folding (e.g. 'İ' -> 'i' + combining dot) while `re.IGNORECASE` applies
@@ -1226,7 +1210,6 @@ def _bounded_windows(text: str, kind: str) -> List[Tuple[int, int]]:
 # as the indicator it guards.
 _AMPM_WORD_RE = re.compile(r"(?<![a-z])[ap]\.?m\.?(?![a-z])", re.I)
 _NOON_WORD_RE = re.compile(r"(?<![a-z])(?:noon|midday|midnight)", re.I)
-_DSLASH_WORD_RE = re.compile(r"\d/\d")
 # Each condition mirrors the indicator's \b at token level exactly: a
 # word-boundary inside the text is, at the token edge, "start/end of
 # token" (the neighbor is whitespace) and, inside a token, "adjacent to a
@@ -1235,20 +1218,14 @@ _DSLASH_WORD_RE = re.compile(r"\d/\d")
 # and the bare token "or" still do. Necessary conditions stay necessary;
 # they just stop over-firing on everyday vocabulary ("some", "today",
 # "group", "for"), which is most of what the gate exists to skip.
-_IN_START_RE = re.compile(r"in(?:\Z|\W)", re.I)    # used via .match
-_THE_START_RE = re.compile(r"the(?:\Z|\W)", re.I)
 _OR_END_RE = re.compile(r"(?:\A|\W)or\Z", re.I)
-_SO_START_RE = re.compile(r"so(?:\Z|\W)", re.I)
+_SO_START_RE = re.compile(r"so(?:\Z|\W)", re.I)    # used via .match
 _UP_END_RE = re.compile(r"(?:\A|\W)up\Z", re.I)
 _TO_START_RE = re.compile(r"to(?:\Z|\W)", re.I)
-_EL_END_RE = re.compile(r"(?:\A|\W)(?:earlier|later)\Z", re.I)
-_PART_END_RE = re.compile(r"(?:\A|\W)part\Z", re.I)
-_OF_START_RE = re.compile(r"of(?:\Z|\W)", re.I)
 
 # token-condition ids
-_IT_COLON, _IT_AMPM, _IT_NOON, _IT_DSLASH = 0, 1, 2, 3
-_IT_IN, _IT_THE, _IT_OR, _IT_SO, _IT_UP, _IT_TO = 4, 5, 6, 7, 8, 9
-_IT_EARLIER_LATER, _IT_PART, _IT_OF = 10, 11, 12
+_IT_COLON, _IT_AMPM, _IT_NOON = 0, 1, 2
+_IT_OR, _IT_SO, _IT_UP, _IT_TO = 3, 4, 5, 6
 
 
 @lru_cache(maxsize=65536)
@@ -1265,14 +1242,6 @@ def _word_indicator_bits(word: str) -> frozenset:
         bits.append(_IT_AMPM)
     if _NOON_WORD_RE.search(word):
         bits.append(_IT_NOON)
-    if "/" in word and _DSLASH_WORD_RE.search(word):
-        bits.append(_IT_DSLASH)
-    if _IN_START_RE.match(word):
-        # loose on purpose: "\s+in\s+" needs the exact token but
-        # "...\s+in\b" (mod_in_span) also matches "in," / "in." tokens
-        bits.append(_IT_IN)
-    if _THE_START_RE.match(word):
-        bits.append(_IT_THE)
     if _OR_END_RE.search(word):
         bits.append(_IT_OR)
     if _SO_START_RE.match(word):
@@ -1281,12 +1250,6 @@ def _word_indicator_bits(word: str) -> frozenset:
         bits.append(_IT_UP)
     if _TO_START_RE.match(word):
         bits.append(_IT_TO)
-    if _EL_END_RE.search(word):
-        bits.append(_IT_EARLIER_LATER)
-    if _PART_END_RE.search(word):
-        bits.append(_IT_PART)
-    if _OF_START_RE.match(word):
-        bits.append(_IT_OF)
     return frozenset(bits)
 
 
@@ -1298,53 +1261,38 @@ def _word_prefilters(word: str):
     return _word_quick_keys(regex_gate.fold(word)), _word_indicator_bits(word)
 
 
-def _region_kind_possible(kind: str, bits: frozenset, has_digit: bool) -> bool:
+def _region_kind_possible(kind: str, bits: frozenset) -> bool:
     """Can ``kind``'s indicator match a text whose per-token indicator
     conditions union to ``bits``? False proves the indicator finditer
     would find nothing (see _word_indicator_bits)."""
     if kind == "date_at_time":
         return _IT_COLON in bits or _IT_AMPM in bits or _IT_NOON in bits
-    if kind == "clock_time":
-        return _IT_AMPM in bits
-    if kind == "date_at_time_word":
-        return has_digit and _IT_IN in bits and _IT_THE in bits
-    if kind == "frac_slash":
-        return _IT_DSLASH in bits
     if kind == "period_approx":
         return (_IT_OR in bits and _IT_SO in bits) or (
             _IT_UP in bits and _IT_TO in bits
         )
-    if kind == "mod_in_span":
-        return (_IT_EARLIER_LATER in bits and _IT_IN in bits) or (
-            _IT_PART in bits and _IT_OF in bits
-        )
     return True
 
 
-# soundness guard: the token-wise decomposition above is only exact while
-# every region-bounded indicator stays whitespace-free per matched token
-# (\s+ joints between tokens are allowed — they split into the per-token
-# conditions); a new indicator kind must extend both functions above
-assert set(_REGION_BOUNDED) == {
-    "date_at_time", "date_at_time_word", "frac_slash", "period_approx",
-    "clock_time", "mod_in_span",
-}
+# A hand-set window only where the derivation cannot bound the scan: a
+# kind with a derived digit reach is digit-bounded instead, so the two
+# scan layouts never overlap.
+assert all(_GATES.reach[k] is None for k in _REGION_BOUNDED)
 
 
 # Digit-bounded kinds: every match holds a digit and touches at most
-# _DIGIT_LEFT whitespace runs before its first digit and _DIGIT_RIGHT after
-# its last (derived reach), so scanning that window around the text's
-# digits finds exactly the full scan's matches.
+# reach[0] whitespace runs before its first digit and reach[1] after its
+# last (derived reach), so scanning the window of the kind's own reach
+# around the text's digits finds exactly the full scan's matches.
 _DIGIT_BOUNDED = frozenset(
     kind for kind, reach in _GATES.reach.items()
-    if reach is not None and max(reach) < math.inf and kind not in _REGION_BOUNDED
+    if reach is not None and max(reach) < math.inf
 )
-_DIGIT_LEFT = max(_GATES.reach[k][0] for k in _DIGIT_BOUNDED)
-_DIGIT_RIGHT = max(_GATES.reach[k][1] for k in _DIGIT_BOUNDED)
 
-# (priority, kind, regex, required clauses, digit-, region-bounded)
+# (priority, kind, regex, required clauses, digit reach, region-bounded)
 _SCAN_PLAN = tuple(
-    (prio, kind, pat, _GATES.need[kind], kind in _DIGIT_BOUNDED,
+    (prio, kind, pat, _GATES.need[kind],
+     _GATES.reach[kind] if kind in _DIGIT_BOUNDED else None,
      kind in _REGION_BOUNDED)
     for prio, (kind, pat) in enumerate(TIMEX_PATTERNS)
 )
@@ -1387,23 +1335,25 @@ def detect_timexes(text: str):
     has_digit = first_digit is not None
     if has_digit:
         last_digit_end = max(m.end() for m in _DIGIT_RE.finditer(text))
-        r_begin, r_end = _word_region(
-            text, first_digit.start(), last_digit_end, _DIGIT_LEFT, _DIGIT_RIGHT
-        )
+        windows = {}  # digit reach -> its window, computed once per text
     mask, ind_bits = _text_prefilters(text, has_digit)
     candidates = []
-    for prio, kind, pat, need, digit_bounded, region_bounded in _SCAN_PLAN:
+    for prio, kind, pat, need, reach, region_bounded in _SCAN_PLAN:
         if mask & need != need:
             continue  # proven: some required clause holds for no word
-        if digit_bounded:
+        if reach is not None:
             if has_digit:
-                for m in pat.finditer(text, r_begin, r_end):
+                if reach not in windows:
+                    windows[reach] = _word_region(
+                        text, first_digit.start(), last_digit_end, *reach
+                    )
+                for m in pat.finditer(text, *windows[reach]):
                     candidates.append(
                         (m.start(), -(m.end() - m.start()), prio, m.end(), kind)
                     )
             continue
         if region_bounded:
-            if not _region_kind_possible(kind, ind_bits, has_digit):
+            if not _region_kind_possible(kind, ind_bits):
                 continue  # proven: the indicator scan would find nothing
             for b, e in _bounded_windows(text, kind):
                 for m in pat.finditer(text, b, e):

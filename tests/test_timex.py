@@ -1439,6 +1439,54 @@ def test_derived_gate_is_sound(data):
             assert pat.search(t) is None, (kind, t)
 
 
+@settings(max_examples=400, deadline=None)
+@given(st.data())
+def test_gated_scan_matches_full_scan_with_punctuation(data):
+    # the whole detector (literal gates, digit window, indicator windows)
+    # against its full-scan spec, on the gate literals, their case-fold
+    # variants and digit tokens joined by punctuation as well as spaces,
+    # plus matches that reach far from their digit on either side (a
+    # digit window narrower than the derived reach truncates them)
+    from tests.test_timex_differential import _detect_full_scan
+
+    far_reaching = [
+        "the day after tomorrow at 5 in the morning",
+        "at 8 in the evening on the day before yesterday",
+        "twenty one days ago at 10:30 am", "in 2 1/2 years",
+    ]
+    words = data.draw(st.lists(st.one_of(
+        st.sampled_from(_gate_fuzz_alphabet()), st.sampled_from(far_reaching)
+    ), max_size=14))
+    seps = data.draw(st.lists(
+        st.sampled_from([" ", "  ", "\n", ", ", " - ", "/", "", ". "]),
+        min_size=len(words), max_size=len(words),
+    ))
+    t = "".join(w + s for w, s in zip(words, seps))
+    assert detect_timexes(t) == _detect_full_scan(t), repr(t)
+
+
+def test_scan_layout_follows_the_derived_reach():
+    # a kind whose matches the derivation bounds to a finite digit reach
+    # scans the digit window; only the others may keep a hand-set
+    # indicator window
+    import math
+
+    from kgpipe.timex import _DIGIT_BOUNDED, _GATES, _REGION_BOUNDED, _SCAN_PLAN
+
+    finite = {
+        k for k, r in _GATES.reach.items()
+        if r is not None and max(r) < math.inf
+    }
+    assert finite == set(_DIGIT_BOUNDED)
+    # each digit-bounded kind scans the window of its own reach, not the
+    # widest one
+    assert {kind: reach for _, kind, _, _, reach, _ in _SCAN_PLAN
+            if reach is not None} == {k: _GATES.reach[k] for k in finite}
+    assert not finite & set(_REGION_BOUNDED)
+    assert set(_REGION_BOUNDED) == {"date_at_time", "period_approx"}
+    assert {"clock_time", "frac_slash", "date_at_time_word"} <= finite
+
+
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.sampled_from(
     list("ap.m:nod/ 0123456789\n\tuortsielPAMİ,-") +
@@ -1456,7 +1504,6 @@ def test_indicator_word_gate_is_sound(t):
         _word_indicator_bits,
     )
 
-    has_digit = any(c.isdigit() for c in t)
     bits = set()
     for w in set(t.split()):
         if len(w) <= _MAX_CACHED_WORD:
@@ -1464,7 +1511,7 @@ def test_indicator_word_gate_is_sound(t):
         else:
             bits |= _word_indicator_bits.__wrapped__(w)
     for kind, (ind, _, _) in _REGION_BOUNDED.items():
-        if not _region_kind_possible(kind, bits, has_digit):
+        if not _region_kind_possible(kind, bits):
             hit = ind.search(t)
             assert hit is None, (kind, t, hit)
 
@@ -1473,18 +1520,19 @@ def test_indicator_word_gate_simple_vs_full_case_folding():
     # re.IGNORECASE uses SIMPLE per-char folding ('İ' matches pattern 'i')
     # while str.lower() uses FULL folding ('İ' -> 'i' + combining dot); the
     # gate must be computed with the regex engine, not lowered-string
-    # prefix tests, or "later İn" would skip a scan whose indicator matches
+    # prefix tests, or "mİdnight" would skip a scan whose indicator matches
     from kgpipe.timex import (
         _REGION_BOUNDED, _region_kind_possible, _word_indicator_bits,
     )
 
-    t = "later İn the year"
-    ind, _, _ = _REGION_BOUNDED["mod_in_span"]
+    t = "at mİdnight on friday"
+    assert "mİdnight".lower() != "midnight"
+    ind, _, _ = _REGION_BOUNDED["date_at_time"]
     assert ind.search(t) is not None  # the indicator DOES match
     bits = set()
     for w in set(t.split()):
         bits |= _word_indicator_bits(w)
-    assert _region_kind_possible("mod_in_span", bits, has_digit=False)
+    assert _region_kind_possible("date_at_time", bits)
 
 
 def test_sentence_period_does_not_fuse_clock_with_next_sentence():
