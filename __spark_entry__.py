@@ -32,6 +32,9 @@ unlikely on real data and absent on the driver corpus.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from functools import lru_cache
 
@@ -255,6 +258,21 @@ def _q_event_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_CACHE: dict = {}
 
 
+@lru_cache(maxsize=None)
+def _stream_root() -> str:
+    """This process's scratch root for the stream queries' directories,
+    removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="kg_streams_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _stream_dirs(name: str) -> tuple[str, str, str]:
+    """Fresh (input, output, checkpoint) directories for one stream query."""
+    base = tempfile.mkdtemp(prefix=f"{name}_", dir=_stream_root())
+    return f"{base}/in", f"{base}/out", f"{base}/ckpt"
+
+
 def _q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9c watermarked tumbling-window aggregation, driven end-to-end as a
     real stream: the derived corpus lands as batch 1, then a single
@@ -264,18 +282,16 @@ def _q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the batch day-window rollup of the corpus — the oracle's
     GROUP BY date_trunc twin."""
     import datetime as _dt
-    import tempfile
 
     from kgpipe.schemas import TRANSCRIPTS_SCHEMA
-    from kgpipe.streaming import run_windowed_stream
+    from kgpipe.streaming import drain_parquet, windowed_turn_counts
 
     key = (id(spark), sf_dir, "windowed")
     if key not in _STREAM_CACHE:
         t = derive_transcripts(spark, sf_dir)
-        base = tempfile.mkdtemp(prefix="kg_wincounts_")
-        in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+        in_dir, out_dir, ckpt = _stream_dirs("kg_wincounts")
         t.write.mode("append").parquet(in_dir)
-        run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=300.0)
+        drain_parquet(windowed_turn_counts(spark, in_dir), out_dir, ckpt)
         max_ts = t.agg(F.max("ts")).collect()[0][0]
         sentinel = [
             ("__sentinel__", 0, "user", "x", None, max_ts + _dt.timedelta(days=10))
@@ -283,7 +299,7 @@ def _q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(sentinel, TRANSCRIPTS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-        run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=300.0)
+        drain_parquet(windowed_turn_counts(spark, in_dir), out_dir, ckpt)
         _STREAM_CACHE[key] = out_dir
     return spark.read.parquet(_STREAM_CACHE[key]).select(
         "window_start", "window_end", "conv_id",
@@ -297,17 +313,14 @@ def _q_prompt_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch so the inner join's eager emission equals the batch join (the
     oracle's SQL twin). Fourth streaming shape after ingest / custom state
     / watermarked window."""
-    import tempfile
-
-    from kgpipe.streaming import run_join_stream
+    from kgpipe.streaming import drain_parquet, prompt_response_pairs
 
     key = (id(spark), sf_dir, "ssjoin")
     if key not in _STREAM_CACHE:
         t = derive_transcripts(spark, sf_dir)
-        base = tempfile.mkdtemp(prefix="kg_ssjoin_")
-        in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+        in_dir, out_dir, ckpt = _stream_dirs("kg_ssjoin")
         t.write.mode("append").parquet(in_dir)
-        run_join_stream(spark, in_dir, out_dir, ckpt, timeout_sec=300.0)
+        drain_parquet(prompt_response_pairs(spark, in_dir), out_dir, ckpt)
         _STREAM_CACHE[key] = out_dir
     return spark.read.parquet(_STREAM_CACHE[key]).select(
         "conv_id", "user_turn", "assistant_turn", "user_ts", "assistant_ts",
@@ -544,21 +557,21 @@ def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark is set far above the corpus ts span so no genuine row is
     late-dropped here — the tight-watermark late/eviction contract is
     pinned by tests/test_streaming.py instead."""
-    import os
-    import tempfile
+    from kgpipe.streaming import dedup_turns, drain_parquet
 
-    from kgpipe.streaming import run_dedup_stream
-
-    base = tempfile.mkdtemp(prefix="kg_sdedup_")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    in_dir, out_dir, ckpt = _stream_dirs("kg_sdedup")
     t = derive_transcripts(spark, sf_dir)
     t.coalesce(4).write.mode("overwrite").parquet(in_dir)
     t.where(F.expr("turn_idx % 2 = 0")).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    run_dedup_stream(spark, in_dir, out_dir, ckpt, watermark="3650 days")
+    drain_parquet(
+        dedup_turns(
+            spark, in_dir, watermark="3650 days", max_files_per_trigger=1
+        ),
+        out_dir,
+        ckpt,
+    )
     return spark.read.parquet(out_dir).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
@@ -568,15 +581,9 @@ def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment (streaming.enriched_turns): the streaming
     transcript source joined per micro-batch against a static per-
     conversation dimension; drained output must equal the batch join."""
-    import os
-    import tempfile
+    from kgpipe.streaming import drain_parquet, enriched_turns
 
-    from kgpipe.streaming import run_enrich_stream
-
-    base = tempfile.mkdtemp(prefix="kg_senrich_")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    in_dir, out_dir, ckpt = _stream_dirs("kg_senrich")
     derive_transcripts(spark, sf_dir).coalesce(4).write.mode(
         "overwrite"
     ).parquet(in_dir)
@@ -585,8 +592,11 @@ def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("conv_total_turns"),
         F.countDistinct("role").cast("int").alias("conv_n_roles"),
     )
-    run_enrich_stream(spark, in_dir, out_dir, ckpt, dim,
-                      max_files_per_trigger=2)
+    drain_parquet(
+        enriched_turns(spark, in_dir, dim, max_files_per_trigger=2),
+        out_dir,
+        ckpt,
+    )
     return spark.read.parquet(out_dir).select(
         "conv_id", "turn_idx", "role", "conv_total_turns", "conv_n_roles"
     )
@@ -612,17 +622,13 @@ def _q_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, then read back. The oracle is the batch oracle — stream output
     MUST equal the batch plan's output exactly (stateless per-turn logic, no
     watermark needed; SURVEY.md §2.9)."""
-    import os
-    import tempfile
+    from kgpipe.streaming import drain_parquet, stream_triples
 
-    from kgpipe.streaming import run_stream
-
-    base = tempfile.mkdtemp(prefix="kg_stream_q_")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    in_dir, out_dir, ckpt = _stream_dirs("kg_stream_q")
     derive_transcripts(spark, sf_dir).write.mode("overwrite").parquet(in_dir)
-    run_stream(spark, in_dir, out_dir, ckpt, _GAZ, _BLACKLIST, _CFG)
+    drain_parquet(
+        stream_triples(spark, in_dir, _GAZ, _BLACKLIST, _CFG), out_dir, ckpt
+    )
     return spark.read.parquet(out_dir).select(*_TRIPLE_COLS)
 
 
@@ -633,14 +639,10 @@ def _q_incremental_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle exactly; bucket/lineage mechanics are pytest-gated
     (tests/test_streaming.py)."""
     import os
-    import tempfile
 
     from kgpipe.streaming import run_incremental_materialize
 
-    base = tempfile.mkdtemp(prefix="kg_incr_q_")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    in_dir, out_dir, ckpt = _stream_dirs("kg_incr_q")
     derive_transcripts(spark, sf_dir).write.mode("overwrite").parquet(in_dir)
     run_incremental_materialize(
         spark, in_dir, out_dir, ckpt, _GAZ, _BLACKLIST, _CFG, n_buckets=8
@@ -655,19 +657,17 @@ def _q_streaming_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-conversation running stats with state carried across micro-batches
     (4 input files x maxFilesPerTrigger=1). The final cumulative snapshot
     per key must equal the batch aggregate — the DuckDB oracle."""
-    import os
-    import tempfile
+    from kgpipe.streaming import drain_parquet, stateful_conversation_stats
 
-    from kgpipe.streaming import run_stateful_stream
-
-    base = tempfile.mkdtemp(prefix="kg_state_q_")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    in_dir, out_dir, ckpt = _stream_dirs("kg_state_q")
     derive_transcripts(spark, sf_dir).repartition(4).write.mode(
         "overwrite"
     ).parquet(in_dir)
-    run_stateful_stream(spark, in_dir, out_dir, ckpt, max_files_per_trigger=1)
+    drain_parquet(
+        stateful_conversation_stats(spark, in_dir, max_files_per_trigger=1),
+        out_dir,
+        ckpt,
+    )
     snaps = spark.read.parquet(out_dir)
     w = Window.partitionBy("conv_id").orderBy(F.col("n_turns").desc())
     return (

@@ -7,8 +7,10 @@ carry the payload columns of ``schemas.ANNOTATION_UNION_SCHEMA``
 (``extract.annotate_union`` emits them as flat union rows). It is the
 composition of two halves over one tokenization: ``annotate_mentions``
 (tokenize, gazetteer, mention rows) and ``annotate_timexes`` (detect +
-normalize), which the fused path calls separately so that it runs the timex
-half only for turns with a surviving mention. It reproduces, per turn
+normalize). Both Arrow kernels call the halves directly: the structured
+path's ``extract.union_batch`` and the fused ``pair.turn_triples``, which
+runs the timex half only for turns with a surviving mention. It reproduces,
+per turn
 (turn ≙ reference note / CAS):
 
 * tokenization + last-wins begin dedup (timeline_delegator.py:82-119)
@@ -267,10 +269,9 @@ def annotate_turn(
 
     The two halves, ``annotate_mentions`` and ``annotate_timexes``, share
     one tokenization. ``annotate_turn`` always runs both (unless
-    ``with_timexes=False``), because the structured path's timex tables
-    serve consumers beyond the mention-gated triples; the fused
-    ``pair.turn_triples`` calls the halves itself and runs the timex half
-    only for turns whose mentions survive F1/F2/F4 (the O1 gate).
+    ``with_timexes=False``); the Arrow kernels call the halves themselves
+    (``extract.union_batch``; ``pair.turn_triples``, which runs the timex
+    half only for turns whose mentions survive F1/F2/F4, the O1 gate).
 
     ``with_timexes=False`` skips timex detection+normalization entirely
     (returns an empty timex list) — the fast path for consumers that only
@@ -287,12 +288,8 @@ def annotate_turn(
     tokens, token_map, newline_flags, _ = tokenized
 
     # token-row dicts are pure repackaging (~5% of per-turn CPU); callers
-    # that never read them pass False, callers that only need the raw
-    # streams (union annotate) pass "raw" and get (tokens, newline_flags)
-    # without the per-token dict round-trip
-    if with_token_rows == "raw":
-        token_rows = (tokens, newline_flags)
-    elif with_token_rows:
+    # that never read them pass False
+    if with_token_rows:
         token_rows = [
             {
                 "tok_idx": i,

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .annotate import annotate_turn
+from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .resources import broadcast_artifacts
 from .schemas import ANNOTATION_UNION_ARROW_SCHEMA, ANNOTATION_UNION_SCHEMA, sql_str
@@ -90,7 +90,8 @@ def union_batch(batch, gazetteer, blacklist, cfg: PipelineConfig, timexes: bool 
     its union rows as one ``pa.RecordBatch`` in the Arrow form of
     ANNOTATION_UNION_SCHEMA: per turn, its mention rows, then (with
     ``timexes``) its timex rows and its token-stream row. ``ts`` reaches
-    ``annotate_turn`` as the naive wall-clock datetime.
+    ``annotate_mentions`` / ``annotate_timexes`` as the naive wall-clock
+    datetime.
 
     The columns are built as typed lists: five per-row key lists, and one
     payload dict per row (the annotate dicts themselves) from which each
@@ -106,18 +107,16 @@ def union_batch(batch, gazetteer, blacklist, cfg: PipelineConfig, timexes: bool 
         batch.column("text").to_pylist(),
         local_wall_ts(batch.column("ts")).to_pylist(),
     ):
-        anchor, tok_rows, ments, tmx = annotate_turn(
-            conv_id, turn_idx, text, ts, gazetteer, blacklist, cfg,
-            with_timexes=timexes,
-            with_token_rows="raw" if timexes else False,
-        )
+        anchor, tokenized, ments = annotate_mentions(text, ts, gazetteer, cfg)
         rows = ments
         kinds = [0] * len(ments)
         idx = [m["mention_idx"] for m in ments]
         if timexes:
-            rows = ments + tmx + [
-                {"tok_stream": "\x1f".join(tokens_for_mode(*tok_rows, "dtr"))}
-            ]
+            tmx = annotate_timexes(text, ts, anchor, tokenized)
+            tok_stream = tokens_for_mode(
+                tokenized.tokens, tokenized.newline_flags, "dtr"
+            )
+            rows = ments + tmx + [{"tok_stream": "\x1f".join(tok_stream)}]
             kinds += [1] * len(tmx) + [2]
             idx += [t["timex_idx"] for t in tmx] + [0]
         n = len(rows)

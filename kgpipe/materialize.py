@@ -53,6 +53,7 @@ import time
 from contextlib import contextmanager
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -266,8 +267,6 @@ def append_lineage(
     bucket_counts,  # list[(bucket, triple_count)]
     stage_timings: dict,
 ) -> None:
-    import pandas as pd
-
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     rows = pd.DataFrame(
         [
@@ -636,8 +635,13 @@ def _compact_snapshots_locked(
     try:
         n = data.count()
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        # pandas reaches the JVM through Arrow: no Python-worker job (see
+        # append_lineage)
         manifest_df = sink.spark.createDataFrame(
-            [(target, s, now) for s in sids], _compactions_schema()
+            pd.DataFrame(
+                {"target_sid": target, "source_sid": sids, "compacted_at": now}
+            ),
+            _compactions_schema(),
         ).coalesce(1)
         if sink.iceberg:
             # ONE atomic commit: sources replaced by the target together.
@@ -781,7 +785,7 @@ def _compact_manifest_locked(sink: TableSink) -> dict:
     if store:
         pending = man.join(
             sink.spark.createDataFrame(
-                [(s,) for s in store], "source_sid string"
+                pd.DataFrame({"source_sid": store}), "source_sid string"
             ),
             "source_sid",
             "left_semi",

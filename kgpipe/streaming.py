@@ -4,24 +4,27 @@ incrementally and exactly-once.
 The reference is batch-only (TSV at collection end, timeline_delegator.py:
 385-399); the batch pipeline here is Structured-Streaming-ready because the
 fused extraction is stateless per turn (SURVEY.md §2.9). This module is that
-claim made real: the SAME ``turn_triples`` logic runs under
-``spark.readStream`` with a file source, so a directory where transcript
-parquet files keep landing becomes a continuously-materializing triple
-store.
+claim made real: the SAME ``turn_triples`` logic runs over a streaming
+file source, so a directory where transcript parquet files keep landing
+becomes a continuously-materializing triple store.
 
-* source: ``readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)`` —
-  file-source bookkeeping (plus ``maxFilesPerTrigger``) gives incremental,
-  replay-safe input batching.
-* transform: ``fused_triples`` — mapInArrow is fully streaming-compatible;
-  zero stateful operators, so no watermark is required (token windows are
-  intra-turn, not event-time windows).
-* sink: parquet + checkpointLocation -> exactly-once file sink; the
-  checkpoint is the streaming analog of the lineage table's partition-
-  granular resume (kgpipe.materialize).
-
-``run_stream(trigger_available_now=True)`` drains everything currently in
-the directory and stops — the pattern for incremental backfill jobs; with a
-processing-time trigger it runs as a live service.
+* source: every shape reads the one streaming parquet source of
+  TRANSCRIPTS_SCHEMA rows (``_transcripts``) — file-source bookkeeping
+  (plus ``maxFilesPerTrigger``) gives incremental, replay-safe input
+  batching.
+* shapes, each returning a streaming DataFrame: ``stream_triples`` (the
+  fused ingest — mapInArrow is fully streaming-compatible, zero stateful
+  operators), ``stateful_conversation_stats`` (keyed custom state),
+  ``windowed_turn_counts`` (watermarked window), ``prompt_response_pairs``
+  (stream-stream join), ``dedup_turns`` (watermarked dedup) and
+  ``enriched_turns`` (stream-static join).
+* sink: ``drain_parquet(shape(...), output_dir, checkpoint_dir)`` — parquet
+  + checkpointLocation -> exactly-once file sink, drained with an
+  availableNow trigger (everything currently in the directory, then stop:
+  the pattern for incremental backfill jobs); the checkpoint is the
+  streaming analog of the lineage table's partition-granular resume
+  (kgpipe.materialize). ``run_incremental_materialize`` drains the fused
+  triples through ``foreachBatch`` into the bucketed triple store instead.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .pair import fused_triples
@@ -37,36 +41,67 @@ from .schemas import TRANSCRIPTS_SCHEMA
 from .worker import worker_body
 
 __all__ = [
+    "drain_parquet",
     "stream_triples",
-    "run_stream",
     "stateful_conversation_stats",
-    "run_stateful_stream",
     "windowed_turn_counts",
-    "run_windowed_stream",
     "prompt_response_pairs",
-    "run_join_stream",
     "dedup_turns",
-    "run_dedup_stream",
     "enriched_turns",
-    "run_enrich_stream",
+    "run_incremental_materialize",
 ]
 
 
-def _await_drained(query, timeout_sec):
-    """awaitTermination with the timeout made LOUD: a drain that outlives
-    its budget must not return control while the query is still running —
-    the caller would start a second query on the same checkpoint (state
-    corruption) or read partial output."""
+def _transcripts(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The streaming transcript source every shape reads."""
+    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def _drain(writer, checkpoint_dir: str, timeout_sec: float | None):
+    """Start ``writer`` on ``checkpoint_dir`` with an availableNow trigger
+    and wait until it has drained its input. Returns the stopped query.
+
+    The timeout is LOUD: a drain that outlives its budget must not return
+    control while the query is still running — the caller would start a
+    second query on the same checkpoint (state corruption) or read partial
+    output — so the query is stopped and TimeoutError raised."""
+    query = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
     if timeout_sec is None:
         query.awaitTermination()
-        return query
-    finished = query.awaitTermination(timeout_sec)
-    if not finished:
+    elif not query.awaitTermination(timeout_sec):
         query.stop()
         raise TimeoutError(
             f"streaming drain exceeded {timeout_sec}s (query {query.name or query.id})"
         )
     return query
+
+
+def drain_parquet(
+    df: DataFrame,
+    output_dir: str,
+    checkpoint_dir: str,
+    timeout_sec: float | None = 300.0,
+):
+    """Drain the streaming ``df`` into a parquet append sink at
+    ``output_dir``: everything its source holds now, exactly once across
+    reruns on the same ``checkpoint_dir`` (a rerun processes only input
+    that landed since). Returns the stopped query."""
+    return _drain(
+        df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .outputMode("append"),
+        checkpoint_dir,
+        timeout_sec,
+    )
 
 
 def stream_triples(
@@ -78,38 +113,8 @@ def stream_triples(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of triples over a transcript parquet directory."""
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    transcripts = reader.parquet(input_dir)
+    transcripts = _transcripts(spark, input_dir, max_files_per_trigger)
     return fused_triples(transcripts, gazetteer, blacklist, cfg)
-
-
-def run_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gazetteer,
-    blacklist,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    trigger_available_now: bool = True,
-    timeout_sec: float | None = 300.0,
-):
-    """Start (and with availableNow, drain) the stream. Returns the query."""
-    triples = stream_triples(spark, input_dir, gazetteer, blacklist, cfg)
-    writer = (
-        triples.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if trigger_available_now:
-        _await_drained(query, timeout_sec)
-    return query
 
 
 def windowed_turn_counts(
@@ -129,13 +134,13 @@ def windowed_turn_counts(
     contract pytest pins down. This is the third streaming shape next to
     the stateless ingest and the keyed custom state: built-in windowed agg
     with state eviction, the piece a 10^12-turn continuously-ingesting
-    deployment uses for rollups."""
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    t = reader.parquet(input_dir)
-    from pyspark.sql import functions as F
+    deployment uses for rollups.
 
+    Append mode emits a window only once it is finalized, so windows still
+    open when a drain exhausts the input are NOT in its output — the
+    deliberate semantics of a forever-running ingest (they emit on a later
+    batch)."""
+    t = _transcripts(spark, input_dir, max_files_per_trigger)
     return (
         t.where(F.col("ts").isNotNull())
         .withWatermark("ts", watermark)
@@ -148,39 +153,6 @@ def windowed_turn_counts(
             "n_turns",
         )
     )
-
-
-def run_windowed_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    window_days: int = 1,
-    watermark: str = "2 days",
-    max_files_per_trigger: int | None = None,
-    timeout_sec: float | None = 300.0,
-):
-    """Drain the watermarked windowed aggregation into a parquet append
-    sink. Append mode emits a window only once it is finalized, so windows
-    still open when the input is exhausted are NOT in the output — the
-    deliberate semantics of a forever-running ingest (they'd emit on the
-    next batch)."""
-    counts = windowed_turn_counts(
-        spark, input_dir,
-        window_days=window_days, watermark=watermark,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-    query = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(query, timeout_sec)
-    return query
 
 
 def enriched_turns(
@@ -197,40 +169,11 @@ def enriched_turns(
     stateless on the stream side: each micro-batch joins the static
     relation as-of execution, so a broadcastable dim costs no streaming
     state at all — the shape a 10^12-turn ingest uses to attach slowly-
-    changing metadata (tenant, cohort, routing) to every turn."""
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    t = reader.parquet(input_dir)
+    changing metadata (tenant, cohort, routing) to every turn. Joins
+    against a static relation commute with micro-batching, so the drained
+    output equals the batch join exactly."""
+    t = _transcripts(spark, input_dir, max_files_per_trigger)
     return t.join(dim, "conv_id")
-
-
-def run_enrich_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    dim: DataFrame,
-    *,
-    max_files_per_trigger: int | None = None,
-    timeout_sec: float | None = 300.0,
-):
-    """Drain the stream-static enrichment into an exactly-once parquet
-    sink; the drained output must equal the batch join exactly (joins
-    against a static relation commute with micro-batching)."""
-    enriched = enriched_turns(
-        spark, input_dir, dim, max_files_per_trigger=max_files_per_trigger
-    )
-    query = (
-        enriched.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(query, timeout_sec)
-    return query
 
 
 def dedup_turns(
@@ -255,47 +198,17 @@ def dedup_turns(
     restricted to timestamped turns (the X3 ts-less fixture turns are out
     of scope for the streaming path). This is the fourth streaming shape
     next to stateless ingest, keyed custom state, and the watermarked
-    windowed aggregate (SURVEY.md §2.9)."""
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    t = reader.parquet(input_dir)
-    from pyspark.sql import functions as F
+    windowed aggregate (SURVEY.md §2.9).
 
+    ``max_files_per_trigger=1`` gives one micro-batch per input file, so
+    redeliveries in later files meet the dedup state of earlier batches
+    (the cross-batch case)."""
+    t = _transcripts(spark, input_dir, max_files_per_trigger)
     return (
         t.where(F.col("ts").isNotNull())
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     )
-
-
-def run_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    watermark: str = "1 day",
-    max_files_per_trigger: int | None = 1,
-    timeout_sec: float | None = 300.0,
-):
-    """Drain the dedup stream into an exactly-once parquet sink. The default
-    maxFilesPerTrigger=1 forces one micro-batch per input file so
-    redeliveries in later files exercise the cross-batch dedup state."""
-    deduped = dedup_turns(
-        spark, input_dir,
-        watermark=watermark, max_files_per_trigger=max_files_per_trigger,
-    )
-    query = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(query, timeout_sec)
-    return query
 
 
 _STATE_OUT_SCHEMA = (
@@ -361,13 +274,12 @@ def stateful_conversation_stats(
     shuffle is the single groupBy(conv_id) Spark requires for keyed state;
     state lives in the checkpoint's state store (RocksDB/HDFS-backed on a
     cluster), so a 10^12-turn keyed-state job scales with executors exactly
-    like any aggregation."""
+    like any aggregation. With ``max_files_per_trigger`` below the input's
+    file count a drain spans several micro-batches, so the state carries
+    across batch boundaries."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    transcripts = reader.parquet(input_dir)
+    transcripts = _transcripts(spark, input_dir, max_files_per_trigger)
     return transcripts.groupBy("conv_id").applyInPandasWithState(
         _update_conv_state,
         _STATE_OUT_SCHEMA,
@@ -375,30 +287,6 @@ def stateful_conversation_stats(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stateful_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-    timeout_sec: float | None = 300.0,
-):
-    """Drain the stateful stream (availableNow) into a parquet append sink;
-    with max_files_per_trigger < file count the run spans several micro-
-    batches, so the state genuinely carries across batch boundaries."""
-    snaps = stateful_conversation_stats(spark, input_dir, max_files_per_trigger)
-    query = (
-        snaps.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(query, timeout_sec)
-    return query
 
 
 def prompt_response_pairs(
@@ -421,13 +309,8 @@ def prompt_response_pairs(
     Inner stream-stream joins emit eagerly, so the drained output equals
     the batch join exactly (pytest + kg_prompt_response oracle)."""
     def side(role: str, prefix: str):
-        reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        from pyspark.sql import functions as F
-
         return (
-            reader.parquet(input_dir)
+            _transcripts(spark, input_dir, max_files_per_trigger)
             .where((F.col("role") == role) & F.col("ts").isNotNull())
             .select(
                 F.col("conv_id").alias(f"{prefix}_conv"),
@@ -436,8 +319,6 @@ def prompt_response_pairs(
             )
             .withWatermark(f"{prefix}_ts", watermark)
         )
-
-    from pyspark.sql import functions as F
 
     u = side("user", "u")
     a = side("assistant", "a")
@@ -459,36 +340,6 @@ def prompt_response_pairs(
             (F.unix_timestamp("a_ts") - F.unix_timestamp("u_ts")) / 60
         ).cast("bigint").alias("gap_minutes"),
     )
-
-
-def run_join_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    max_gap_hours: int = 12,
-    watermark: str = "1 day",
-    max_files_per_trigger: int | None = None,
-    timeout_sec: float | None = 300.0,
-):
-    """Drain the stream-stream join into a parquet append sink
-    (availableNow; exactly-once via the checkpoint)."""
-    pairs = prompt_response_pairs(
-        spark, input_dir,
-        max_gap_hours=max_gap_hours, watermark=watermark,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-    query = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(query, timeout_sec)
-    return query
 
 
 # --------------------------------------------------------------------------
@@ -542,7 +393,6 @@ def run_incremental_materialize(
     Returns the drained query.
     """
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     from .materialize import (
         TableSink, append_lineage, bucket_clustered, migrate_legacy_store,
@@ -598,11 +448,6 @@ def run_incremental_materialize(
         )
         committed.add(sid)
 
-    query = (
-        triples.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        triples.writeStream.foreachBatch(commit), checkpoint_dir, timeout_sec
     )
-    _await_drained(query, timeout_sec)
-    return query

@@ -1151,11 +1151,13 @@ def _word_region(
 # bounds on each pattern's reach around its indicator; a differential
 # test asserts region-bounded == full-text detection.
 _REGION_BOUNDED: dict = {
-    # clock indicator: ":", a word-INITIAL am/pm (the lookaround keeps
+    # clock indicator: a colon between digits (every colon of
+    # _CLOCK_AT_ALT is; a bare ":" would open a window on every JSON and
+    # log line), a word-INITIAL am/pm (the lookaround keeps
     # "stream"/"example" from creating windows), or noon/midday/midnight
     "date_at_time": (
         re.compile(
-            r":|(?<![a-z])(?:[ap]\.?m\.?(?![a-z])|noon|midday|midnight)",
+            r"\d:\d|(?<![a-z])(?:[ap]\.?m\.?(?![a-z])|noon|midday|midnight)",
             re.I,
         ),
         8, 8,
@@ -1208,6 +1210,7 @@ def _bounded_windows(text: str, kind: str) -> List[Tuple[int, int]]:
 # prefix test could reject a token the indicator regex accepts — an unsound
 # skip. Same-engine-same-flags makes every condition exactly as permissive
 # as the indicator it guards.
+_CLOCK_COLON_RE = re.compile(r"\d:\d")
 _AMPM_WORD_RE = re.compile(r"(?<![a-z])[ap]\.?m\.?(?![a-z])", re.I)
 _NOON_WORD_RE = re.compile(r"(?<![a-z])(?:noon|midday|midnight)", re.I)
 # Each condition mirrors the indicator's \b at token level exactly: a
@@ -1236,7 +1239,7 @@ def _word_indicator_bits(word: str) -> frozenset:
     miss a true indicator) but may over-fire — over-firing only costs the
     scan the gate exists to skip."""
     bits = []
-    if ":" in word:
+    if _CLOCK_COLON_RE.search(word):
         bits.append(_IT_COLON)
     if _AMPM_WORD_RE.search(word):
         bits.append(_IT_AMPM)

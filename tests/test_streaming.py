@@ -10,7 +10,7 @@ from kgpipe.config import DEFAULT_CONFIG
 from kgpipe.fixtures import synthetic_transcripts_df
 from kgpipe.pipeline import build_triples
 from kgpipe.schemas import TRIPLE_SCHEMA
-from kgpipe.streaming import run_stream
+from kgpipe.streaming import drain_parquet, stream_triples
 
 
 def _rows(df):
@@ -26,8 +26,10 @@ def test_stream_equals_batch_and_resumes(spark, gazetteer, blacklist, tmp_path):
                                       hot_conv_factor=1)
     batch1.write.mode("append").parquet(in_dir)
 
-    q = run_stream(spark, in_dir, out_dir, ckpt, gazetteer, blacklist,
-                   DEFAULT_CONFIG, timeout_sec=120.0)
+    q = drain_parquet(
+        stream_triples(spark, in_dir, gazetteer, blacklist, DEFAULT_CONFIG),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     assert not q.isActive
     got1 = _rows(spark.read.schema(TRIPLE_SCHEMA).parquet(out_dir))
     want1 = _rows(build_triples(batch1, gazetteer, blacklist, DEFAULT_CONFIG, fused=True))
@@ -43,8 +45,10 @@ def test_stream_equals_batch_and_resumes(spark, gazetteer, blacklist, tmp_path):
     batch2 = batch2.withColumn("conv_id", F.concat(F.lit("b2-"), "conv_id"))
     batch2.write.mode("append").parquet(in_dir)
 
-    q2 = run_stream(spark, in_dir, out_dir, ckpt, gazetteer, blacklist,
-                    DEFAULT_CONFIG, timeout_sec=120.0)
+    q2 = drain_parquet(
+        stream_triples(spark, in_dir, gazetteer, blacklist, DEFAULT_CONFIG),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     assert not q2.isActive
     got2 = _rows(spark.read.schema(TRIPLE_SCHEMA).parquet(out_dir))
     want2 = sorted(
@@ -55,12 +59,42 @@ def test_stream_equals_batch_and_resumes(spark, gazetteer, blacklist, tmp_path):
     assert os.path.isdir(ckpt)
 
 
+def test_drain_timeout_stops_query_and_rerun_is_exactly_once(
+    spark, gazetteer, blacklist, tmp_path
+):
+    """A drain that outlives its budget stops its query and raises instead
+    of returning while the query runs; a rerun on the same checkpoint then
+    writes the batch output exactly once (nothing the stopped query left
+    behind is visible)."""
+    import pytest
+
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    t = synthetic_transcripts_df(spark, n_conv=3, turns_per_conv=4, seed=5,
+                                 hot_conv_factor=1)
+    t.write.mode("append").parquet(in_dir)
+
+    def triples():
+        return stream_triples(spark, in_dir, gazetteer, blacklist, DEFAULT_CONFIG)
+
+    with pytest.raises(TimeoutError):
+        drain_parquet(triples(), out_dir, ckpt, timeout_sec=0.01)
+    assert spark.streams.active == []
+
+    q = drain_parquet(triples(), out_dir, ckpt, timeout_sec=120.0)
+    assert not q.isActive
+    got = _rows(spark.read.schema(TRIPLE_SCHEMA).parquet(out_dir))
+    want = _rows(build_triples(t, gazetteer, blacklist, DEFAULT_CONFIG, fused=True))
+    assert got == want and got
+
+
 def test_stateful_conversation_state_across_batches(spark, tmp_path):
     """applyInPandasWithState: state carries across micro-batches; the final
     snapshot per conversation equals the batch aggregate over all input."""
     from pyspark.sql import functions as F
 
-    from kgpipe.streaming import run_stateful_stream
+    from kgpipe.streaming import stateful_conversation_stats
 
     in_dir = str(tmp_path / "sin")
     out_dir = str(tmp_path / "sout")
@@ -70,8 +104,10 @@ def test_stateful_conversation_state_across_batches(spark, tmp_path):
     # 4 input files + maxFilesPerTrigger=1 -> 4 micro-batches
     t.repartition(4).write.mode("append").parquet(in_dir)
 
-    q = run_stateful_stream(spark, in_dir, out_dir, ckpt,
-                            max_files_per_trigger=1, timeout_sec=180.0)
+    q = drain_parquet(
+        stateful_conversation_stats(spark, in_dir, max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=180.0,
+    )
     assert not q.isActive
     snaps = spark.read.parquet(out_dir)
     n_convs = t.select("conv_id").distinct().count()
@@ -104,7 +140,7 @@ def test_watermarked_window_finalize_and_late_drop(spark, tmp_path):
     dropped by the state operator."""
     import datetime as _dt
 
-    from kgpipe.streaming import run_windowed_stream
+    from kgpipe.streaming import windowed_turn_counts
 
     in_dir = str(tmp_path / "win")
     out_dir = str(tmp_path / "wout")
@@ -123,12 +159,14 @@ def test_watermarked_window_finalize_and_late_drop(spark, tmp_path):
           enumerate((1, 2, 3))] +
          [("c1", 3, "user", "x", None, day(2, 4)),
           ("c1", 4, "user", "x", None, day(2, 5))])
-    run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=120.0)
+    drain_parquet(windowed_turn_counts(spark, in_dir), out_dir, ckpt,
+                  timeout_sec=120.0)
 
     # batch 2: one row far in the future pushes the watermark past both
     # windows' ends -> they finalize and emit
     land([("c9", 0, "user", "x", None, day(30))])
-    run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=120.0)
+    drain_parquet(windowed_turn_counts(spark, in_dir), out_dir, ckpt,
+                  timeout_sec=120.0)
     got = {
         (r.window_start, r.conv_id): r.n_turns
         for r in spark.read.parquet(out_dir).collect()
@@ -138,7 +176,8 @@ def test_watermarked_window_finalize_and_late_drop(spark, tmp_path):
     # batch 3: a row on day 1 is now far older than the watermark (~day 28)
     # -> dropped by the state operator, output unchanged
     land([("c1", 9, "user", "x", None, day(1, 6))])
-    q = run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=120.0)
+    q = drain_parquet(windowed_turn_counts(spark, in_dir), out_dir, ckpt,
+                      timeout_sec=120.0)
     dropped = sum(
         op["numRowsDroppedByWatermark"]
         for op in (q.lastProgress or {}).get("stateOperators", [])
@@ -157,7 +196,7 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
     across multiple micro-batches."""
     from pyspark.sql import functions as F
 
-    from kgpipe.streaming import run_join_stream
+    from kgpipe.streaming import prompt_response_pairs
 
     in_dir = str(tmp_path / "jin")
     out_dir = str(tmp_path / "jout")
@@ -170,8 +209,11 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
     # the synthetic corpus spans ~300 days and file batches are NOT
     # time-ordered, so a tight watermark legitimately drops late rows
     # (asserted separately below)
-    q = run_join_stream(spark, in_dir, out_dir, ckpt, watermark="400 days",
-                        max_files_per_trigger=1, timeout_sec=180.0)
+    q = drain_parquet(
+        prompt_response_pairs(spark, in_dir, watermark="400 days",
+                              max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=180.0,
+    )
     assert not q.isActive
     got = spark.read.parquet(out_dir)
 
@@ -215,20 +257,29 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
     # batch 1: an in-window pair on day 1 -> emitted
     land([("c1", 0, "user", "q", None, day(1, 1)),
           ("c1", 1, "assistant", "a", None, day(1, 2))])
-    run_join_stream(spark, in2, out2, ckpt2, watermark="1 day",
-                    max_files_per_trigger=1, timeout_sec=180.0)
+    drain_parquet(
+        prompt_response_pairs(spark, in2, watermark="1 day",
+                              max_files_per_trigger=1),
+        out2, ckpt2, timeout_sec=180.0,
+    )
     # batch 2: far-future rows advance the watermark past day 1 on BOTH
     # sides (the join watermark is the min over the two role-filtered
     # inputs); different conv_ids so they add no pair themselves
     land([("c8", 0, "user", "z", None, day(30)),
           ("c9", 1, "assistant", "z", None, day(30))])
-    run_join_stream(spark, in2, out2, ckpt2, watermark="1 day",
-                    max_files_per_trigger=1, timeout_sec=180.0)
+    drain_parquet(
+        prompt_response_pairs(spark, in2, watermark="1 day",
+                              max_files_per_trigger=1),
+        out2, ckpt2, timeout_sec=180.0,
+    )
     # batch 3: a day-1 pair that batch mode would match -> late, dropped
     land([("c1", 2, "user", "q2", None, day(1, 3)),
           ("c1", 3, "assistant", "a2", None, day(1, 4))])
-    q2 = run_join_stream(spark, in2, out2, ckpt2, watermark="1 day",
-                         max_files_per_trigger=1, timeout_sec=180.0)
+    q2 = drain_parquet(
+        prompt_response_pairs(spark, in2, watermark="1 day",
+                              max_files_per_trigger=1),
+        out2, ckpt2, timeout_sec=180.0,
+    )
     g2 = sorted(map(tuple, spark.read.parquet(out2).select(*cols).collect()))
     assert g2 == [("c1", 0, 1)]
     dropped = sum(
@@ -245,7 +296,7 @@ def test_stream_dedup_cross_batch_and_eviction(spark, tmp_path):
     not re-emitted)."""
     import datetime as _dt
 
-    from kgpipe.streaming import run_dedup_stream
+    from kgpipe.streaming import dedup_turns
 
     in_dir = str(tmp_path / "dd")
     out_dir = str(tmp_path / "ddout")
@@ -267,8 +318,10 @@ def test_stream_dedup_cross_batch_and_eviction(spark, tmp_path):
     # file 2: redelivery of (c1, 1) within the watermark + one new turn
     land([("c1", 1, "user", "b", None, day(1, 2)),   # cross-batch duplicate
           ("c2", 1, "user", "d", None, day(1, 4))])
-    run_dedup_stream(spark, in_dir, out_dir, ckpt,
-                     watermark="1 day", timeout_sec=120.0)
+    drain_parquet(
+        dedup_turns(spark, in_dir, watermark="1 day", max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     got = sorted(
         (r.conv_id, r.turn_idx) for r in spark.read.parquet(out_dir).collect()
     )
@@ -278,11 +331,15 @@ def test_stream_dedup_cross_batch_and_eviction(spark, tmp_path):
     # redelivery of (c1, 0) is LATE (its state was evicted) -> the
     # operator drops it as late data rather than re-emitting it
     land([("c9", 0, "user", "z", None, day(30))])
-    run_dedup_stream(spark, in_dir, out_dir, ckpt,
-                     watermark="1 day", timeout_sec=120.0)
+    drain_parquet(
+        dedup_turns(spark, in_dir, watermark="1 day", max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     land([("c1", 0, "user", "a", None, day(1))])
-    q = run_dedup_stream(spark, in_dir, out_dir, ckpt,
-                         watermark="1 day", timeout_sec=120.0)
+    q = drain_parquet(
+        dedup_turns(spark, in_dir, watermark="1 day", max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     dropped = sum(
         op["numRowsDroppedByWatermark"]
         for op in (q.lastProgress or {}).get("stateOperators", [])
@@ -300,7 +357,7 @@ def test_stream_static_enrichment_equals_batch(spark, tmp_path):
     micro-batches."""
     from pyspark.sql import functions as F
 
-    from kgpipe.streaming import run_enrich_stream
+    from kgpipe.streaming import enriched_turns
 
     in_dir = str(tmp_path / "ein")
     out_dir = str(tmp_path / "eout")
@@ -312,8 +369,10 @@ def test_stream_static_enrichment_equals_batch(spark, tmp_path):
     dim = static.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("conv_total_turns")
     )
-    run_enrich_stream(spark, in_dir, out_dir, ckpt, dim,
-                      max_files_per_trigger=1, timeout_sec=120.0)
+    drain_parquet(
+        enriched_turns(spark, in_dir, dim, max_files_per_trigger=1),
+        out_dir, ckpt, timeout_sec=120.0,
+    )
     got = sorted(
         (r.conv_id, r.turn_idx, r.conv_total_turns)
         for r in spark.read.parquet(out_dir).collect()

@@ -1314,6 +1314,9 @@ def test_region_bounded_scan_matches_full_scan():
         "tue , march 5 at 10:30", "wed . 8 p.m. -", "sat / 9 am",
         "sunday - 2 1/2 hours / or so", "thu. up to 3 days , ago",
         "saturday 19:30 / monday 7 am .",
+        # JSON and log lines: colons that are not between digits
+        '{"a": 1}', "ERROR: x", "12:30:45 start",
+        '{"ts": "10:30", "level": "INFO"} at noon',
     ]
     for t in cases:
         for kind, pat in pats.items():
@@ -1492,7 +1495,7 @@ def test_scan_layout_follows_the_derived_reach():
     list("ap.m:nod/ 0123456789\n\tuortsielPAMİ,-") +
     ["noon", "up to", "or so", "part of", "earlier in", "1/2", "p.m.",
      "3 in the", "midnight", "in,", "set-up", "AM", "afternoon",
-     "example", "particular"]
+     "example", "particular", '{"a": 1}', "ERROR: x", "12:30:45 start"]
 ), max_size=40).map("".join))
 def test_indicator_word_gate_is_sound(t):
     # the word-level indicator-presence gate may only skip a region-bounded
