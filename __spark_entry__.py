@@ -260,8 +260,9 @@ _STREAM_CACHE: dict = {}
 
 @lru_cache(maxsize=None)
 def _stream_root() -> str:
-    """This process's scratch root for the stream queries' directories,
-    removed at interpreter exit."""
+    """This process's scratch root for the directories queries write (the
+    stream queries' input/output/checkpoint, the IVF index), removed at
+    interpreter exit."""
     root = tempfile.mkdtemp(prefix="kg_streams_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
@@ -1110,8 +1111,6 @@ def _q_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes read only their n_probe partitions (dynamic partition pruning —
     the plan carries a dynamicpruning PartitionFilter; asserted in pytest).
     Results are identical to the in-memory IVF, so it shares that oracle."""
-    import tempfile
-
     from kgpipe.simsearch import build_ivf_index, ivf_topk_indexed
 
     emb = _embeddings(spark, sf_dir).select(
@@ -1120,7 +1119,7 @@ def _q_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    path = tempfile.mkdtemp(prefix="kg_ivf_idx_")
+    path = tempfile.mkdtemp(prefix="kg_ivf_idx_", dir=_stream_root())
     centroids = build_ivf_index(emb, path, n_list=16)
     r = ivf_topk_indexed(spark, path, centroids, q, k=5, n_probe=4, raw=True)
     return r.select(

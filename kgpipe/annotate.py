@@ -6,11 +6,11 @@ config) -> (anchor, tokens, mentions, timexes); the mention and timex dicts
 carry the payload columns of ``schemas.ANNOTATION_UNION_SCHEMA``
 (``extract.annotate_union`` emits them as flat union rows). It is the
 composition of two halves over one tokenization: ``annotate_mentions``
-(tokenize, gazetteer, mention rows) and ``annotate_timexes`` (detect +
-normalize). Both Arrow kernels call the halves directly: the structured
-path's ``extract.union_batch`` and the fused ``pair.turn_triples``, which
-runs the timex half only for turns with a surviving mention. It reproduces,
-per turn
+(tokenize, gazetteer, mention rows) and ``annotate_timexes`` (detect,
+normalize, and each timex's TLINK label and interval). Both Arrow kernels
+call the halves directly: the structured path's ``extract.union_batch`` and
+the fused ``pair.turn_triples``, which runs the timex half only for turns
+with a surviving mention. It reproduces, per turn
 (turn ≙ reference note / CAS):
 
 * tokenization + last-wins begin dedup (timeline_delegator.py:82-119)
@@ -40,6 +40,7 @@ from .score import (
     dtr_label,
     get_conmod_instance,
     get_dtr_instance,
+    tlink_label,
     tokens_for_mode,
 )
 from .text import (
@@ -49,7 +50,7 @@ from .text import (
     sentence_spans,
     tokenize,
 )
-from .timex import detect_timexes, normalize_timex
+from .timex import detect_timexes, normalize_timex, timeml_interval
 
 __all__ = [
     "annotate_turn",
@@ -227,7 +228,15 @@ def annotate_mentions(text: str, ts, gazetteer, cfg: PipelineConfig):
 def annotate_timexes(text: str, ts, anchor, tokenized: Tokenized):
     """The timex half of ``annotate_turn``: detect + normalize (F6/X4/X5
     live inside normalize) over the turn's existing tokenization, mapping
-    each timex to token offsets. Returns the timex dicts."""
+    each timex to token offsets. Returns the timex dicts.
+
+    This is the one place a timex is labelled: ``tlink`` is the uninverted
+    ``score.tlink_label`` of its value against the turn anchor (the pairs'
+    X8 inversion is applied where the event's position is known), and
+    ``iv_begin`` / ``iv_end`` are its ``timex.timeml_interval`` dates, which
+    the event-event labels compare. ``tlink`` is None when ``normed`` is;
+    the interval dates are None when ``timeml_interval`` places no interval
+    (no value, a REF pseudo-value or a SET value)."""
     text = text or ""
     anchor_full = full_anchor_for(ts, anchor)
     n = len(tokenized.tokens)
@@ -236,6 +245,9 @@ def annotate_timexes(text: str, ts, anchor, tokenized: Tokenized):
     timex_rows = []
     for t_idx, t in enumerate(detect_timexes(text)):
         normed = normalize_timex(t["surface"], t["kind"], anchor_full)
+        iv_begin, iv_end = (
+            None if normed is None else timeml_interval(normed)
+        ) or (None, None)
         timex_rows.append(
             {
                 "timex_idx": t_idx,
@@ -246,6 +258,9 @@ def annotate_timexes(text: str, ts, anchor, tokenized: Tokenized):
                 "surface": t["surface"],
                 "kind": t["kind"],
                 "normed": normed,
+                "tlink": None if normed is None else tlink_label(normed, anchor),
+                "iv_begin": iv_begin,
+                "iv_end": iv_end,
             }
         )
     return timex_rows
@@ -265,7 +280,8 @@ def annotate_turn(
     """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes):
     token dicts (tok_idx, begin, end, text, is_newline), mention dicts
     (mention_idx + the union schema's mention columns) and timex dicts
-    (timex_idx + begin, end, tok_begin, tok_end, surface, kind, normed).
+    (timex_idx + begin, end, tok_begin, tok_end, surface, kind, normed,
+    tlink, iv_begin, iv_end).
 
     The two halves, ``annotate_mentions`` and ``annotate_timexes``, share
     one tokenization. ``annotate_turn`` always runs both (unless

@@ -49,7 +49,10 @@ _MENTION_FIELDS = (
     "confidence", "conmod", "conmod_inst", "dtr", "dtr_inst",
     "win_char_begin", "win_char_end",
 )
-_TIMEX_FIELDS = ("begin", "end", "tok_begin", "tok_end", "surface", "kind", "normed")
+_TIMEX_FIELDS = (
+    "begin", "end", "tok_begin", "tok_end", "surface", "kind", "normed",
+    "tlink", "iv_begin", "iv_end",
+)
 
 
 def annotate_union(

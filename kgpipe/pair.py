@@ -10,8 +10,11 @@ token-window clamp (O4).
 
 Instance strings need the turn's token stream, so pairs are joined back to
 the union frame's token rows (same key again) and assembled by column
-expressions together with the deterministic TLINK scorer + the inversion
-rule (X8, timeline_delegator.py:449-455).
+expressions. The deterministic TLINK label is not computed here: the
+annotate kernel emits it on every timex row (``tlink``, see
+``annotate.annotate_timexes``), and the pair applies the inversion rule (X8,
+timeline_delegator.py:449-455) as an expression, so the structured path
+crosses the Python boundary once, in the annotate ``mapInArrow``.
 
 ``turn_triples`` is the fused per-turn equivalent (zero-shuffle path): one
 call produces ALL triples for a turn — tlink, entity-mention, doc-time-rel
@@ -25,13 +28,10 @@ tool triples with ``pyarrow.compute``.
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .annotate import annotate_mentions, annotate_timexes
 from .config import DEFAULT_CONFIG, LABEL_TO_INVERTED_LABEL, PipelineConfig
@@ -41,7 +41,6 @@ from .score import (
     TLINK_PAD_LENGTH,
     apply_inversion,
     get_tlink_instance,
-    tlink_label,
     tokens_for_mode,
 )
 from .text import mention_screen
@@ -72,17 +71,13 @@ def pair_window(
         "annotation_id AS m_annotation_id", "win_char_begin", "win_char_end",
     )
     # the uninverted tlink label is a function of the TIMEX row alone
-    # (normed value vs the turn anchor), so it is computed here on the
-    # timex side — one narrow vectorized UDF over |timexes| rows — and
-    # rides the join, instead of running over the ~5x larger pair set
-    t = timexes_f.withColumn(
-        "t_lab0",
-        _tlink_label_udf(timexes_f.sparkSession.sparkContext)("normed", "anchor_date"),
-    ).selectExpr(
+    # (normed value vs the turn anchor): the annotate kernel emits it as the
+    # timex row's ``tlink`` column, and it rides the join
+    t = timexes_f.selectExpr(
         "conv_id AS t_conv_id", "turn_idx AS t_turn_idx",
         "`begin` AS t_begin", "`end` AS t_end",
         "tok_begin AS t_tok_begin", "tok_end AS t_tok_end", "normed AS t_normed",
-        "annotation_id AS t_annotation_id", "t_lab0",
+        "annotation_id AS t_annotation_id", "tlink AS t_tlink",
     )
     # the timex side is the build side by hint, not by size: both sides
     # read the one cached frame, AQE re-plans the join as each side's cache
@@ -132,47 +127,9 @@ def _tlink_instance_sql() -> str:
 _TLINK_INSTANCE = _tlink_instance_sql()
 # the label is inverted (X8) when the timex precedes the event in the text
 _TLINK_PRED = (
-    "concat('tlink:', CASE WHEN t_begin < m_begin THEN element_at(map({}), t_lab0)"
-    " ELSE t_lab0 END)"
+    "concat('tlink:', CASE WHEN t_begin < m_begin THEN element_at(map({}), t_tlink)"
+    " ELSE t_tlink END)"
 ).format(", ".join(sql_str(x) for kv in LABEL_TO_INVERTED_LABEL.items() for x in kv))
-
-
-@lru_cache(maxsize=1)
-def _tlink_label_udf(sc):
-    """tlink_label over (normed, anchor) as a vectorized UDF: the
-    TimeML-interval parse runs once per DISTINCT (normed, anchor) in the
-    Arrow batch (values repeat heavily — a few hundred distinct anchors
-    over ~1M pairs at sf0.1), exactly the per-distinct memo shape of the
-    event-event scorer.
-
-    Built once per SparkContext ``sc`` (the cache key): a UDF pickles its
-    function into a JVM object on first use, and that object belongs to
-    the context active then."""
-
-    @F.pandas_udf(T.StringType())
-    @worker_body
-    def lab(normed: pd.Series, anchor: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for n, a in zip(normed, anchor):
-            if n is None:
-                # unfiltered timex frames carry normed=NULL for
-                # normalization failures; the label stage runs pre-join
-                # now, so tolerate them (the pipeline filters them out
-                # before pairing — F5 — and 'none' matches tlink_label's
-                # unparseable-value arm)
-                out.append("none")
-                continue
-            a2 = None if a is None or a != a else a
-            key = (n, a2)
-            v = cache.get(key)
-            if v is None:
-                v = tlink_label(n, a2)
-                cache[key] = v
-            out.append(v)
-        return pd.Series(out)
-
-    return lab
 
 
 def tlink_triples_from_pairs(
@@ -187,10 +144,10 @@ def tlink_triples_from_pairs(
     \\x1f-joined, <newline>-substituted token stream (tokens_for_mode
     mode="dtr", precomputed at annotate time).
 
-    Everything here is JVM whole-stage codegen except one narrow
-    ArrowEvalPython for the label (two columns in, one out, per-distinct
-    memoized): the token stream is split ONCE per turn on the toks side,
-    the co-partitioned join attaches the array to each pair, and the
+    Everything here is JVM whole-stage codegen. The label arrives on the
+    pairs as the timex row's ``tlink`` column and ``_TLINK_PRED`` inverts
+    it; the token stream is split ONCE per turn on the toks side, the
+    co-partitioned join attaches the array to each pair, and the
     instance string is built by a slice/concat/array_join expression
     (value-identical to get_tlink_instance — pytest-pinned). The previous
     shape collected pair structs per turn and assembled instances in a
@@ -218,8 +175,9 @@ def nearest_anchor_timex(mentions_f: DataFrame, timexes_f: DataFrame) -> DataFra
     """Per mention, the nearest normalized timex inside its ±60-token char
     window (W7 nearest-anchor applied to in-window candidates): smallest
     |timex.begin - mention.begin|, ties to the earlier timex then the lower
-    timex_idx. Returns (conv_id, turn_idx, annotation_id, anchor_normed) —
-    one row per mention that HAS an in-window timex."""
+    timex_idx. Returns (conv_id, turn_idx, annotation_id, iv_begin, iv_end),
+    the anchor's TimeML interval dates (null when it has none) — one row per
+    mention that HAS an in-window timex."""
     m = mentions_f.select(
         "conv_id", "turn_idx",
         F.col("begin").alias("m_begin"),
@@ -229,7 +187,7 @@ def nearest_anchor_timex(mentions_f: DataFrame, timexes_f: DataFrame) -> DataFra
         "conv_id", "turn_idx",
         F.col("begin").alias("t_begin"), F.col("end").alias("t_end"),
         F.col("timex_idx").alias("t_idx"),
-        F.col("normed").alias("anchor_normed"),
+        "iv_begin", "iv_end",
     )
     j = m.join(t, ["conv_id", "turn_idx"]).where(
         F.col("t_begin").between(F.col("win_char_begin"), F.col("win_char_end"))
@@ -241,62 +199,26 @@ def nearest_anchor_timex(mentions_f: DataFrame, timexes_f: DataFrame) -> DataFra
     return (
         j.withColumn("nr", F.row_number().over(w))
         .where(F.col("nr") == 1)
-        .select("conv_id", "turn_idx", "annotation_id", "anchor_normed")
+        .select("conv_id", "turn_idx", "annotation_id", "iv_begin", "iv_end")
     )
 
 
-@lru_cache(maxsize=1)
-def _ee_label_udf(sc):
-    """Interval-algebra label between two TimeML values (the event-event
-    analog of the U1 scorer; documented spec, shared with the oracle):
-    either side unparseable/missing -> 'none'; disjoint -> 'before'/'after'
-    by order; identical -> 'overlap'; one containing the other ->
-    'contains' / 'contains-1'; partial overlap -> 'overlap'.
-
-    The regex+date parse (``timeml_interval``) runs ONCE per distinct
-    TimeML value in the Arrow batch, not once per pair — anchor values
-    repeat heavily (175k pairs over a few hundred distinct anchors at
-    sf0.1), so the parse cost is O(distinct), and the interval algebra
-    itself is vectorized int64 ordinal comparisons via ``np.select``.
-    Built once per SparkContext ``sc``, as ``_tlink_label_udf``."""
-    import numpy as np  # noqa: F811 (worker-side import)
-    import pandas as pd  # noqa: F811 (worker-side import)
-
-    from .timex import timeml_interval
-
-    @F.pandas_udf(T.StringType())
-    @worker_body
-    def ee_label(na: pd.Series, nb: pd.Series) -> pd.Series:
-        uniq = pd.unique(pd.concat([na, nb], ignore_index=True).dropna())
-        cache = {}
-        for v in uniq:
-            iv = timeml_interval(v) if isinstance(v, str) else None
-            # proleptic ordinals: int64-comparable, no Timestamp range limit
-            cache[v] = (iv[0].toordinal(), iv[1].toordinal()) if iv else None
-        ia = na.map(cache)
-        ib = nb.map(cache)
-        ok = ia.notna() & ib.notna()
-        out = pd.Series(np.full(len(na), "none", dtype=object))
-        if ok.any():
-            s1 = ia[ok].str[0].to_numpy(dtype=np.int64)
-            e1 = ia[ok].str[1].to_numpy(dtype=np.int64)
-            s2 = ib[ok].str[0].to_numpy(dtype=np.int64)
-            e2 = ib[ok].str[1].to_numpy(dtype=np.int64)
-            lab = np.select(
-                [
-                    e1 < s2,
-                    s1 > e2,
-                    (s1 == s2) & (e1 == e2),
-                    (s1 <= s2) & (e1 >= e2),
-                    (s2 <= s1) & (e2 >= e1),
-                ],
-                ["before", "after", "overlap", "contains", "contains-1"],
-                default="overlap",
-            )
-            out[ok.to_numpy()] = lab
-        return out
-
-    return ee_label
+# Interval-algebra label between the anchor intervals of the subject (a)
+# and the object (b), the event-event analog of the U1 scorer (documented
+# spec, shared with the oracle): either side without an interval -> 'none';
+# disjoint -> 'before'/'after' by order; identical -> 'overlap'; one
+# containing the other -> 'contains' / 'contains-1'; partial overlap ->
+# 'overlap'. The dates are the anchors' ``iv_begin`` / ``iv_end``, which the
+# annotate kernel emits from ``timex.timeml_interval``.
+_EE_LABEL = """CASE
+  WHEN a.iv_begin IS NULL OR b.iv_begin IS NULL THEN 'none'
+  WHEN a.iv_end < b.iv_begin THEN 'before'
+  WHEN a.iv_begin > b.iv_end THEN 'after'
+  WHEN a.iv_begin = b.iv_begin AND a.iv_end = b.iv_end THEN 'overlap'
+  WHEN a.iv_begin <= b.iv_begin AND a.iv_end >= b.iv_end THEN 'contains'
+  WHEN b.iv_begin <= a.iv_begin AND b.iv_end >= a.iv_end THEN 'contains-1'
+  ELSE 'overlap'
+END"""
 
 
 def event_event_triples(
@@ -310,9 +232,9 @@ def event_event_triples(
     a = the textually-first mention (mention_idx order, which IS the
     (begin, end) sort), b fully inside a's window. Each side is anchored to
     its nearest in-window timex (W7 nearest-anchor), and the label compares
-    the two anchors' TimeML intervals with the interval algebra; the
-    subject is textually first, so X8 inversion is the identity by
-    construction. All joins key on (conv_id, turn_idx) — the same exchange
+    the two anchors' TimeML intervals with the interval algebra
+    (``_EE_LABEL``, one SQL expression); the subject is textually first, so
+    X8 inversion is the identity by construction. All joins key on (conv_id, turn_idx) — the same exchange
     every other stage uses."""
     anchors = nearest_anchor_timex(mentions_id, timexes_id)
     m = mentions_id.join(
@@ -320,7 +242,7 @@ def event_event_triples(
     ).select(
         "conv_id", "turn_idx", "annotation_id", "anchor_date",
         "mention_idx", "begin", "end", "surface",
-        "win_char_begin", "win_char_end", "anchor_normed",
+        "win_char_begin", "win_char_end", "iv_begin", "iv_end",
     )
     a = m.alias("a")
     b = m.alias("b")
@@ -333,13 +255,9 @@ def event_event_triples(
             F.col("a.win_char_begin"), F.col("a.win_char_end")
         )
     )
-    label = _ee_label_udf(mentions_id.sparkSession.sparkContext)
     out = pairs.select(
         F.col("a.annotation_id").alias("subj"),
-        F.concat(
-            F.lit("ee-tlink:"),
-            label(F.col("a.anchor_normed"), F.col("b.anchor_normed")),
-        ).alias("pred"),
+        F.concat(F.lit("ee-tlink:"), F.expr(_EE_LABEL)).alias("pred"),
         F.col("b.annotation_id").alias("obj"),
         F.col("a.anchor_date").alias("anchor_date"),
         "conv_id", "turn_idx",
@@ -424,9 +342,6 @@ def turn_triples(
         ids[(kind, i)] = f"{rank}@e@{note}@system"
 
     tokens = tokens_for_mode(tokenized.tokens, tokenized.newline_flags, "dtr")
-    # the (normed, anchor) -> label map is per-TIMEX, not per-pair: compute
-    # once per turn instead of once per (mention, timex) combination
-    label_by_timex = [tlink_label(t["normed"], anchor) for t in relevant]
     for mi, m in enumerate(positive):
         m_id = ids[(0, mi)]
         triple(
@@ -450,9 +365,7 @@ def turn_triples(
                 (t["tok_begin"], t["tok_end"] + 1),
                 tokens,
             )
-            label = apply_inversion(
-                label_by_timex[ti], t["begin"], m["begin"]
-            )
+            label = apply_inversion(t["tlink"], t["begin"], m["begin"])
             triple(
                 m_id, "tlink:" + label, ids[(1, ti)],
                 subj_text=m["surface"], obj_text=t["normed"], instance=inst,

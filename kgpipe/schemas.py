@@ -55,6 +55,13 @@ ANNOTATION_UNION_SCHEMA = T.StructType(
         T.StructField("win_char_end", T.IntegerType()),
         T.StructField("kind", T.StringType()),          # timex kind
         T.StructField("normed", T.StringType()),        # null => dropped by F5
+        # timex rows only, from annotate.annotate_timexes: the uninverted
+        # score.tlink_label of normed against anchor_date (null when normed
+        # is), and normed's timex.timeml_interval dates (null when it has
+        # none), which the event-event labels compare
+        T.StructField("tlink", T.StringType()),
+        T.StructField("iv_begin", T.DateType()),
+        T.StructField("iv_end", T.DateType()),
         # the turn's token stream, already <newline>-substituted
         # (tokens_for_mode mode="dtr" — the only mode pair scoring uses),
         # joined with \x1f: ONE Arrow string per turn instead of ~180

@@ -2882,10 +2882,13 @@ _CLOCK_VAL_RE = re.compile(
 )
 
 
+@lru_cache(maxsize=65536)
 def timeml_interval(value: str) -> Optional[Tuple[dt.date, dt.date]]:
     """TimeML value -> inclusive [start, end] calendar interval; None for the
     REF pseudo-values and SET (P…) values. Used by the deterministic TLINK
-    scorer."""
+    scorer and by ``annotate.annotate_timexes``, which asks twice per timex
+    (once through ``score.tlink_label``); memoized, as a corpus repeats its
+    values."""
     m = _DAY_VAL_RE.match(value)
     if m:
         d = dt.date(int(m.group(1)), int(m.group(2)), int(m.group(3)))

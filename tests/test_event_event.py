@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from kgpipe.config import PipelineConfig
 from kgpipe.pipeline import build_annotations
-from kgpipe.pair import event_event_triples
+from kgpipe.pair import event_event_triples, nearest_anchor_timex
 from kgpipe.schemas import TRANSCRIPTS_SCHEMA
 
 
@@ -59,3 +61,27 @@ def test_overlap_on_shared_anchor(spark, gazetteer, blacklist):
     text = "cisplatin and taxol given on 3/5/2024"
     preds = _ee(spark, gazetteer, blacklist, text)
     assert preds[("cisplatin", "taxol")] == "ee-tlink:overlap"
+
+
+@pytest.mark.parametrize("text", [
+    # a REF pseudo-value: 'recently' -> PAST_REF
+    "cisplatin given recently and taxol today",
+    # a SET value: 'every 2 weeks' -> P2W
+    "cisplatin every 2 weeks with taxol on 3/5/2024",
+])
+def test_label_none_when_anchor_has_no_interval(spark, gazetteer, blacklist, text):
+    # cisplatin HAS an anchor, its nearest timex, but timeml_interval
+    # places no interval for that value: the anchor row carries null dates,
+    # and the label's null arm gives 'none' although taxol's anchor is a day
+    df = spark.createDataFrame([("c0", 0, "user", text, None, dt.datetime(2024, 3, 15, 9, 0))],
+                               TRANSCRIPTS_SCHEMA)
+    ann = build_annotations(df, gazetteer, blacklist, PipelineConfig(), persist=False)
+    ids = {r.surface: r.annotation_id for r in ann["mentions"].collect()}
+    anchors = {
+        r.annotation_id: (r.iv_begin, r.iv_end)
+        for r in nearest_anchor_timex(ann["mentions"], ann["timexes"]).collect()
+    }
+    assert anchors[ids["cisplatin"]] == (None, None)
+    assert anchors[ids["taxol"]][0] is not None
+    preds = _ee(spark, gazetteer, blacklist, text)
+    assert preds[("cisplatin", "taxol")] == "ee-tlink:none"

@@ -133,6 +133,30 @@ def test_per_turn_text_equality_invariant(spark, corpus_pdf, corpus_df, gazettee
         assert r.surface == covered, (r.conv_id, r.turn_idx, r.kind_rank, r.begin)
 
 
+def test_union_frame_carries_tlink_label_and_interval(corpus_df, gazetteer, blacklist):
+    """Every timex row of the union frame carries the tlink label and the
+    TimeML interval that score.tlink_label / timex.timeml_interval give for
+    its (normed, anchor_date), null when normed is; mention and token rows
+    carry null."""
+    from kgpipe.score import tlink_label
+    from kgpipe.timex import timeml_interval
+
+    rows = annotate_union(corpus_df, gazetteer, blacklist, PipelineConfig()).select(
+        "kind_rank", "normed", "anchor_date", "tlink", "iv_begin", "iv_end"
+    ).collect()
+    for r in rows:
+        if r.kind_rank != 1 or r.normed is None:
+            want = (None, None, None)
+        else:
+            want = (tlink_label(r.normed, r.anchor_date),
+                    *(timeml_interval(r.normed) or (None, None)))
+        assert (r.tlink, r.iv_begin, r.iv_end) == want, r
+    timex = [r for r in rows if r.kind_rank == 1]
+    assert {r.kind_rank for r in rows} == {0, 1, 2}
+    assert any(r.iv_begin is not None and r.iv_begin < r.iv_end for r in timex)
+    assert len({r.tlink for r in timex}) > 2
+
+
 def test_annotation_id_stability(corpus_df, gazetteer, blacklist):
     """Ids are a pure function of the turn content — two runs agree."""
     cfg = PipelineConfig()
@@ -210,6 +234,53 @@ def test_empty_and_degenerate_inputs(spark, gazetteer, blacklist):
     for fused in (False, True):
         alone = _rows(build_triples(normal, gazetteer, blacklist, cfg, fused=fused))
         assert [r for r in s if r[4] == "cN"] == alone, fused
+
+
+def test_null_ts_turn_labels_tlink_none(spark, gazetteer, blacklist):
+    """A turn with a null ts and no Principal Date header has no anchor, so
+    its mention's tlink to an absolute date is labelled 'none' on both
+    paths, row for row as the oracle gives it."""
+    from kgpipe.schemas import TRANSCRIPTS_SCHEMA, TRIPLE_SCHEMA
+
+    from .oracle_ref import process_turn
+
+    cfg = PipelineConfig()
+    turns = [("cZ", 0, "user", "started cisplatin on 3/5/2024", None, None)]
+    want = sorted(
+        (
+            tuple(d[k] for k in TRIPLE_SCHEMA.fieldNames())
+            for c, i, role, text, tool, ts in turns
+            for d in process_turn(c, i, role, tool, ts, text, gazetteer, blacklist, cfg)
+        ),
+        key=repr,
+    )
+    assert [r[1] for r in want if r[1].startswith("tlink:")] == ["tlink:none"]
+    df = spark.createDataFrame(turns, TRANSCRIPTS_SCHEMA)
+    for fused in (False, True):
+        assert _rows(build_triples(df, gazetteer, blacklist, cfg, fused=fused)) == want, fused
+
+
+def test_corpus_without_gazetteer_hits(spark, gazetteer, blacklist):
+    """A corpus in which no turn holds a gazetteer term, though every turn
+    holds a date: both paths give its speaker and tool triples and nothing
+    else, and the same rows."""
+    from kgpipe.schemas import TRANSCRIPTS_SCHEMA
+
+    cfg = PipelineConfig()
+    turns = [
+        ("cH", 0, "user", "rerun the loader on 3/5/2024 and again tomorrow", None, _TS),
+        ("cH", 1, "assistant", "the job finished 2 days ago", "shell", _TS),
+        ("cH", 2, None, "Principal Date 20240301\nnext review in 3 weeks", "search", None),
+    ]
+    df = spark.createDataFrame(turns, TRANSCRIPTS_SCHEMA)
+    s = _rows(build_triples(df, gazetteer, blacklist, cfg, fused=False))
+    assert s == _rows(build_triples(df, gazetteer, blacklist, cfg, fused=True))
+    assert [r[:3] for r in s] == sorted([
+        ("turn@cH_0", "speaker-attribution", "user"),
+        ("turn@cH_1", "speaker-attribution", "assistant"),
+        ("turn@cH_1", "tool-invocation", "shell"),
+        ("turn@cH_2", "tool-invocation", "search"),
+    ], key=repr)
 
 
 def test_config_values_quoted_into_expressions(spark, blacklist):

@@ -5,9 +5,9 @@ Checks (each is a hard assertion, so this doubles as a regression gate):
 
 1. fused path — zero Exchange nodes and exactly one MapInArrow: the
    10^12-turn extraction is one narrow mapInArrow over the scan.
-2. structured path — the only wide operators are keyed on
-   (conv_id, turn_idx); blacklist F2 is a BroadcastHashJoin (left anti),
-   never a shuffled join.
+2. structured path — one hash exchange, keyed on (conv_id, turn_idx);
+   exactly one Python node, the annotate MapInArrow; blacklist F2 is a
+   BroadcastHashJoin (left anti), never a shuffled join.
 3. column pruning — the transcripts scan reads only the 6 input columns
    even though downstream produces 9+ (ReadSchema check), and a
    predicate on the derived input pushes into the parquet scan
@@ -31,9 +31,12 @@ Usage: python tools/explain_plans.py [--write]  (--write refreshes PLANS.md)
 
 from __future__ import annotations
 
+import atexit
 import io
 import re
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
@@ -50,6 +53,20 @@ def plan_of(df) -> str:
 
 def count(pattern: str, plan: str) -> int:
     return len(re.findall(pattern, plan))
+
+
+def python_nodes(plan: str) -> set[tuple[str, str]]:
+    """The distinct Python nodes (MapInArrow, MapInPandas, ArrowEvalPython,
+    BatchEvalPython, ...) of a formatted plan's tree as (name, id): a cached
+    subtree is printed under each of its readers with the same ids."""
+    return set(re.findall(r"\b(\w*(?:Python|InPandas|InArrow)\w*) \((\d+)\)", plan))
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new temporary directory, removed when the interpreter exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def keyed_exchange_args(plan: str) -> list[str]:
@@ -110,24 +127,20 @@ def main() -> int:
     from kgpipe.session import get_spark
     from kgpipe.simsearch import brute_force_topk
 
-    import tempfile as _tf
-
     spark = get_spark(
         "explain-plans", master="local[4]", shuffle_partitions=8,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             # static conf: needed at session creation for the bucketed
             # co-located join audit (section 13)
-            "spark.sql.warehouse.dir": _tf.mkdtemp(prefix="kg_plans_wh_"),
+            "spark.sql.warehouse.dir": scratch_dir("kg_plans_wh_"),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     # production shape: extraction reads the materialized transcripts table
     # (at scale: the Iceberg scan), not the test-only derivation join
-    import tempfile
-
-    t_dir = tempfile.mkdtemp(prefix="kg_plans_") + "/transcripts"
+    t_dir = scratch_dir("kg_plans_") + "/transcripts"
     derive_transcripts(spark, SF_DIR).write.mode("overwrite").parquet(t_dir)
     t = spark.read.parquet(t_dir)
     sections: list[tuple[str, str, list[str]]] = []
@@ -158,29 +171,31 @@ def main() -> int:
     keyed = keyed_exchange_args(p)
     for ln in keyed:
         assert "conv_id" in ln, f"exchange not keyed on conv_id: {ln}"
-    # one-pass union shape: exactly TWO keyed shuffles, both on
-    # (conv_id, turn_idx) — (a) the W1 window exchange inside the annotate
-    # cache (runs once at materialization; the band join / token join /
-    # mention-timex branches all read the cached result), and (b) the pair
-    # rollup's exchange after it: an AQE-wrapped cached plan reports
-    # UnknownPartitioning to consumers, so Catalyst cannot prove the cache
-    # is already clustered on the key (Spark cache+AQE behavior). The pair
-    # rollup shuffle moves partially-aggregated pair rows, not turns.
+    # one-pass union shape: exactly ONE keyed shuffle, on (conv_id,
+    # turn_idx) — the W1 window exchange inside the annotate cache (runs
+    # once at materialization; the band join, the token join and the
+    # mention / timex branches all read the cached result)
     n_shuffles = len(keyed)
-    assert n_shuffles <= 2, (
+    assert n_shuffles == 1, (
         f"structured plan has {n_shuffles} hash exchanges; the union shape "
-        "needs at most two (cache W1 window + pair rollup)"
+        "needs one (the cache's W1 window)"
+    )
+    # one Python node: the annotate kernel emits each timex's tlink label,
+    # so no eval node labels the timex rows again
+    py = python_nodes(p)
+    assert [name for name, _ in py] == ["MapInArrow"], (
+        f"structured plan's Python nodes are {sorted(py)}, not one MapInArrow"
     )
     sections.append((
         "structured extraction (build_triples fused=False)",
         p,
         [
             "BroadcastHashJoin LeftAnti for blacklist: yes",
-            f"hash exchanges: {n_shuffles}, all keyed on (conv_id, turn_idx) "
-            "— one materializes the annotate cache (W1 window), one is the "
-            "pair rollup over map-side partially-aggregated rows (the "
-            "AQE-wrapped cache hides its partitioning from consumers, so "
-            "this exchange cannot be elided by Catalyst)",
+            f"hash exchanges: {n_shuffles}, keyed on (conv_id, turn_idx) — "
+            "it materializes the annotate cache (W1 window)",
+            "Python nodes: 1, the annotate MapInArrow — the tlink label "
+            "arrives on the timex rows; no ArrowEvalPython, BatchEvalPython "
+            "or MapInPandas",
         ],
     ))
 
@@ -215,7 +230,7 @@ def main() -> int:
     # 5. IVF index probe: dynamic partition pruning ----------------------------
     from kgpipe.simsearch import build_ivf_index, ivf_topk_indexed
 
-    idx_dir = tempfile.mkdtemp(prefix="kg_plans_ivf_") + "/index"
+    idx_dir = scratch_dir("kg_plans_ivf_") + "/index"
     emb_d = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -257,11 +272,16 @@ def main() -> int:
     keyed = keyed_exchange_args(p)
     for ln in keyed:
         assert "conv_id" in ln, f"J6 exchange not keyed on conv_id: {ln}"
+    assert "BatchEvalPython" not in p and "ArrowEval" not in p, (
+        "the event-event label must stay JVM-side (no Python eval node)"
+    )
     sections.append((
         "event-event pairing (J6, event_event_triples)",
         p,
         [f"keyed exchanges: {len(keyed)}, all on conv_id(+turn_idx) — "
-         "self-join + nearest-anchor window reuse the turn partitioning"],
+         "self-join + nearest-anchor window reuse the turn partitioning",
+         "no Python eval — the interval-algebra label is one CASE over "
+         "the anchors' interval dates, which the annotate kernel emits"],
     ))
 
     # 8. stratified sampling: map-side filter fused into the scan --------------
@@ -535,9 +555,6 @@ def main() -> int:
     ))
 
     # 20. snapshot-compaction fold job: zero-shuffle scan->filter->project
-    import shutil
-    import tempfile
-
     from kgpipe.materialize import TableSink, read_triples
 
     _tmp = tempfile.mkdtemp(prefix="plan_compact_")
